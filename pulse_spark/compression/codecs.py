@@ -4,9 +4,11 @@ frequencies), bitstream-compatible with the reference
 pkg/compression/unary/{writer,reader}.go) and pinned by its test vectors
 (deltavarint_test.go:17-35, unary_test.go:17-26).
 
-numpy-vectorized where it pays (delta, cumsum, bit unpacking); the varint
-byte loop runs per posting block (≤ block_size values), amortized inside
-Arrow batches — never per-row Python at the DataFrame layer.
+numpy-vectorized where it pays (delta, cumsum, bit unpacking); the
+per-block encoders' varint byte loop (≤ block_size values) serves merges
+and is the reference the batched *_concat codecs are tested against —
+segment build and the serving cold path code whole batches of blocks
+at once.
 
 Formats:
   delta+varint: varint(v0), varint(v1-v0), ...   LEB128 — little-endian
@@ -100,8 +102,46 @@ def unary_decode(buf: bytes, minimum: int = 0) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# batched (concatenated-stream) decoders — the serving cold path
+# batched (concatenated-stream) codecs — segment build and serving cold path
 # ---------------------------------------------------------------------------
+
+
+def delta_varint_encode_concat(values: np.ndarray, counts: np.ndarray
+                               ) -> tuple[np.ndarray, np.ndarray]:
+    """Encode consecutive blocks of values (counts[i] values in block i)
+    in one vectorized pass -> (concatenated bytes as uint8, byte length
+    per block).  Block i's bytes equal delta_varint_encode(block i): its
+    first value is absolute, the rest are deltas."""
+    v = np.asarray(values, dtype=np.uint64)
+    starts = np.cumsum(counts) - counts
+    deltas = np.empty_like(v)
+    deltas[0] = v[0]
+    np.subtract(v[1:], v[:-1], out=deltas[1:])
+    deltas[starts] = v[starts]
+    nb = np.ones(v.size, dtype=np.int64)  # LEB128 bytes per value
+    for k in range(1, 10):
+        nb += deltas >= np.uint64(1 << (7 * k))
+    j = np.arange(int(nb.sum())) - np.repeat(np.cumsum(nb) - nb, nb)
+    out = (np.repeat(deltas, nb) >> (7 * j).astype(np.uint64)).astype(np.uint8) & 0x7F
+    out |= (j < np.repeat(nb, nb) - 1).astype(np.uint8) << 7  # continuation
+    return out, np.add.reduceat(nb, starts)
+
+
+def unary_encode_concat(values: np.ndarray, counts: np.ndarray,
+                        minimum: int = 0) -> tuple[np.ndarray, np.ndarray]:
+    """Encode consecutive blocks in one vectorized pass -> (concatenated
+    bytes as uint8, byte length per block).  Block i's bytes equal
+    unary_encode(block i, minimum): each block is padded with 1-bits to
+    a whole byte on its own."""
+    lens = np.asarray(values, dtype=np.uint64).astype(np.int64) - minimum + 1
+    starts = np.cumsum(counts) - counts
+    blk_bytes = (np.add.reduceat(lens, starts) + 7) // 8
+    bit_off = 8 * (np.cumsum(blk_bytes) - blk_bytes)
+    cs = np.cumsum(lens)
+    within = cs - np.repeat(cs[starts] - lens[starts], counts)
+    bits = np.ones(8 * int(blk_bytes.sum()), dtype=np.uint8)
+    bits[np.repeat(bit_off, counts) + within - 1] = 0  # terminating zeros
+    return np.packbits(bits), blk_bytes
 
 
 def delta_varint_decode_concat(buf: bytes, counts: np.ndarray) -> np.ndarray:

@@ -20,9 +20,13 @@ class IndexingSettings:
     compression: bool = True          # delta+varint postings / unary tfs in segments
     term_buckets: int = 32            # hash-partition count of the postings layout
     block_size: int = 128             # max postings per compressed block
-    salt_partitions: int = 8          # tasks per term-bucket in the postings
-                                      # layout shuffle (hot-term skew defusal;
-                                      # 0/1 = unsalted)
+    salt_partitions: int = 8          # least reducer count of the postings
+                                      # layout shuffle (it runs max(this,
+                                      # spark.sql.shuffle.partitions)); each
+                                      # reducer takes a doc-id hash slice of
+                                      # every term bucket (hot-term skew
+                                      # defusal).  0/1 = unsalted: a bucket
+                                      # stays in one reducer
     store_text: bool = True           # keep the trimmed text in docs/ (the
                                       # per-turn text-equality surface).  At
                                       # 10^12-turn scale set False: the index

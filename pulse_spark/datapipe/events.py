@@ -36,12 +36,14 @@ def sessionize(events: DataFrame, gap_min: int = SESSION_GAP_MIN) -> DataFrame:
     operator would use; skewed users are bounded by session count, not
     event count, after the cumsum."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    # microsecond epochs: DuckDB's epoch(ts) keeps the sub-second part,
+    # and unix_timestamp would drop it (a 30 min + 0.5 s gap must split).
     # NTZ timestamps are interpreted as UTC (session tz), matching
     # DuckDB's epoch() on naive timestamps
-    epoch = F.unix_timestamp(F.col("ts").cast("timestamp"))
+    epoch = F.unix_micros(F.col("ts").cast("timestamp"))
     flagged = events.withColumn(
         "_new",
-        (epoch - F.lag(epoch, 1).over(w) > gap_min * 60).cast("int"),
+        (epoch - F.lag(epoch, 1).over(w) > gap_min * 60 * 1_000_000).cast("int"),
     ).withColumn("_new", F.coalesce(F.col("_new"), F.lit(1)))
     sess = flagged.withColumn(
         "_sess", F.sum("_new").over(w.rowsBetween(Window.unboundedPreceding, 0))

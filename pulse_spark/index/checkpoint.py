@@ -70,12 +70,18 @@ def write_stage(
     manifest mutation), so independent stages can write CONCURRENTLY from
     separate driver threads (one SparkContext schedules both job DAGs and
     back-fills each job's straggler tail with the other's tasks).
-    Returns wall seconds."""
+    Returns wall seconds.
+
+    The in-partition sort leads with the partition_by columns: a
+    partitioned write requires that order, and when the plan does not
+    already provide it Spark's planned write puts its own Sort
+    [partition_by] on top, which replaces sort_within outright."""
     path = os.path.join(out_dir, stage)
     t0 = time.time()
     w = df
     if sort_within:
-        w = w.sortWithinPartitions(*sort_within)
+        lead = [c for c in partition_by or () if c not in sort_within]
+        w = w.sortWithinPartitions(*lead, *sort_within)
     writer = w.write.mode("overwrite")
     for k, v in (options or {}).items():
         writer = writer.option(k, v)

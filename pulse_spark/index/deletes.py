@@ -111,7 +111,7 @@ def vacuum_index(spark: SparkSession, in_dir: str, out_dir: str,
 
     from pulse_spark.config import IndexingSettings
     from pulse_spark.index import build as B
-    from pulse_spark.index.persist import Index
+    from pulse_spark.index.persist import Index, write_postings, write_stats
 
     with open(os.path.join(in_dir, "manifest.json")) as f:
         src_manifest = json.load(f)
@@ -164,45 +164,22 @@ def vacuum_index(spark: SparkSession, in_dir: str, out_dir: str,
             .drop("_old_id")
         )
     id_col = "doc_id" if "doc_id" in postings.columns else "doc_no"
-    n_salt = max(settings.salt_partitions, 1)
-    if n_salt > 1:
-        salt = F.pmod(F.xxhash64(id_col), F.lit(n_salt))
-        postings = postings.repartition(
-            settings.term_buckets * n_salt, "bucket", salt
-        )
-    else:
-        postings = postings.repartition(settings.term_buckets, "bucket")
-    postings = ckpt.commit_stage(
-        out_dir, manifest, "postings", postings,
-        partition_by=["bucket"], sort_within=["term", id_col],
-    )
+    wall = write_postings(postings, out_dir, settings, id_col)
+    postings = ckpt.record_stage(spark, out_dir, manifest, "postings", wall)
     if parted is not None:
         parted.unpersist()
 
     terms = ckpt.commit_stage(out_dir, manifest, "terms", B.terms_df(postings))
 
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     row = B.stats_df(docs).collect()[0]
     n_docs, adl = int(row["n_docs"]), float(row["adl"])
-    t0 = _time.time()
-    stats_dir = os.path.join(out_dir, "stats")
-    os.makedirs(stats_dir, exist_ok=True)
-    pq.write_table(
-        pa.table({"n_docs": pa.array([n_docs], pa.int64()),
-                  "adl": pa.array([adl], pa.float64())}),
-        os.path.join(stats_dir, "part-00000.parquet"),
-    )
-    ckpt.record_stage(spark, out_dir, manifest, "stats",
-                      round(_time.time() - t0, 3))
+    write_stats(spark, out_dir, manifest, n_docs, adl)
 
     if had_segments and has_ids:
         from pulse_spark.index import segments as seg
 
-        seg.build_segments(spark, out_dir, manifest, postings, settings)
+        seg.build_segments(spark, out_dir, manifest, postings, settings,
+                           n_docs, adl)
 
     return Index(out_dir=out_dir, settings=settings, docs=docs,
                  postings=postings, terms=terms, n_docs=n_docs, adl=adl)

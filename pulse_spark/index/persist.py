@@ -10,7 +10,10 @@ Layout (out_dir):
                                 (slim layout — no doc_no string on the
                                 wire) else the doc_no string; sorted by
                                 (term, <id>) within files → parquet
-                                row-group min/max prune on term
+                                row-group min/max prune on term.  Written
+                                only by write_postings: hash(<id>) into
+                                max(shuffle.partitions, salt_partitions)
+                                reducers, each writing one file per bucket
   terms/                        (term, df, max_tf)
   stats/                        single row (n_docs, adl)
   segments/doc_range=R/         (M3) block-compressed postings, see
@@ -43,6 +46,55 @@ def _fingerprint_metrics():
         F.count(F.lit(1)).alias("fp_rows"),
         F.bit_xor(F.xxhash64("conv_id", "turn_idx", "doc_len")).alias("fp_xor"),
     )
+
+
+def write_postings(
+    p: DataFrame, out_dir: str, settings: IndexingSettings, id_col: str
+) -> float:
+    """Write the postings stage layout from (term, <id_col>, tf, doc_len)
+    rows — the one writer of it (batch build, stream compaction, vacuum).
+    Records nothing; returns wall seconds.
+
+    The layout shuffle has max(spark.sql.shuffle.partitions,
+    salt_partitions) reducers, so its task count follows the session, not
+    term_buckets x salts.  Salted (salt_partitions > 1): rows go to
+    reducers by a hash of the doc id, so every bucket, and a hot term
+    inside it, is split across all reducers; a bare repartition by bucket
+    would send a hot term's millions of postings (Zipf text guarantees
+    them) to ONE task.  partitionBy("bucket") still groups each reducer's
+    rows into one file per bucket dir, so query-side bucket pruning is
+    unchanged.  Unsalted: reducers by bucket, each bucket in one task.
+    """
+    n_reducers = max(
+        int(p.sparkSession.conf.get("spark.sql.shuffle.partitions")),
+        settings.salt_partitions,
+    )
+    key = id_col if settings.salt_partitions > 1 else "bucket"
+    p = B.with_term_bucket(p, settings.term_buckets).repartition(n_reducers, key)
+    return ckpt.write_stage(
+        p, out_dir, "postings", partition_by=["bucket"], sort_within=["term", id_col]
+    )
+
+
+def write_stats(
+    spark: SparkSession, out_dir: str, manifest: dict, n_docs: int, adl: float
+) -> None:
+    """Commit the 1-row stats stage DRIVER-side via pyarrow: a Spark job
+    for one row is pure scheduling overhead."""
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = time.time()
+    stats_dir = os.path.join(out_dir, "stats")
+    os.makedirs(stats_dir, exist_ok=True)
+    pq.write_table(
+        pa.table({"n_docs": pa.array([n_docs], pa.int64()),
+                  "adl": pa.array([adl], pa.float64())}),
+        os.path.join(stats_dir, "part-00000.parquet"),
+    )
+    ckpt.record_stage(spark, out_dir, manifest, "stats", round(time.time() - t0, 3))
 
 
 @dataclass
@@ -180,28 +232,10 @@ def build_persisted_index(
             d_postings_src = d_full.observe(fp_obs, *_fingerprint_metrics())
         p = B.postings_df(d_postings_src, settings, id_col=id_col,
                           tokenizer=tokenizer)
-        p = B.with_term_bucket(p, settings.term_buckets)
-        # SALTED repartition (north rule): a bare repartition("bucket")
-        # sends a hot term's millions of postings to ONE task — the stage
-        # tail is then single-threaded and grows with corpus size (Zipf
-        # text guarantees hot terms).  Salting by a hash of the doc id
-        # splits each bucket across PARTITION_SALT tasks; partitionBy at
-        # write still groups files under one bucket dir, so query-side
-        # partition pruning is unchanged.
-        n_salt = max(settings.salt_partitions, 1)
-        if n_salt > 1:
-            salt = F.pmod(F.xxhash64(id_col), F.lit(n_salt))
-            p = p.repartition(settings.term_buckets * n_salt, "bucket", salt)
-        else:
-            p = p.repartition(settings.term_buckets, "bucket")
         # write first, verify the fingerprint, THEN record: on mismatch
         # the stage is never marked committed (the partial files are
         # overwritten by the next attempt)
-        wall = ckpt.write_stage(
-            p, out_dir, "postings",
-            partition_by=["bucket"],
-            sort_within=["term", "doc_id"] if assign_ids else ["term", "doc_no"],
-        )
+        wall = write_postings(p, out_dir, settings, id_col)
         if fp_obs is not None:
             m = fp_obs.get
             got = {
@@ -229,9 +263,7 @@ def build_persisted_index(
         terms = ckpt.commit_stage(out_dir, manifest, "terms", B.terms_df(postings))
 
     # stage: stats (from the docs-write Observation when available —
-    # resume runs fall back to a column-pruned scan of committed docs).
-    # The 1-row table is written DRIVER-side via pyarrow: a Spark job for
-    # one row is pure scheduling overhead.
+    # resume runs fall back to a column-pruned scan of committed docs)
     if not do_stats:
         row = ckpt.read_stage(spark, out_dir, "stats").collect()[0]
         n_docs, adl = int(row["n_docs"]), float(row["adl"])
@@ -240,26 +272,12 @@ def build_persisted_index(
             row = B.stats_df(docs).collect()[0]
             stats_vals = (int(row["n_docs"]), float(row["adl"]))
         n_docs, adl = stats_vals
-        import time as _time
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        t0 = _time.time()
-        stats_dir = os.path.join(out_dir, "stats")
-        os.makedirs(stats_dir, exist_ok=True)
-        pq.write_table(
-            pa.table({"n_docs": pa.array([n_docs], pa.int64()),
-                      "adl": pa.array([adl], pa.float64())}),
-            os.path.join(stats_dir, "part-00000.parquet"),
-        )
-        ckpt.record_stage(
-            spark, out_dir, manifest, "stats", round(_time.time() - t0, 3)
-        )
+        write_stats(spark, out_dir, manifest, n_docs, adl)
 
     if build_segments and not ckpt.stage_done(manifest, "segments"):
         from pulse_spark.index import segments as seg
-        seg.build_segments(spark, out_dir, manifest, postings, settings)
+        seg.build_segments(spark, out_dir, manifest, postings, settings,
+                           n_docs, adl)
 
     return Index(
         out_dir=out_dir,

@@ -18,27 +18,34 @@ prunes with it.
 Scale design: documents are split into doc_ranges (the unit of scoring
 parallelism — the analog of the reference's per-partition search,
 search.go:52-62).  Segment build is ONE shuffle (repartition by
-doc_range, sort by term within partitions) and a linear mapInPandas pass;
-no per-term grouping, so hot terms cannot skew an aggregation — a mega
-term simply spans many blocks across ranges.
+doc_range, sort by term within partitions) and a linear mapInArrow pass
+that encodes each Arrow batch's blocks in numpy (encode_partition), with
+no per-posting Python loop; no per-term grouping, so hot terms cannot
+skew an aggregation — a mega term simply spans many blocks across ranges.
 """
 
 from __future__ import annotations
 
 import math
 from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from pulse_spark.compression.codecs import (
     delta_varint_decode,
     delta_varint_encode,
+    delta_varint_encode_concat,
     unary_decode,
     unary_encode,
+    unary_encode_concat,
 )
 from pulse_spark.config import BM25_B, BM25_K1, IndexingSettings
 
@@ -112,22 +119,100 @@ def decode_block(row, compress: bool):
     )
 
 
+SEGMENT_ARROW_SCHEMA = to_arrow_schema(SEGMENT_SCHEMA)
+
+
+def _binary(data: np.ndarray, lengths: np.ndarray) -> pa.Array:
+    """Arrow binary array of len(lengths) values cut from one byte
+    buffer."""
+    offsets = np.zeros(len(lengths) + 1, dtype=np.int32)
+    np.cumsum(lengths, out=offsets[1:])
+    return pa.Array.from_buffers(
+        pa.binary(), len(lengths),
+        [None, pa.py_buffer(offsets), pa.py_buffer(np.ascontiguousarray(data))],
+    )
+
+
+def encode_blocks(term: pa.Array, rng: np.ndarray, ids: np.ndarray,
+                  tfs: np.ndarray, lens: np.ndarray, starts: np.ndarray,
+                  adl: float, compress: bool) -> pa.RecordBatch:
+    """Encode the blocks of sorted postings that begin at `starts` (the
+    last one runs to the end) in one vectorized pass — per block the
+    same bytes and maxima as _encode_block.  ids/tfs/lens are uint64."""
+    counts = np.diff(np.append(starts, len(ids)))
+    ends = starts + counts - 1
+    if compress:
+        ids_bin = _binary(*delta_varint_encode_concat(ids, counts))
+        tfs_bin = _binary(*unary_encode_concat(tfs, counts, minimum=1))
+    else:
+        ids_bin = _binary(ids.astype("<u4").view(np.uint8), 4 * counts)
+        tfs_bin = _binary(tfs.astype("<u4").view(np.uint8), 4 * counts)
+    part = tfs / (BM25_K1 * ((1 - BM25_B) + BM25_B * (lens / adl)) + tfs)
+    return pa.RecordBatch.from_arrays([
+        pa.array(rng[starts], pa.int32()),
+        term.take(pa.array(starts)).cast(pa.string()),
+        pa.array(ids[starts].astype(np.int64)),
+        pa.array(ids[ends].astype(np.int64)),
+        pa.array(counts, pa.int32()),
+        ids_bin,
+        tfs_bin,
+        _binary(lens.astype("<u4").view(np.uint8), 4 * counts),
+        pa.array(np.maximum.reduceat(tfs, starts).astype(np.int32)),
+        pa.array(np.maximum.reduceat(part, starts)),
+    ], schema=SEGMENT_ARROW_SCHEMA)
+
+
+def encode_partition(batches: Iterator[pa.RecordBatch], block_size: int,
+                     adl: float, compress: bool) -> Iterator[pa.RecordBatch]:
+    """(term, doc_range, doc_id, tf, doc_len) batches, sorted by (term,
+    doc_id) -> segment block batches.  A block ends at a (term,
+    doc_range) change or after block_size postings.  The last block of a
+    batch may continue in the next one, so its rows are carried over
+    (at most block_size of them): batches stream through, a partition is
+    never concatenated."""
+    carry = None
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        cols = [rb.column(c) for c in ("term", "doc_range", "doc_id", "tf", "doc_len")]
+        term = cols[0]
+        num = [np.asarray(c.to_numpy(), dtype=t) for c, t in
+               zip(cols[1:], (np.int64, np.uint64, np.uint64, np.uint64))]
+        if carry is not None:
+            term = pa.concat_arrays([carry[0], term])
+            num = [np.concatenate([a, b]) for a, b in zip(carry[1:], num)]
+        rng = num[0]
+        new_run = np.ones(len(rng), dtype=bool)
+        new_run[1:] = (rng[1:] != rng[:-1]) | pc.not_equal(
+            term.slice(1), term.slice(0, len(term) - 1)
+        ).to_numpy(zero_copy_only=False)
+        pos = np.arange(len(rng))
+        pos -= np.maximum.accumulate(np.where(new_run, pos, 0))
+        starts = np.flatnonzero(pos % block_size == 0)
+        last = int(starts[-1])
+        if len(starts) > 1:
+            yield encode_blocks(term.slice(0, last), rng[:last],
+                                *(a[:last] for a in num[1:]),
+                                starts[:-1], adl, compress)
+        carry = (term.slice(last), *(a[last:] for a in num))
+    if carry is not None:
+        yield encode_blocks(*carry, np.zeros(1, dtype=np.int64), adl, compress)
+
+
 def build_segments(
     spark: SparkSession,
     out_dir: str,
     manifest: dict,
     postings: DataFrame,
     settings: IndexingSettings,
+    n_docs: int,
+    adl: float,
     n_ranges: int | None = None,
 ) -> DataFrame:
-    """postings must carry (term, doc_id, tf, doc_len). One shuffle."""
-    import os
-
+    """postings must carry (term, doc_id, tf, doc_len); n_docs/adl are
+    the committed stats stage's.  One shuffle."""
     from pulse_spark.index import checkpoint as ckpt
 
-    adl_row = spark.read.parquet(os.path.join(out_dir, "stats")).collect()[0]
-    adl = float(adl_row["adl"])
-    n_docs = int(adl_row["n_docs"])
     n_ranges = n_ranges or max(spark.sparkContext.defaultParallelism, 8)
     range_size = max(1, -(-n_docs // n_ranges))  # ceil
     block_size = settings.block_size
@@ -136,38 +221,15 @@ def build_segments(
     src = postings.withColumn(
         "doc_range", (F.col("doc_id") / F.lit(range_size)).cast("int")
     )
-
-    def encode_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: list[dict] = []
-        cur_term, cur_rng = None, None
-        ids: list[int] = []
-        tfs: list[int] = []
-        lens: list[int] = []
-
-        def flush():
-            nonlocal ids, tfs, lens
-            if ids:
-                out.append(
-                    _encode_block(cur_term, cur_rng, ids, tfs, lens, adl, compress)
-                )
-                ids, tfs, lens = [], [], []
-
-        for pdf in batches:
-            for term, rng, did, tf, dl in zip(
-                pdf["term"], pdf["doc_range"], pdf["doc_id"], pdf["tf"], pdf["doc_len"]
-            ):
-                if term != cur_term or rng != cur_rng or len(ids) >= block_size:
-                    flush()
-                    cur_term, cur_rng = term, rng
-                ids.append(int(did)); tfs.append(int(tf)); lens.append(int(dl))
-        flush()
-        yield pd.DataFrame(out, columns=[f.name for f in SEGMENT_SCHEMA.fields])
-
     seg = (
         src.repartition(n_ranges, "doc_range")
         .sortWithinPartitions("term", "doc_id")
         .select("term", "doc_range", "doc_id", "tf", "doc_len")
-        .mapInPandas(encode_partition, SEGMENT_SCHEMA)
+        .mapInArrow(
+            partial(encode_partition, block_size=block_size, adl=adl,
+                    compress=compress),
+            SEGMENT_SCHEMA,
+        )
     )
     committed = ckpt.commit_stage(
         out_dir, manifest, "segments", seg, partition_by=["doc_range"],

@@ -144,7 +144,7 @@ def compact_stream_index(
     import json
 
     from pulse_spark.index import checkpoint as ckpt
-    from pulse_spark.index.persist import Index
+    from pulse_spark.index.persist import Index, write_postings, write_stats
 
     # the stream's persisted settings are authoritative (they bound the
     # tokenization of the deltas); an explicit settings arg must agree
@@ -195,46 +195,24 @@ def compact_stream_index(
             p.join(docs.select("doc_no", "doc_id"), "doc_no")
             .select("term", "doc_id", "doc_len", "tf")
         )
-    p = B.with_term_bucket(p, settings.term_buckets)
-    # same salted layout as the batch builder (persist.py): a hot term's
-    # postings split across salt_partitions reducers
-    n_salt = max(settings.salt_partitions, 1)
-    if n_salt > 1:
-        salt = F.pmod(F.xxhash64(id_col), F.lit(n_salt))
-        p = p.repartition(settings.term_buckets * n_salt, "bucket", salt)
-    else:
-        p = p.repartition(settings.term_buckets, "bucket")
-    postings = ckpt.commit_stage(
-        out_dir, manifest, "postings", p,
-        partition_by=["bucket"], sort_within=["term", id_col],
+    postings = ckpt.record_stage(
+        spark, out_dir, manifest, "postings",
+        write_postings(p, out_dir, settings, id_col),
     )
 
     terms = ckpt.commit_stage(out_dir, manifest, "terms", B.terms_df(postings))
 
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     row = B.stats_df(docs).collect()[0]
     n_docs, adl = int(row["n_docs"]), float(row["adl"])
-    t0 = _time.time()
-    stats_dir = os.path.join(out_dir, "stats")
-    os.makedirs(stats_dir, exist_ok=True)
-    pq.write_table(
-        pa.table({"n_docs": pa.array([n_docs], pa.int64()),
-                  "adl": pa.array([adl], pa.float64())}),
-        os.path.join(stats_dir, "part-00000.parquet"),
-    )
-    ckpt.record_stage(spark, out_dir, manifest, "stats",
-                      round(_time.time() - t0, 3))
+    write_stats(spark, out_dir, manifest, n_docs, adl)
     if cached is not None:
         cached.unpersist()
 
     if build_segments:
         from pulse_spark.index import segments as seg
 
-        seg.build_segments(spark, out_dir, manifest, postings, settings)
+        seg.build_segments(spark, out_dir, manifest, postings, settings,
+                           n_docs, adl)
 
     return Index(out_dir=out_dir, settings=settings, docs=docs,
                  postings=postings, terms=terms, n_docs=n_docs, adl=adl)

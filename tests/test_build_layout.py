@@ -1,0 +1,210 @@
+"""Build-shape guards for the index build: how its work is laid out in
+tasks and files, which correctness tests can't see — the doc-id stage's
+single exchange, the postings shuffle sized to the session, term-sorted
+postings files on every write path, and the vectorized segment encoder's
+byte identity with the per-block encoder."""
+
+from __future__ import annotations
+
+import glob
+import os
+import re
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from pulse_spark.config import IndexingSettings
+from pulse_spark.index import build as B
+from pulse_spark.index.segments import _encode_block, encode_partition
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_assign_doc_ids_one_exchange_balanced(spark):
+    """One range exchange and no second one: every one of the
+    num_partitions range partitions carries rows into the stages that
+    follow (the tokenizer runs on them), and ids stay the dense rank of
+    (conv_id, turn_idx)."""
+    df = spark.range(200).select(
+        F.concat(F.lit("c"), F.col("id").cast("string")).alias("conv_id"),
+        (F.col("id") % 5).cast("int").alias("turn_idx"),
+    )
+    mapped, parted = B.assign_doc_ids(spark, df, 4)
+    try:
+        plan = _plan(parted)
+        final = plan.split("== Initial Plan ==")[0]
+        assert len(re.findall(r"(?<![A-Za-z])Exchange ", final)) == 1, plan
+        assert "rangepartitioning" in final, plan
+        sizes = mapped.rdd.glom().map(len).collect()
+        assert len(sizes) == 4 and all(sizes), sizes
+        rows = mapped.orderBy("doc_id").collect()
+        assert [r["doc_id"] for r in rows] == list(range(200))
+        keys = [(r["conv_id"], r["turn_idx"]) for r in rows]
+        assert keys == sorted(keys)
+    finally:
+        parted.unpersist()
+
+
+@pytest.mark.parametrize("salt", [8, 16])
+def test_postings_shuffle_sized_to_session(spark, tmp_path, salt):
+    """No stage of a build runs more than max(shuffle.partitions,
+    salt_partitions) tasks; the postings layout shuffle used to run
+    term_buckets x salt_partitions (256 at the defaults)."""
+    from pulse_spark.index.persist import build_persisted_index
+
+    tr = spark.range(2000, numPartitions=4).select(
+        F.col("id").cast("string").alias("conv_id"),
+        F.lit(0).cast("int").alias("turn_idx"),
+        F.concat_ws(" ", F.lit("alpha"),
+                    F.concat(F.lit("w"), (F.col("id") % 97).cast("string")))
+        .alias("text"),
+    )
+    sc = spark.sparkContext
+    group = f"postings-shape-{salt}"
+    sc.setJobGroup(group, "postings layout task bound")
+    try:
+        build_persisted_index(
+            spark, tr, str(tmp_path / "idx"),
+            IndexingSettings(term_buckets=32, salt_partitions=salt,
+                             store_text=False),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    tasks = [
+        st.getStageInfo(s).numTasks
+        for j in st.getJobIdsForGroup(group)
+        for s in st.getJobInfo(j).stageIds
+        if st.getStageInfo(s) is not None
+    ]
+    bound = max(int(spark.conf.get("spark.sql.shuffle.partitions")), salt)
+    assert tasks and max(tasks) <= bound, (bound, tasks)
+    files = glob.glob(str(tmp_path / "idx" / "postings" / "*" / "*.parquet"))
+    assert len(files) > 32  # every bucket is still split across reducers
+
+
+def _assert_sorted(root: str, cols: list[str]) -> int:
+    files = glob.glob(os.path.join(root, "*", "*.parquet"))
+    for f in files:
+        t = pq.read_table(f, columns=cols)
+        keys = list(zip(*(t[c].to_pylist() for c in cols)))
+        assert keys == sorted(keys), f
+    return len(files)
+
+
+def test_postings_files_term_sorted_on_every_write_path(spark, tmp_path):
+    """Batch build, stream compaction and vacuum write postings files
+    sorted by (term, id) — the order row-group min/max pruning on term
+    relies on — and segments files sorted by (term, min_doc_id)."""
+    from pulse_spark.fixtures import gen_transcripts
+    from pulse_spark.index.deletes import delete_docs, vacuum_index
+    from pulse_spark.index.persist import build_persisted_index
+    from pulse_spark.streaming.incremental import (compact_stream_index,
+                                                   start_incremental_build)
+
+    settings = IndexingSettings(term_buckets=4, salt_partitions=4,
+                                block_size=16)
+    rows = gen_transcripts(n_convs=40, seed=11)
+    src = tmp_path / "in"
+    src.mkdir()
+    types = {"conv_id": pa.string(), "turn_idx": pa.int32(),
+             "role": pa.string(), "text": pa.string(), "tool": pa.string(),
+             "ts": pa.timestamp("us")}
+    pq.write_table(
+        pa.table({c: pa.array([r[c] for r in rows], t)
+                  for c, t in types.items()}),
+        str(src / "part-0.parquet"),
+    )
+    batch = build_persisted_index(spark, spark.read.parquet(str(src)),
+                                  str(tmp_path / "batch"), settings,
+                                  build_segments=True)
+    stream_out = str(tmp_path / "stream")
+    start_incremental_build(spark, str(src), stream_out,
+                            settings).awaitTermination(120)
+    compacted = compact_stream_index(spark, stream_out,
+                                     str(tmp_path / "compact"), settings)
+    victims = [r["doc_no"] for r in batch.docs.limit(5).collect()]
+    assert delete_docs(spark, batch.out_dir, victims) == 5
+    vacuumed = vacuum_index(spark, batch.out_dir, str(tmp_path / "vac"))
+
+    for idx in (batch, compacted, vacuumed):
+        assert _assert_sorted(os.path.join(idx.out_dir, "postings"),
+                              ["term", "doc_id"]) > 4
+        assert _assert_sorted(os.path.join(idx.out_dir, "segments"),
+                              ["term", "min_doc_id"])
+
+
+# ---------------------------------------------------------------------------
+# vectorized segment encoder == per-block encoder, byte for byte
+# ---------------------------------------------------------------------------
+
+
+def _reference_blocks(rows, block_size, adl, compress):
+    """The per-posting loop the vectorized encoder replaced: cut a block
+    at a (term, doc_range) change or after block_size postings."""
+    out, key, buf = [], None, []
+    for term, rng, did, tf, dl in rows:
+        if (term, rng) != key or len(buf) >= block_size:
+            if buf:
+                out.append(_encode_block(*key, *map(list, zip(*buf)),
+                                         adl, compress))
+            key, buf = (term, rng), []
+        buf.append((did, tf, dl))
+    if buf:
+        out.append(_encode_block(*key, *map(list, zip(*buf)), adl, compress))
+    return out
+
+
+def _batch(rows) -> pa.RecordBatch:
+    cols = list(zip(*rows))
+    return pa.RecordBatch.from_arrays([
+        pa.array(cols[0], pa.string()), pa.array(cols[1], pa.int32()),
+        pa.array(cols[2], pa.int64()), pa.array(cols[3], pa.int32()),
+        pa.array(cols[4], pa.int32()),
+    ], names=["term", "doc_range", "doc_id", "tf", "doc_len"])
+
+
+@pytest.mark.parametrize("compress", [True, False])
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_vectorized_encoder_matches_per_block(compress, seed):
+    block_size, range_size, adl = 16, 700, 187.25
+    rs = np.random.default_rng(seed)
+    rows = []
+    # run lengths include exactly block_size and multiples of it; doc ids
+    # span several doc_ranges, so one partition holds several ranges
+    for t in range(30):
+        n = int(rs.choice([1, 3, 15, 16, 17, 32, 48, 100, 400]))
+        ids = np.sort(rs.choice(4000, size=n, replace=False))
+        big = rs.random() < 0.1  # multi-byte varints and long unary runs
+        for d in ids:
+            rows.append((
+                f"t{t:02d}", int(d) // range_size,
+                int(d) * (1 << 40 if big else 1),
+                int(rs.integers(1, 300 if big else 6)),
+                int(rs.integers(1, 5000)),
+            ))
+    rows.sort(key=lambda r: (r[0], r[2]))
+    cuts = np.sort(rs.choice(np.arange(1, len(rows)), size=25, replace=False))
+    bounds = [0, *cuts.tolist(), len(rows)]
+    batches = [_batch(rows[a:b]) for a, b in zip(bounds, bounds[1:])]
+    batches.insert(2, batches[0].slice(0, 0))  # an empty batch mid-stream
+    straddles = sum(
+        rows[c - 1][:2] == rows[c][:2] for c in cuts.tolist()
+    )
+    assert straddles  # some (term, doc_range) runs cross a batch boundary
+
+    got = [
+        r for rb in encode_partition(iter(batches), block_size, adl, compress)
+        for r in rb.to_pylist()
+    ]
+    want = _reference_blocks(rows, block_size, adl, compress)
+    assert len(got) == len(want)
+    for g, w in zip(got, want):
+        assert g == w
+    assert any(w["n"] == block_size for w in want)
+    assert len({w["doc_range"] for w in want}) > 1

@@ -100,6 +100,17 @@ def test_concat_decoders_match_per_block():
     exp_tfs = np.concatenate([unary_decode(x, minimum=1) for x in tf_bufs])
     assert got_tfs.dtype == np.uint64 and np.array_equal(got_tfs, exp_tfs)
 
+    # the batched encoders write the same per-block bytes
+    from pulse_spark.compression.codecs import (delta_varint_encode_concat,
+                                                unary_encode_concat)
+
+    for (data, lens), bufs in (
+        (delta_varint_encode_concat(np.concatenate(blocks), counts), id_bufs),
+        (unary_encode_concat(np.concatenate(tfs), counts, minimum=1), tf_bufs),
+    ):
+        assert data.tobytes() == b"".join(bufs)
+        assert lens.tolist() == [len(x) for x in bufs]
+
     # empties
     assert delta_varint_decode_concat(b"", np.array([], dtype=int)).size == 0
     assert unary_decode_concat(b"", [], np.array([], dtype=int)).size == 0

@@ -605,3 +605,51 @@ def test_conv_weighted_topk_role_weighting(spark):
     assert {(r.conv_id, round(r.score, 9)) for r in derived} == {
         (r.conv_id, round(r.score, 9)) for r in res
     }
+
+
+def test_sessionize_sub_second_gap_matches_oracle(spark, tmp_path):
+    """A gap of 30 min + 0.5 s ends a session, as in the DuckDB oracle's
+    epoch(ts); whole-second epochs would see exactly 30 min and keep the
+    session open.  A gap of exactly 30 min does not end one."""
+    import datetime as dt
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pulse_spark.datapipe.events import SESSION_GAP_MIN, sessionize
+    from pulse_spark.datapipe.harness import _sessionize_sql
+
+    t0 = dt.datetime(2025, 3, 1, 12, 0, 0)
+    gap = dt.timedelta(minutes=SESSION_GAP_MIN)
+    half = dt.timedelta(milliseconds=500)
+    ev = [  # (event_id, ts, user_id, value)
+        (1, t0, 1, 1.0), (2, t0 + gap + half, 1, 2.0),
+        (3, t0, 2, 4.0), (4, t0 + gap, 2, 8.0),
+        (5, t0 + half, 3, 16.0), (6, t0 + gap + 2 * half, 3, 32.0),
+    ]
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(pa.table({
+        "event_id": pa.array([e[0] for e in ev], pa.int64()),
+        "ts": pa.array([e[1] for e in ev], pa.timestamp("us")),
+        "user_id": pa.array([e[2] for e in ev], pa.int64()),
+        "event_type": pa.array(["click"] * len(ev), pa.string()),
+        "value": pa.array([e[3] for e in ev], pa.float64()),
+        "props": pa.array(["{}"] * len(ev), pa.string()),
+    }), path)
+
+    cols = ["user_id", "session_start", "n_events", "sum_value"]
+    got = sorted(
+        tuple(r[c] for c in cols)
+        for r in sessionize(spark.read.parquet(path)).collect()
+    )
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+    want = sorted(
+        con.sql(_sessionize_sql(SESSION_GAP_MIN)).fetchall()
+    )
+    assert got == want
+    per_user = {}
+    for r in got:
+        per_user[r[0]] = per_user.get(r[0], 0) + 1
+    assert per_user == {1: 2, 2: 1, 3: 2}
