@@ -192,7 +192,6 @@ def _build_throughput(cpus: int, src: str, tmp: str) -> dict:
     from pulse_spark.text.udfs import make_tokenizer_udf
 
     settings = IndexingSettings(term_buckets=32, store_text=False)
-    tokenizer = os.environ.get("PULSE_BENCH_TOKENIZER", "arrow")
     spark = get_spark(app_name=f"pulse_scaling_{cpus}",
                       master=f"local[{cpus}]", shuffle_partitions=64)
     transcripts = spark.read.parquet(src)
@@ -212,7 +211,7 @@ def _build_throughput(cpus: int, src: str, tmp: str) -> dict:
     t0 = time.time()
     idx = build_persisted_index(
         spark, transcripts, os.path.join(tmp, f"idx_{cpus}"), settings,
-        num_doc_partitions=cpus * 2, tokenizer=tokenizer,
+        num_doc_partitions=cpus * 2,
     )
     wall = time.time() - t0
     n_rows = idx.n_docs

@@ -60,33 +60,11 @@ def postings_df(
     settings: IndexingSettings,
     id_col: str = "doc_no",
     extra_cols: tuple[str, ...] = (),
-    tokenizer: str = "arrow",
 ) -> DataFrame:
     """(term, <id_col>, tf, doc_len [, extra_cols]): the exploded
-    inverted index.
-
-    tokenizer strategies (identical output, different execution; both
-    ZERO-shuffle — tf is doc-local either way):
-
-    - "arrow" (default): the fused pandas-UDF path (tokenize + doc-local
-      tf inside one Arrow batch — preprocess.Frequencies,
-      preprocess.go:36-46); every token pays Python.
-
-    - "expr": JVM whole-stage-codegen tokenization + per-doc tf as column
-      expressions for short ASCII rows (text/exprs.py); Porter (when
-      enabled) is the only Python left — an Arrow UDF of memoized dict
-      lookups, O(vocab) Porter runs.  Non-ASCII or very long rows fall
-      back to the exact fused UDF.
-
-    Default choice is MEASURED, not assumed (BENCH.md §1): on this
-    sandbox the build's bottleneck is the JVM shuffle+parquet side, not
-    Python — the Spark-free tokenizer pool does 411 k docs/s at 8 procs
-    vs the whole build's ~80 k turns/s, so "arrow" wins the head-to-head
-    (~80 k vs ~60 k turns/s at 8 cores; expr's extra scan+Arrow stem
-    round-trip costs more than the Python it removes).  "expr" is the
-    right strategy only once per-node build throughput approaches the
-    Python workers' ceiling (real clusters with fast local NVMe shuffle,
-    or stemming=False configs where it is pure codegen end-to-end).
+    inverted index.  Tokenize + doc-local tf run inside one fused Arrow
+    pandas UDF (preprocess.Frequencies, preprocess.go:36-46), so the
+    stage is ZERO-shuffle.
 
     Equivalent of the reference's per-partition Lexicon accumulation +
     global merge (lexicon.go:28-42, spimi.go:123-228).  doc_len (and
@@ -95,46 +73,11 @@ def postings_df(
     (docno, size) per hit).
     """
     keep = [id_col, "doc_len", *extra_cols]
-    if tokenizer == "arrow":
-        tf = make_term_freq_udf(settings.preprocess)
-        exploded = docs.select(
-            *keep, F.explode(tf(F.col("text"))).alias("p")
-        )
-        return exploded.select(
-            F.col("p.term").alias("term"), *keep, F.col("p.tf").alias("tf")
-        )
-    if tokenizer != "expr":
-        raise ValueError(f"unknown tokenizer strategy {tokenizer!r}")
-
-    from pulse_spark.text import exprs as X
-
-    pre = settings.preprocess
-    base = docs.select(*keep, "text")
-    fast = X.is_ascii(F.col("text")) & (
-        F.octet_length(F.col("text")) < F.lit(X.MAX_EXPR_DOC_BYTES)
-    )
-    jvm = base.where(fast).select(
-        *keep,
-        X.tokens_ascii_expr(F.col("text"), pre.stopwords_removal).alias("_toks"),
-    )
-    if pre.stemming:
-        # stemming happens AFTER tokenization and BEFORE counting, so
-        # stem collisions within a doc merge in the tf count below —
-        # identical to the reference's stem-then-Frequencies order
-        jvm = jvm.select(
-            *keep, X.make_stem_arr_udf()(F.col("_toks")).alias("_toks")
-        )
-    jvm = jvm.select(*keep, F.explode(X.term_freqs_expr(F.col("_toks"))).alias("p"))
-    # non-ASCII or very long rows: the exact fused Python pipeline.  The
-    # union scans the source twice (each branch filters its rows); scan
-    # cost is tiny next to tokenization, and every row is processed by
-    # exactly one branch — NULL text matches neither filter, which equals
-    # the UDF path's empty token list (no posting rows either way).
-    tf = make_term_freq_udf(pre)
-    py = base.where(~fast).select(
+    tf = make_term_freq_udf(settings.preprocess)
+    exploded = docs.select(
         *keep, F.explode(tf(F.col("text"))).alias("p")
     )
-    return jvm.unionByName(py).select(
+    return exploded.select(
         F.col("p.term").alias("term"), *keep, F.col("p.tf").alias("tf")
     )
 

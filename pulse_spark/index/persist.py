@@ -120,14 +120,8 @@ def build_persisted_index(
     num_doc_partitions: int | None = None,
     build_segments: bool = False,
     assign_ids: bool | None = None,
-    tokenizer: str = "arrow",
 ) -> Index:
     """Stage-checkpointed build; resumable — completed stages are skipped.
-
-    tokenizer: "arrow" (fused pandas UDF, measured default) or "expr"
-    (JVM codegen + memoized array stemming; see build.postings_df for
-    the measured trade-off).  Execution strategy only — identical
-    postings either way (tests/test_exprs.py).
 
     assign_ids: dense deterministic doc_ids (rank of (conv_id, turn_idx)).
     Needed only by the compressed-segments layout (delta-varint wants
@@ -230,8 +224,7 @@ def build_persisted_index(
 
             fp_obs = Observation("resume_fp")
             d_postings_src = d_full.observe(fp_obs, *_fingerprint_metrics())
-        p = B.postings_df(d_postings_src, settings, id_col=id_col,
-                          tokenizer=tokenizer)
+        p = B.postings_df(d_postings_src, settings, id_col=id_col)
         # write first, verify the fingerprint, THEN record: on mismatch
         # the stage is never marked committed (the partial files are
         # overwritten by the next attempt)

@@ -27,6 +27,7 @@ skew an aggregation — a mega term simply spans many blocks across ranges.
 from __future__ import annotations
 
 import math
+from collections import Counter
 from collections.abc import Iterator
 from functools import partial
 
@@ -48,6 +49,12 @@ from pulse_spark.compression.codecs import (
     unary_encode_concat,
 )
 from pulse_spark.config import BM25_B, BM25_K1, IndexingSettings
+from pulse_spark.index.maxscore import (
+    FUSED_COLUMNS,
+    fuse_terms,
+    maxscore_topk,
+    tombstone_mask,
+)
 
 # Parquet row-group size for the segments stage.  Row-group min/max
 # stats on `term` are the ONLY pruning unit a term-filtered reader gets
@@ -110,13 +117,6 @@ def decode_payload(ids_bin: bytes, tfs_bin: bytes, lens_bin: bytes, compress: bo
         tfs = np.frombuffer(bytes(tfs_bin), dtype="<u4").astype(np.uint64)
     lens = np.frombuffer(bytes(lens_bin), dtype="<u4").astype(np.uint64)
     return ids, tfs, lens
-
-
-def decode_block(row, compress: bool):
-    """-> (doc_ids u64, tfs u64, doc_lens u64) numpy arrays."""
-    return decode_payload(
-        row["doc_ids_bin"], row["tfs_bin"], row["doc_lens_bin"], compress
-    )
 
 
 SEGMENT_ARROW_SCHEMA = to_arrow_schema(SEGMENT_SCHEMA)
@@ -243,7 +243,7 @@ def build_segments(
 
 
 # ---------------------------------------------------------------------------
-# MaxScore / block-max scorer
+# MaxScore / block-max scorer (the kernel is index/maxscore.py)
 # ---------------------------------------------------------------------------
 
 
@@ -257,30 +257,26 @@ def search_segments(
 ) -> DataFrame:
     """Top-k over the compressed segments with MaxScore pruning.
 
-    Per (query_id, doc_range) an applyInPandas scorer runs term-at-a-time
-    accumulation in numpy; terms are processed in decreasing score-upper
-    order and once the remaining terms' summed upper bound cannot lift a
-    NEW document into the current top-k, later terms only update existing
-    candidates and skip blocks that cannot intersect them (block-level
-    min/max doc id + per-block max_part bound).  Score-safe: pruning uses
-    a strict 1e-9 margin, so the returned top-k equals the exact path's.
+    Per (query_id, doc_range) an applyInPandas scorer fuses each query
+    term's blocks in that range and runs the MaxScore kernel the serving
+    sidecar runs (index/maxscore.py), with tombstones as a bool mask over
+    the range.  Score-safe, so the returned top-k equals the exact
+    path's.
 
     Shuffle profile: segments join broadcast(query terms) → shuffle by
     (query_id, doc_range) [rows = query's blocks, not postings] → ≤ k rows
     per group out → global window top-k over ≤ k·ranges rows.
     """
-    import json
     import os
 
+    from pulse_spark.index.checkpoint import load_manifest
     from pulse_spark.query.search import tokenize_queries
 
-    manifest = json.load(open(os.path.join(index.out_dir, "manifest.json")))
+    manifest = load_manifest(index.out_dir)
     compress = index.settings.compression
     n, adl = index.n_docs, index.adl
-    # live-docs tombstones (index/deletes.py): deleted postings are
-    # dropped DURING accumulation (not after top-k) so MaxScore's k-th
-    # threshold never rests on a deleted doc's score — a post-hoc filter
-    # would both under-fill k and make the pruning bound unsafe
+    # live-docs tombstones (index/deletes.py), dropped during
+    # accumulation by the kernel (maxscore_topk says why)
     from pulse_spark.index.deletes import deleted_id_array
 
     del_ids = deleted_id_array(index.out_dir)
@@ -294,140 +290,50 @@ def search_segments(
     qw = qt.groupBy("query_id", "term", "df").agg(
         F.count(F.lit(1)).cast("int").alias("w")
     )
-    q_terms = [r["term"] for r in qw.select("term").distinct().collect()]
-    if not q_terms:
+    # one row per (query_id, distinct term): the query terms to scan,
+    # and each query's conjunctive required-term count
+    qw_rows = qw.select("query_id", "term").collect()
+    if not qw_rows:
         return spark.createDataFrame(
             [], "query_id long, rank int, doc_id long, score double"
         )
-    n_req = {
-        r["query_id"]: r["cnt"]
-        for r in qw.groupBy("query_id").agg(F.count_distinct("term").alias("cnt")).collect()
-    }
+    q_terms = sorted({r["term"] for r in qw_rows})
+    n_req = Counter(r["query_id"] for r in qw_rows)
 
     seg = spark.read.parquet(os.path.join(index.out_dir, "segments"))
     seg = seg.where(F.col("term").isin(q_terms))
     joined = seg.join(F.broadcast(qw), "term")
 
-    out_schema = T.StructType([
-        T.StructField("query_id", T.LongType()),
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("score", T.DoubleType()),
-    ])
-
     range_size = int(manifest["stages"]["segments"]["range_size"])
 
     def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        # Dense range-local numpy accumulation (serve.py:175-195 pattern):
-        # acc[doc_id - base] += score — no per-posting Python loop anywhere
-        # on the posting-volume path.  Memory: the dense arrays cover the
-        # doc ids actually present in this range (≤ range_size entries ×
-        # 13 B), bounded by construction — at larger corpora n_ranges
-        # grows with the corpus so range_size (and the accumulator) stays
-        # fixed per task.
+        # Dense range-local accumulation: acc[doc_id - base] += score.
+        # Memory: the dense arrays cover the doc ids actually present in
+        # this range (≤ range_size entries × 13 B), bounded by
+        # construction — at larger corpora n_ranges grows with the corpus
+        # so range_size (and the accumulator) stays fixed per task.
         qid = int(pdf["query_id"].iloc[0])
         base = int(pdf["doc_range"].iloc[0]) * range_size
-
-        df_col = pdf["df"].to_numpy()
-        w_col = pdf["w"].to_numpy()
-        mp_col = pdf["max_part"].to_numpy()
-        mt_col = pdf["max_tf"].to_numpy()
-        lo_col = pdf["min_doc_id"].to_numpy()
-        hi_col = pdf["max_doc_id"].to_numpy()
-        ids_bins = pdf["doc_ids_bin"].tolist()
-        tfs_bins = pdf["tfs_bin"].tolist()
-        lens_bins = pdf["doc_lens_bin"].tolist()
-
-        by_term: dict[str, list[int]] = {}
-        for i, t in enumerate(pdf["term"].tolist()):
-            by_term.setdefault(t, []).append(i)
-
-        infos = []
-        for t, rows in by_term.items():
-            idf = math.log(n / int(df_col[rows[0]]))
-            wgt = int(w_col[rows[0]])
-            if use_bm25:
-                upper = wgt * idf * float(mp_col[rows].max())
-            else:
-                upper = wgt * (1 + math.log(int(mt_col[rows].max()))) * idf
-            infos.append((rows, wgt, idf, upper))
-        infos.sort(key=lambda x: -x[3])
-        suffix = np.cumsum([u for *_, u in infos][::-1])[::-1]
-
-        size = int(hi_col.max()) - base + 1
-        acc = np.zeros(size, dtype=np.float64)
-        # matched = MEMBERSHIP (zero-score postings of idf=0 terms still
-        # belong to the disjunctive candidate set — rank-identity)
-        matched = np.zeros(size, dtype=bool)
-        hits = np.zeros(size, dtype=np.int32) if conjunctive else None
-        n_matched = 0
-        for i, (rows, wgt, idf, upper) in enumerate(infos):
-            remaining = suffix[i]
-            kth = -math.inf
-            if n_matched >= k:
-                kth = -np.partition(-acc[matched], k - 1)[k - 1]
-            only_existing = (
-                (not conjunctive) and n_matched >= k and remaining < kth - 1e-9
-            )
-            if only_existing:
-                nz = np.nonzero(matched)[0]
-                lo, hi = int(nz[0]) + base, int(nz[-1]) + base
-            for ri in rows:
-                if only_existing and (hi_col[ri] < lo or lo_col[ri] > hi):
-                    continue  # block-level skip: cannot intersect candidates
-                ids, tfs, lens = decode_payload(
-                    ids_bins[ri], tfs_bins[ri], lens_bins[ri], compress
-                )
-                if del_ids is not None and ids.size:
-                    live = ~np.isin(ids.astype(np.int64), del_ids,
-                                    assume_unique=False)
-                    if not live.all():
-                        ids, tfs, lens = ids[live], tfs[live], lens[live]
-                        if ids.size == 0:
-                            continue
-                if use_bm25:
-                    part = tfs / (
-                        BM25_K1 * ((1 - BM25_B) + BM25_B * (lens / adl)) + tfs
-                    )
-                    sc = wgt * idf * part
-                else:
-                    sc = wgt * (1 + np.log(tfs.astype(np.float64))) * idf
-                idx = ids.astype(np.int64) - base
-                if only_existing:
-                    m = matched[idx]
-                    acc[idx[m]] += sc[m]
-                else:
-                    acc[idx] += sc
-                    new = ~matched[idx]
-                    n_matched += int(np.count_nonzero(new))
-                    matched[idx] = True
-                    if conjunctive:
-                        # conjunctive never prunes (only_existing False), so
-                        # every posting passes here once per term — a doc's
-                        # hit count is its distinct-term count
-                        hits[idx] += 1
-
-        if conjunctive:
-            cand = np.nonzero(hits >= n_req.get(qid, 0))[0]
-        else:
-            cand = np.nonzero(matched)[0]
-        if cand.size == 0:
-            return pd.DataFrame(columns=["query_id", "doc_id", "score"]).astype(
-                {"query_id": "int64", "doc_id": "int64", "score": "float64"}
-            )
-        scores = acc[cand]
-        if cand.size > k:
-            kth = -np.partition(-scores, k - 1)[k - 1]
-            keep = scores >= kth  # ties widen; doc_id tiebreak below
-            cand, scores = cand[keep], scores[keep]
-        order = np.lexsort((cand, -scores))[:k]
+        size = int(pdf["max_doc_id"].max()) - base + 1
+        cols = {c: pdf[c].tolist() for c in ("w", "df", *FUSED_COLUMNS)}
+        w_df = dict(zip(cols["term"], zip(cols["w"], cols["df"])))
+        terms = [(e, w_df[t][0], math.log(n / w_df[t][1]))
+                 for t, e in fuse_terms(cols, compress, base).items()]
+        cand, scores, _, _ = maxscore_topk(
+            terms, k, bm25=use_bm25, adl=adl, conjunctive=conjunctive,
+            n_required=n_req.get(qid, 0), base=base,
+            buffers=(np.zeros(size), np.zeros(size, dtype=bool),
+                     np.zeros(size, dtype=np.int32) if conjunctive else None),
+            deleted=tombstone_mask(del_ids, base, size),
+        )
         return pd.DataFrame({
-            "query_id": np.full(len(order), qid, dtype=np.int64),
-            "doc_id": cand[order] + base,
-            "score": scores[order],
+            "query_id": np.full(len(cand), qid, dtype=np.int64),
+            "doc_id": cand,
+            "score": scores,
         })
 
     local = joined.groupBy("query_id", "doc_range").applyInPandas(
-        score_group, out_schema
+        score_group, "query_id long, doc_id long, score double"
     )
     from pyspark.sql import Window
 

@@ -11,17 +11,17 @@ Spark path writes (index/segments.py):
                                               engine.go:45-54)
   stats/    -> N, ADL                        (reference: stats.bin)
   docs/     -> doc_id -> doc_no array        (reference: doc.bin)
-  segments/ -> pyarrow dataset; per query, a term-filtered to_table()
-               reads ONLY the query terms' blocks (files are term-sorted,
-               so parquet row-group min/max stats prune like the
-               reference's lexicon seek, search.go:89-117)
+  segments/ -> stats-indexed reader: every file's per-row-group (min,
+               max) term, read once from the footers at open; a query
+               reads only the row groups that can hold its terms, one
+               parallel task per file (files are term-sorted, so this
+               prunes like the reference's lexicon seek,
+               search.go:89-117)
 
-Scoring is the same numpy kernel family as segments.py's distributed
-scorer: decode delta+varint/unary blocks, vectorized BM25/TFIDF partials,
-dense accumulator, argpartition top-k — including the same score-safe
-MaxScore pruning over the per-block max-score metadata (terms in
-decreasing upper-bound order; once the remaining bound cannot lift a new
-doc into the top-k, blocks that miss the candidate span are skipped).
+Scoring is the SAME kernel as segments.py's distributed scorer
+(index/maxscore.py): each term's blocks decoded once into fused arrays
+(held in an LRU), then MaxScore over the per-block max-score metadata
+into a pooled dense accumulator, and a partition + lexsort top-k.
 Results are rank-identical to query/search.py::search_topk (pinned by
 tests/test_serve.py).
 
@@ -37,17 +37,18 @@ from __future__ import annotations
 
 import math
 import os
+from collections import Counter
 from dataclasses import dataclass
 
 import numpy as np
 
-from pulse_spark.compression.codecs import (
-    delta_varint_decode,
-    delta_varint_decode_concat,
-    unary_decode,
-    unary_decode_concat,
+from pulse_spark.config import IndexingSettings
+from pulse_spark.index.maxscore import (
+    FUSED_COLUMNS,
+    fuse_terms,
+    maxscore_topk,
+    tombstone_mask,
 )
-from pulse_spark.config import BM25_B, BM25_K1, IndexingSettings
 from pulse_spark.text.normalize import tokens as py_tokens
 
 
@@ -58,6 +59,17 @@ class ServeResult:
     doc_id: int
     doc_no: str | None
     score: float
+
+
+def _results(query_id: int, ranked, doc_nos) -> list[ServeResult]:
+    """ServeResults of ranked (doc_id, score) pairs, doc_no resolved
+    through the doc_id -> doc_no array when one is loaded."""
+    return [
+        ServeResult(query_id=query_id, rank=rank, doc_id=d,
+                    doc_no=str(doc_nos[d]) if doc_nos is not None else None,
+                    score=score)
+        for rank, (d, score) in enumerate(ranked)
+    ]
 
 
 def disable_numpy_hugepages() -> bool:
@@ -155,6 +167,22 @@ def load_doc_no_array(out_dir: str, id_space: int) -> np.ndarray:
     return arr
 
 
+def _segments_meta(out_dir: str) -> tuple[dict, dict]:
+    """(manifest, stats row) of a committed index; raises unless it has
+    a segments stage."""
+    import pyarrow.parquet as pq
+
+    from pulse_spark.index.checkpoint import load_manifest
+
+    manifest = load_manifest(out_dir)
+    if "segments" not in manifest["stages"]:
+        raise FileNotFoundError(
+            f"no committed segments stage at {out_dir} "
+            "(build with build_segments=True)"
+        )
+    return manifest, pq.read_table(os.path.join(out_dir, "stats")).to_pylist()[0]
+
+
 class PointServer:
     """Serve BM25/TFIDF top-k point queries from a committed segments
     index without a SparkSession (requires build_segments=True at build
@@ -173,8 +201,6 @@ class PointServer:
         malloc_arena_mb: opt-in allocator tuning for long-lived serving
         processes — see enable_malloc_arena (process-wide effect, hence
         not a default)."""
-        import json
-
         # unconditional (r6): the THP/madvise pathology hits the DEFAULT
         # config too — latency_9m_warm_r05.json recorded a 29 s cold
         # outlier (q25) on a no-arena server whose root cause is exactly
@@ -188,18 +214,10 @@ class PointServer:
 
         import pyarrow.parquet as pq
 
-        with open(os.path.join(out_dir, "manifest.json")) as f:
-            manifest = json.load(f)
-        if "segments" not in manifest.get("stages", {}):
-            raise FileNotFoundError(
-                f"no committed segments stage at {out_dir} "
-                "(build with build_segments=True)"
-            )
+        manifest, stats = _segments_meta(out_dir)
         self.out_dir = out_dir
         self.doc_ranges = set(doc_ranges) if doc_ranges is not None else None
         self.settings = IndexingSettings.from_dict(manifest["settings"])
-
-        stats = pq.read_table(os.path.join(out_dir, "stats")).to_pylist()[0]
         self.n_docs = int(stats["n_docs"])
         self.adl = float(stats["adl"])
         # a merged index (index/merge.py) may carry id-space gaps when an
@@ -212,9 +230,9 @@ class PointServer:
         # its own contiguous doc_id span (doc_range slice × range_size),
         # so N shards together hold ~1× the corpus in accumulator memory,
         # not N× — the memory half of sharding.  _base/_span stay
-        # (0, id_space) for a whole-index server.
-        seg_meta = manifest["stages"]["segments"]
-        rs = int(seg_meta.get("range_size") or 0)
+        # (0, id_space) for a whole-index server.  Shard pruning on the
+        # segment scan guarantees every posting id lands inside the span.
+        rs = int(manifest["stages"]["segments"].get("range_size") or 0)
         if self.doc_ranges is not None and rs:
             self._base = min(self.doc_ranges) * rs
             self._span = min(
@@ -223,22 +241,14 @@ class PointServer:
         else:
             self._base, self._span = 0, self.id_space
 
-        # live-docs tombstones (index/deletes.py): boolean mask applied
-        # DURING accumulation so deleted docs never join the candidate
-        # set — keeps the MaxScore k-th threshold safe (it must not rest
-        # on a deleted doc's score).  N/ADL/df deliberately unchanged
+        # live-docs tombstones (index/deletes.py), a mask the kernel
+        # applies during accumulation.  N/ADL/df deliberately unchanged
         # until vacuum (Lucene live-docs semantics).
         from pulse_spark.index.deletes import deleted_id_array
 
-        self._deleted: np.ndarray | None = None
-        dels = deleted_id_array(out_dir)
-        if dels is not None and dels.size:
-            local = dels - self._base
-            local = local[(local >= 0) & (local < self._span)]
-            if local.size:
-                m = np.zeros(self._span, dtype=bool)
-                m[local] = True
-                self._deleted = m
+        self._deleted = tombstone_mask(
+            deleted_id_array(out_dir), self._base, self._span
+        )
 
         t = pq.read_table(os.path.join(out_dir, "terms"), columns=["term", "df"])
         self.df = dict(zip(t["term"].to_pylist(), t["df"].to_pylist()))
@@ -249,10 +259,6 @@ class PointServer:
         elif load_doc_nos:
             self.doc_nos = load_doc_no_array(out_dir, self.id_space)
 
-        self._seg_cols = [
-            "term", "n", "doc_ids_bin", "tfs_bin", "doc_lens_bin",
-            "min_doc_id", "max_doc_id", "max_tf", "max_part",
-        ]
         # stats-indexed segment reader: per file, the (min,max) term of
         # every parquet row group, read ONCE from the footers here, plus
         # the kept-open ParquetFile handle (a fresh open costs ~0.7 ms —
@@ -310,7 +316,7 @@ class PointServer:
         from collections import OrderedDict
 
         self._cache_terms = cache_terms
-        self._block_cache: OrderedDict[str, list] = OrderedDict()
+        self._block_cache: OrderedDict[str, dict] = OrderedDict()
         self._cache_lock = threading.Lock()
         # pooled per-THREAD dense accumulators (see search): allocated
         # once, reset O(candidates) after each query — at a 9M-doc span
@@ -329,32 +335,10 @@ class PointServer:
 
     def _blocks_for(self, qterms: list[str],
                     _rebuild: bool = False) -> dict[str, dict]:
-        """term -> {"idx","tf","lens": fused posting arrays, "off": block
-        offsets (B+1), "blo","bhi","bmt","bmp": per-block metadata
-        arrays, "pb","pt": memoized partials|None} via LRU.
-
-        Each term's blocks are FUSED into single concatenated arrays at
-        fill time (per-block views recovered by slicing at "off" when
-        MaxScore pruning wants to skip blocks).  At the 10^6-posting
-        terms a 9M-doc corpus produces, a term spans ~8000 blocks of
-        block_size=128 — a per-block Python loop costs ~10 µs/iteration
-        of pure interpreter overhead, which dominated the warm
-        accumulator pass; the fused form is O(1) numpy calls per term on
-        the unpruned path.
-
-        The per-posting score partials are QUERY-INDEPENDENT — BM25's
-        tf/(k1·((1-b)+b·len/adl)+tf) and TFIDF's 1+ln(tf) depend only on
-        the index — so the FIRST search touching a term computes and
-        memoizes them ("pb"/"pt", one fused array per metric); lazy per
-        metric so the cold fill pays neither (eager fill measured +70%
-        cold p50 — the ln() is the expensive one).  idx is stored
-        span-local (base already subtracted) as int64 (numpy's intp: an
-        int32 index array measured ~10% SLOWER — numpy re-casts non-intp
-        indices on every indexing call).  Identical float operations on
-        identical values as the inline per-block form — and every
-        posting id is unique within a term, so scatter-add order cannot
-        change a sum — scores stay bit-identical (pinned by
-        test_serve.py rank-identity).
+        """term -> fused entry (maxscore.fuse_terms) via LRU.  Each
+        entry also memoizes its query-independent score partials per
+        metric on first use (maxscore_topk), so a hot term pays neither
+        the parquet read, the decode nor the partials again.
 
         Thread-safe: the miss fill happens OUTSIDE the lock (two threads
         may redundantly decode the same cold term — wasted work, never
@@ -378,65 +362,9 @@ class PointServer:
             # columnar extraction (one to_pylist per column) — ~7x fewer
             # Python<->C crossings than per-cell .as_py() on cold wide
             # queries, which is exactly the cold-term latency path
-            cols = {c: tbl[c].to_pylist() for c in self._seg_cols}
-            rows: dict[str, list[int]] = {t: [] for t in missing}
-            for i, term in enumerate(cols["term"]):
-                rows[term].append(i)
-            # ONE batched decode per term over the concatenation of its
-            # blocks' payloads (codecs.*_decode_concat) — a 9M-doc hot
-            # term spans ~25k blocks, and the old per-block loop paid
-            # ~40 s of pure python/numpy call overhead on the cold fill
-            # of a stopword query (measured; BENCH.md §4g).  Block
-            # boundaries ("off") come from the rows' `n` column; the
-            # decoders verify the stream against it.
-            new: dict[str, dict] = {}
-            compress = self.settings.compression
-            for t in missing:
-                idxs = rows[t]
-                if not idxs:
-                    z = np.zeros(0)
-                    new[t] = {
-                        "idx": z.astype(np.int64), "tf": z, "lens": z,
-                        "off": np.zeros(1, np.int64),
-                        "blo": z.astype(np.int64), "bhi": z.astype(np.int64),
-                        "bmt": z.astype(np.int64), "bmp": z,
-                        "pb": None, "pt": None,
-                    }
-                    continue
-                counts = np.array([cols["n"][i] for i in idxs],
-                                  dtype=np.int64)
-                ids_buf = b"".join(cols["doc_ids_bin"][i] for i in idxs)
-                tf_bufs = [cols["tfs_bin"][i] for i in idxs]
-                len_buf = b"".join(cols["doc_lens_bin"][i] for i in idxs)
-                if compress:
-                    ids = delta_varint_decode_concat(ids_buf, counts)
-                    tfs = unary_decode_concat(
-                        b"".join(tf_bufs), [len(x) for x in tf_bufs],
-                        counts, minimum=1,
-                    )
-                else:
-                    ids = np.frombuffer(ids_buf, dtype="<u4").astype(
-                        np.uint64)
-                    tfs = np.frombuffer(b"".join(tf_bufs),
-                                        dtype="<u4").astype(np.uint64)
-                lens = np.frombuffer(len_buf, dtype="<u4").astype(np.uint64)
-                off = np.zeros(len(idxs) + 1, dtype=np.int64)
-                np.cumsum(counts, out=off[1:])
-                new[t] = {
-                    "idx": ids.astype(np.int64) - self._base,
-                    "tf": tfs.astype(np.float64),
-                    "lens": lens,
-                    "off": off,
-                    "blo": np.array([cols["min_doc_id"][i] for i in idxs],
-                                    np.int64),
-                    "bhi": np.array([cols["max_doc_id"][i] for i in idxs],
-                                    np.int64),
-                    "bmt": np.array([cols["max_tf"][i] for i in idxs],
-                                    np.int64),
-                    "bmp": np.array([cols["max_part"][i] for i in idxs],
-                                    np.float64),
-                    "pb": None, "pt": None,
-                }
+            cols = {c: tbl[c].to_pylist() for c in FUSED_COLUMNS}
+            new = fuse_terms(cols, self.settings.compression, self._base,
+                             missing)
         out = {}
         retry = []
         with self._cache_lock:
@@ -505,27 +433,17 @@ class PointServer:
             pf, lock, rgs = job
             with lock:
                 t = pf.read_row_groups(
-                    rgs, columns=self._seg_cols, use_threads=False
+                    rgs, columns=list(FUSED_COLUMNS), use_threads=False
                 )
             return t.filter(pc.is_in(t["term"], value_set=tset))
 
         parts = [p for p in self._read_pool.map(task, jobs) if p.num_rows]
         if not parts:
             # empty columns only feed per-column to_pylist -> []
-            return pa.table({c: [] for c in self._seg_cols})
+            return pa.table({c: [] for c in FUSED_COLUMNS})
         return pa.concat_tables(parts)
 
     # -- scoring ----------------------------------------------------------
-
-    def _decode(self, ids_bin, tfs_bin, lens_bin):
-        if self.settings.compression:
-            ids = delta_varint_decode(bytes(ids_bin))
-            tfs = unary_decode(bytes(tfs_bin), minimum=1)
-        else:
-            ids = np.frombuffer(bytes(ids_bin), dtype="<u4").astype(np.uint64)
-            tfs = np.frombuffer(bytes(tfs_bin), dtype="<u4").astype(np.uint64)
-        lens = np.frombuffer(bytes(lens_bin), dtype="<u4").astype(np.uint64)
-        return ids, tfs, lens
 
     def filter_mask(
         self,
@@ -569,10 +487,8 @@ class PointServer:
         allowed_mask: optional global-id_space bool array (see
         filter_mask) — restrict results to these docs, stats global
         (query/search.py doc_filter semantics).  Applied at accumulation
-        time, BEFORE candidates enter the top-k state, so the MaxScore
-        k-th threshold only ever rests on allowed docs (post-filtering
-        the results instead would make pruning unsound: an inflated
-        unfiltered threshold could skip blocks holding allowed docs)."""
+        time, before candidates enter the top-k state (maxscore_topk
+        says why post-filtering would be unsound)."""
         if self._closed:
             raise RuntimeError("PointServer is closed")
         if metric.upper() not in ("BM25", "TFIDF"):
@@ -586,190 +502,23 @@ class PointServer:
                 )
             fmask = allowed_mask[self._base:self._base + self._span]
 
-        w: dict[str, int] = {}
-        for t in py_tokens(text, self.settings.preprocess) if text else []:
-            w[t] = w.get(t, 0) + 1
+        w = Counter(py_tokens(text, self.settings.preprocess) if text else [])
         qterms = [t for t in w if t in self.df]
         if not qterms:
             return []
 
         blocks = self._blocks_for(qterms)
-
-        # MaxScore over the per-block max-score metadata (the same
-        # score-safe pruning as segments.search_segments): process terms
-        # in decreasing score-upper order; once the remaining terms'
-        # summed upper bound cannot lift a NEW document past the current
-        # k-th score, later terms only update existing candidates and
-        # skip blocks outside the candidate doc-id span.  Every matched
-        # doc is still fully scored, so the returned top-k (scores AND
-        # ranks) equals the exhaustive path's — pinned in test_serve.py.
-        infos = []
-        for term in qterms:
-            idf = math.log(self.n_docs / self.df[term])
-            e = blocks[term]
-            if use_bm25:
-                mp = float(e["bmp"].max()) if e["bmp"].size else 0.0
-                upper = w[term] * idf * mp
-            else:
-                mt = int(e["bmt"].max()) if e["bmt"].size else 1
-                upper = w[term] * (1 + math.log(mt)) * idf
-            infos.append((term, idf, upper))
-        infos.sort(key=lambda x: -x[2])
-        suffix = np.cumsum([u for *_, u in infos][::-1])[::-1]
-
-        # dense accumulators cover only this server's doc_id span
-        # (_base/_span — the whole index, or ONE shard's contiguous
-        # slice): N shard servers together hold ~1x the corpus in
-        # accumulator memory, not Nx.  Shard pruning on the segment scan
-        # guarantees every posting id lands inside the span.
-        #
-        # The buffers are POOLED per thread and reset O(candidates) in
-        # the finally block; the candidate id list is maintained
-        # INCREMENTALLY (cand_parts) so nothing ever scans the full span
-        # — at 9M docs, per-query np.zeros page faults (~35 ms) plus the
-        # acc[matched] / nonzero(matched) full-span passes (~25 ms) were
-        # the bulk of warm latency.
-        base = self._base
-        acc, matched, hits = self._buffers(conjunctive)
-        # matched tracks MEMBERSHIP, not score: a universal term has
-        # idf = ln(1) = 0, and its zero-score matches still belong to the
-        # disjunctive candidate set in both Spark paths (rank-identity)
-        cand_parts: list[np.ndarray] = []
-        n_matched = 0
-        # observability: how much the pruning actually did (tests/bench).
-        # Accumulated locally, assigned once at the end — concurrent
-        # searches then each publish a self-consistent pair.
-        pruned_terms = 0
-        blocks_skipped = 0
-        try:
-            for i, (term, idf, upper) in enumerate(infos):
-                only_existing = False
-                if not conjunctive and n_matched >= k:
-                    if len(cand_parts) > 1:
-                        cand_parts = [np.concatenate(cand_parts)]
-                    cand_so_far = cand_parts[0]
-                    # same value multiset as acc[matched] (every candidate
-                    # exactly once), gathered in O(candidates)
-                    kth = -np.partition(-acc[cand_so_far], k - 1)[k - 1]
-                    if suffix[i] < kth - 1e-9:
-                        only_existing = True
-                        pruned_terms += 1
-                        # global-id bounds (block metadata is global)
-                        lo = int(cand_so_far.min()) + base
-                        hi = int(cand_so_far.max()) + base
-                wi = w[term] * idf
-                entry = blocks[term]
-                memo_key = "pb" if use_bm25 else "pt"
-                parts = entry[memo_key]
-                if parts is None:
-                    # first touch of this term under this metric: compute
-                    # the query-independent partials once (same float ops
-                    # on the same values as the inline form — scores
-                    # bit-identical)
-                    tf = entry["tf"]
-                    if use_bm25:
-                        parts = tf / (
-                            BM25_K1 * ((1 - BM25_B)
-                                       + BM25_B * (entry["lens"] / self.adl))
-                            + tf
-                        )
-                    else:
-                        parts = 1 + np.log(tf)
-                    entry[memo_key] = parts
-                if only_existing:
-                    # pruned path: slice only the blocks intersecting the
-                    # candidate span (per-block views of the fused arrays)
-                    keep = (entry["bhi"] >= lo) & (entry["blo"] <= hi)
-                    blocks_skipped += int(np.count_nonzero(~keep))
-                    off = entry["off"]
-                    for bi in np.nonzero(keep)[0]:
-                        s = slice(off[bi], off[bi + 1])
-                        idx = entry["idx"][s]
-                        sc = wi * parts[s]
-                        if self._deleted is not None:
-                            live = ~self._deleted[idx]
-                            if not live.all():
-                                idx, sc = idx[live], sc[live]
-                                if idx.size == 0:
-                                    continue
-                        m = matched[idx]
-                        acc[idx[m]] += sc[m]
-                else:
-                    # full path: O(1) numpy calls over the whole term.
-                    # The candidate ids are recorded BEFORE acc is
-                    # written — the finally-reset only clears positions
-                    # in cand_parts, so an exception landing between the
-                    # two must never leave an unrecorded dirty position
-                    # in the pooled buffer.
-                    idx = entry["idx"]
-                    if idx.size == 0:
-                        continue
-                    sc = wi * parts
-                    if self._deleted is not None:
-                        live = ~self._deleted[idx]
-                        if not live.all():
-                            idx, sc = idx[live], sc[live]
-                    if fmask is not None and idx.size:
-                        ok = fmask[idx]
-                        if not ok.all():
-                            idx, sc = idx[ok], sc[ok]
-                    if idx.size:
-                        new = ~matched[idx]
-                        n_matched += int(np.count_nonzero(new))
-                        cand_parts.append(idx[new])
-                        matched[idx] = True
-                        acc[idx] += sc
-                        if hits is not None:
-                            hits[idx] += 1
-            self.last_pruned_terms = pruned_terms
-            self.last_blocks_skipped = blocks_skipped
-            if not cand_parts:
-                return []
-            cand = (
-                np.concatenate(cand_parts) if len(cand_parts) > 1
-                else cand_parts[0]
-            )
-            if conjunctive:
-                # conjunctive never prunes (only_existing stays False), so
-                # every posting passed the hits counter exactly once per
-                # term
-                cand = cand[hits[cand] == len(qterms)]
-            if cand.size == 0:
-                return []
-            scores = acc[cand]
-            cand = cand + base  # back to global doc_ids
-            if cand.size > k:
-                # partition bound: keep every candidate scoring >= the
-                # k-th largest (ties widen the set; doc_id tiebreak
-                # resolves below)
-                kth = -np.partition(-scores, k - 1)[k - 1]
-                keep = scores >= kth
-                cand, scores = cand[keep], scores[keep]
-            order = np.lexsort((cand, -scores))[:k]
-            out = []
-            for rank, j in enumerate(order):
-                did = int(cand[j])
-                out.append(ServeResult(
-                    query_id=query_id, rank=rank, doc_id=did,
-                    doc_no=(str(self.doc_nos[did])
-                            if self.doc_nos is not None else None),
-                    score=float(scores[j]),
-                ))
-            return out
-        finally:
-            # targeted reset: every touched position is a candidate (acc
-            # is only ever written where matched gets/has True), so the
-            # pooled buffers come back clean in O(candidates) — even when
-            # an exception unwinds mid-search
-            if cand_parts:
-                touched = (
-                    np.concatenate(cand_parts) if len(cand_parts) > 1
-                    else cand_parts[0]
-                )
-                acc[touched] = 0.0
-                matched[touched] = False
-                if hits is not None:
-                    hits[touched] = 0
+        # the prune counters are for tests and the benchmark
+        cand, scores, self.last_pruned_terms, self.last_blocks_skipped = maxscore_topk(
+            [(blocks[t], w[t], math.log(self.n_docs / self.df[t]))
+             for t in qterms],
+            k, bm25=use_bm25, adl=self.adl, conjunctive=conjunctive,
+            n_required=len(qterms), base=self._base,
+            buffers=self._buffers(conjunctive), deleted=self._deleted,
+            allowed=fmask,
+        )
+        return _results(query_id, zip(cand.tolist(), scores.tolist()),
+                        self.doc_nos)
 
 
 def _shard_worker(conn, out_dir: str, cache_terms: int, doc_ranges: list,
@@ -846,17 +595,8 @@ class ShardedServer:
     def __init__(self, out_dir: str, n_shards: int = 2,
                  cache_terms: int = 4096, parallel: bool = False,
                  malloc_arena_mb: "int | None" = None):
-        import json
-
-        with open(os.path.join(out_dir, "manifest.json")) as f:
-            manifest = json.load(f)
-        seg_meta = manifest.get("stages", {}).get("segments")
-        if seg_meta is None:
-            raise FileNotFoundError(
-                f"no committed segments stage at {out_dir} "
-                "(build with build_segments=True)"
-            )
-        n_ranges = int(seg_meta["n_ranges"])
+        manifest, stats = _segments_meta(out_dir)
+        n_ranges = int(manifest["stages"]["segments"]["n_ranges"])
         n_shards = max(1, min(n_shards, n_ranges))
         # contiguous doc_range slices -> contiguous doc_id spans per shard
         bounds = [round(i * n_ranges / n_shards) for i in range(n_shards + 1)]
@@ -864,9 +604,6 @@ class ShardedServer:
         # real fleet) — not via a throwaway whole-index PointServer,
         # whose init would redundantly scan every segment footer and
         # load the full lexicon just to be discarded
-        import pyarrow.parquet as pq
-
-        stats = pq.read_table(os.path.join(out_dir, "stats")).to_pylist()[0]
         id_space = int(stats.get("id_space") or stats["n_docs"])
         self._nos = load_doc_no_array(out_dir, id_space)
         self.parallel = parallel
@@ -920,21 +657,33 @@ class ShardedServer:
             s.close()
         # same lock as search(): a close racing a locked fan-out/drain
         # would interleave the shutdown sentinel into the per-pipe
-        # request stream mid-protocol
-        with self._pipe_lock:
-            for c in self._conns:
+        # request stream mid-protocol.  Bounded wait, because a search
+        # blocked on a hung worker holds the lock forever: past it, no
+        # sentinel — the workers are killed, which ends that search's
+        # recv() with EOF, so it raises and lets go of the lock.
+        locked = self._pipe_lock.acquire(timeout=5)
+        try:
+            for c in self._conns if locked else ():
                 try:
                     c.send(None)
                 except (BrokenPipeError, OSError):
                     pass
             for p in self._procs:
-                p.join(timeout=10)
-                if p.is_alive():
-                    p.terminate()
+                p.join(timeout=10 if locked else 0)
+                # a stopped process ignores SIGTERM, not SIGKILL
+                for stop in (p.terminate, p.kill):
+                    if p.is_alive():
+                        stop()
+                        p.join(timeout=5)
+            if not locked:
+                locked = self._pipe_lock.acquire(timeout=5)
             for c in self._conns:
                 c.close()
             self._conns.clear()
             self._procs.clear()
+        finally:
+            if locked:
+                self._pipe_lock.release()
 
     def __enter__(self):
         return self
@@ -973,7 +722,7 @@ class ShardedServer:
                 for i, c in enumerate(self._conns):
                     try:
                         tag, payload = c.recv()
-                    except EOFError:
+                    except (EOFError, OSError):  # OSError: reset by a kill
                         errs.append(f"shard {i} died mid-query")
                         continue
                     if tag != "ok":
@@ -982,27 +731,13 @@ class ShardedServer:
                         pairs.extend(payload)
             if errs:
                 raise RuntimeError("; ".join(errs))
-            merged = sorted(pairs, key=lambda t: (-t[1], t[0]))[:k]
-            return [
-                ServeResult(
-                    query_id=query_id, rank=i, doc_id=d,
-                    doc_no=(str(self._nos[d])
-                            if self._nos is not None else None),
-                    score=s,
-                )
-                for i, (d, s) in enumerate(merged)
+        else:
+            pairs = [
+                (r.doc_id, r.score)
+                for sh in self.shards
+                for r in sh.search(text, k=k, metric=metric,
+                                  conjunctive=conjunctive,
+                                  query_id=query_id, allowed_mask=allowed_mask)
             ]
-        per_shard = [
-            s.search(text, k=k, metric=metric, conjunctive=conjunctive,
-                     query_id=query_id, allowed_mask=allowed_mask)
-            for s in self.shards
-        ]
-        merged = sorted(
-            (r for rs in per_shard for r in rs),
-            key=lambda r: (-r.score, r.doc_id),
-        )[:k]
-        return [
-            ServeResult(query_id=r.query_id, rank=i, doc_id=r.doc_id,
-                        doc_no=r.doc_no, score=r.score)
-            for i, r in enumerate(merged)
-        ]
+        merged = sorted(pairs, key=lambda t: (-t[1], t[0]))[:k]
+        return _results(query_id, merged, self._nos)
