@@ -2,11 +2,15 @@
 
   - exact:   hash-groupBy on normalized text (one shuffle, no skew risk —
              hash keys are uniform)
-  - MinHash+LSH: shingle → k min-hashes → banded bucket keys → bucket
-             join for candidates → exact Jaccard verify.  The banded join
-             is the 100 TB path: candidate generation is an equi-join on
-             band_key (no O(n^2) pair enumeration); hot buckets are
-             boring-text pathologies handled by a bucket-size cap.
+  - MinHash+LSH: one per-doc frame (shingle set, its size, banded
+             bucket keys from an Arrow UDF) → band-key equi-join for
+             candidates → exact Jaccard verify by array_intersect.  The
+             banded join is the 100 TB path (no O(n^2) pair
+             enumeration).  The batch operator and the streaming one
+             (streaming/neardup.py) share the helpers.
+  - Hot-bucket cap (drop_hot_buckets): boring-text buckets that would
+             turn a band self-join quadratic are dropped — one policy
+             for the MinHash, SimHash and embedding near-dup operators.
   - SimHash: 64-bit sign-hash over token md5s (vectorized numpy inside a
              pandas UDF), Hamming-banded for candidate pairs.
 
@@ -179,8 +183,8 @@ def repetition_score(
 def minhash_band_keys(shd: pd.Series) -> pd.Series:
     """BANDS band keys per distinct-shingle array, bit-identical to the
     relational form (sig_i = min over shingles of md5(f"{i}|s") hex;
-    band_key_b = md5("|".join(sig_{b*r}..sig_{b*r+r-1}))), which both
-    the DuckDB oracle and the old explode + groupBy(min) path compute.
+    band_key_b = md5("|".join(sig_{b*r}..sig_{b*r+r-1}))), which the
+    DuckDB oracle (datapipe/harness.py _minhash_ctes) computes.
 
     Why a UDF (guide §4.2): the pure-expression twin — 8 array_min(
     transform(md5)) higher-order functions — is interpreted per element
@@ -220,76 +224,30 @@ def minhash_band_keys(shd: pd.Series) -> pd.Series:
     return shd.map(row_keys)
 
 
-def minhash_signatures(shingles: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, sig_0..sig_{K-1}): per-doc MinHash signature; hash_i(s) =
-    md5(i || '|' || s), min taken over hex strings."""
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("shingle")))).alias(f"sig_{i}")
-        for i in range(MINHASH_K)
-    ]
-    return shingles.groupBy(id_col).agg(*aggs)
-
-
-def lsh_bucket_keys(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, band, band_key): banded LSH keys — md5 over the band's sigs."""
-    r = MINHASH_K // BANDS
-    bands = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(F.concat_ws("|", *[F.col(f"sig_{b * r + j}") for j in range(r)])).alias(
-                "band_key"
-            ),
-        )
-        for b in range(BANDS)
-    ])
-    return sigs.select(id_col, F.explode(bands).alias("bk")).select(
-        id_col, F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key")
+def drop_hot_buckets(bk: DataFrame, keys: list[str], cap: int) -> DataFrame:
+    """bk without the rows of buckets holding more than `cap` rows — the
+    HOT-BUCKET CAP shared by every banded near-dup operator.  A
+    degenerate bucket (boilerplate text, an all-zero band, a zero
+    embedding) turns the band self-join quadratic; its members are
+    overwhelmingly exact/near-exact dups that exact_dup_groups already
+    catches with a linear groupBy.  Oversized buckets are rare by
+    construction, so the filter is a broadcast ANTI join against the tiny
+    bad-bucket list — map-side, no shuffle of the full bucket table (an
+    inner join against the "ok" list would reshuffle every row by key).
+    The caller decides whether the cap can bite at all."""
+    bad = (
+        bk.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("_bsz"))
+        .where(F.col("_bsz") > cap)
+        .select(*keys)
     )
+    return bk.join(F.broadcast(bad), keys, "left_anti")
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    min_jaccard: float = 0.2,
-    max_bucket_size: int = 100_000,
-) -> DataFrame:
-    """(id_a, id_b, jaccard): near-duplicate pairs — LSH candidates
-    verified with exact shingle-set Jaccard.  Returns id_a < id_b.
-
-    r6 shape (optimization guide §2.4 — remove shuffles outright): the
-    MinHash signature is a PER-ROW array expression — sig_i =
-    array_min(transform(distinct_shingles, s -> md5(i|s))) — which is
-    value-identical to the old explode + groupBy(min) but needs NO
-    (doc, shingle) shuffle and no string-min SortAggregate; band keys
-    and the shingle-set size are per-row expressions too.  One cached
-    per-doc frame (id, shingle_set, n_sh, band keys) replaces the two
-    caches (sh + bk) of the old shape.  Candidate verification is
-    size(array_intersect(set_a, set_b)) over the SURVIVING candidate
-    pairs only — same |A ∩ B| the exploded equi-join computed, without
-    its two shuffles and groupBy.  Jobs per invocation dropped 17 -> ~8
-    (measured, sf0.1); at scale the removed shuffle was O(corpus
-    shingles).
-
-    Docs with zero shingles never enter banding (they had no sh rows in
-    the old shape either; without the filter they would all share the
-    empty-signature bucket — quadratic at scale).
-
-    max_bucket_size: HOT-BUCKET CAP.  A degenerate band_key (boilerplate
-    text that hashes millions of near-identical docs into one bucket)
-    turns the band self-join quadratic — one such bucket at 100 TB is a
-    job-killer.  Buckets larger than the cap are dropped from candidate
-    generation (their members are overwhelmingly exact/near-exact dups,
-    which exact_dup_groups already catches with a linear groupBy); the
-    cap is a count-aggregate + broadcast anti-join, no extra pass over
-    the text."""
-    # NO shingle-count filter here: any WHERE on a token/shingle-derived
-    # column gets predicate-pushed below the adaptive-spread exchange
-    # with the tokenizer inlined into it — running the whole tokenize in
-    # the single-task scan stage (measured 1.5 s CPU at sf0.1).  Zero-
-    # shingle docs are excluded from banding anyway: minhash_band_keys
-    # returns NULL for them and posexplode emits no rows, exactly the
-    # old explode-path semantics (no sh rows -> no bk rows).
-    per_doc = (
+def _minhash_frame(docs: DataFrame, id_col: str) -> DataFrame:
+    """(id, _shd, n_sh, _bands): per-doc distinct shingle set, its size
+    and the BANDS band keys (NULL for docs with zero shingles)."""
+    return (
         docs.withColumn("_toks", _ws_toks())
         .select(
             F.col(id_col).cast("long").alias(id_col),
@@ -299,61 +257,29 @@ def minhash_lsh_pairs(
             id_col, "_shd", F.size("_shd").alias("n_sh"),
             minhash_band_keys(F.col("_shd")).alias("_bands"),
         )
-        .persist()
     )
-    # eager materialization: the plan consumes per_doc in FIVE branches
-    # (bucket-size agg, both self-join sides, both verify array sides);
-    # AQE materializes those query stages concurrently, and concurrent
-    # first readers of a cold cache each recompute it (measured ~5x the
-    # per_doc cost).  One count populates the cache before fan-out, and
-    # its value gates the bucket cap below.  Cache lifecycle: keyed by
-    # Spark's CacheManager on the analyzed plan, so repeated calls over
-    # the same input reuse ONE cache (as the old sh/bk persists did); a
-    # long-lived session feeding many DISTINCT inputs accumulates one
-    # cache per input and should spark.catalog.clearCache() between
-    # corpora.  Note the count also makes CONSTRUCTION run jobs — this
-    # operator's result is assumed consumed, as in the harness/driver.
-    n_banded = per_doc.count()
-    bk = per_doc.select(
+
+
+def _band_rows(per_doc: DataFrame, id_col: str) -> DataFrame:
+    """(id, n_sh, band, band_key): one row per band of a banded doc —
+    posexplode emits none for the NULL band keys of zero-shingle docs."""
+    return per_doc.select(
         id_col, "n_sh",
         F.posexplode("_bands").alias("band", "band_key"),
     )
-    # a bucket can never hold more members than there are banded docs,
-    # so when n_banded <= cap the cap provably drops nothing — skip the
-    # size-aggregate + anti-join branch outright (guide §2.4)
-    if max_bucket_size is not None and n_banded > max_bucket_size:
-        # OVERSIZED buckets are rare by construction (they are the
-        # pathology being dropped), so the filter is a broadcast ANTI
-        # join against the tiny bad-bucket list — map-side, no shuffle
-        # of the full bucket table (an inner join against the "ok" list
-        # would reshuffle every row by (band, band_key))
-        bad = (
-            bk.groupBy("band", "band_key")
-            .agg(F.count(F.lit(1)).alias("_bsz"))
-            .where(F.col("_bsz") > max_bucket_size)
-            .select("band", "band_key")
-        )
-        bk = bk.join(F.broadcast(bad), ["band", "band_key"], "left_anti")
-    a = bk.select(
-        F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"),
-        "band", "band_key",
-    )
-    b = bk.select(
-        F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"),
-        "band", "band_key",
-    )
-    cand = (
-        a.join(b, ["band", "band_key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "n_a", "n_b")
-        .distinct()
-    )
-    # exact verify on candidates only: |A ∩ B| from the two shingle SETS
-    # (arrays are distinct by construction)
-    arr_a = per_doc.select(
+
+
+def _verify_jaccard(
+    cand: DataFrame, shd: DataFrame, id_col: str, min_jaccard: float
+) -> DataFrame:
+    """(id_a, id_b, jaccard): exact verify of candidate pairs
+    (id_a, id_b, n_a, n_b) — |A ∩ B| is size(array_intersect) of the
+    two shingle SETS looked up in shd (id, _shd); arrays are distinct by
+    construction."""
+    arr_a = shd.select(
         F.col(id_col).alias("id_a"), F.col("_shd").alias("_sa")
     )
-    arr_b = per_doc.select(
+    arr_b = shd.select(
         F.col(id_col).alias("id_b"), F.col("_shd").alias("_sb")
     )
     return (
@@ -376,34 +302,71 @@ def minhash_lsh_pairs(
     )
 
 
-def verify_jaccard_pairs(
-    cand: DataFrame, sh: DataFrame, id_col: str, min_jaccard: float
+def minhash_lsh_pairs(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    min_jaccard: float = 0.2,
+    max_bucket_size: int = 100_000,
 ) -> DataFrame:
-    """Exact-verify candidate pairs against shingle sets: |A ∩ B| via a
-    shingle equi-join restricted to candidates, Jaccard >= threshold.
-    Shared by the batch LSH path and the streaming incremental path."""
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    sa = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    sb = sh.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        cand.join(sa, "id_a").join(sb, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("double").alias("n_common"))
+    """(id_a, id_b, jaccard): near-duplicate pairs — LSH candidates
+    verified with exact shingle-set Jaccard.  Returns id_a < id_b.
+
+    Shape (optimization guide §2.4 — remove shuffles outright): one
+    cached per-doc frame (id, shingle_set, n_sh, band keys) from
+    _minhash_frame, whose band keys come from the minhash_band_keys
+    Arrow UDF — no (doc, shingle) shuffle and no string-min
+    SortAggregate.  Candidates are a band-key equi-join of its
+    posexploded band rows; verification is size(array_intersect(set_a,
+    set_b)) over the SURVIVING candidate pairs only.  The streaming
+    operator (streaming/neardup.py) runs the same three helpers per
+    micro-batch.
+
+    Docs with zero shingles never enter banding (without that they would
+    all share the empty-signature bucket — quadratic at scale).
+
+    max_bucket_size: the hot-bucket cap (drop_hot_buckets); buckets
+    larger than the cap are dropped from candidate generation."""
+    # NO shingle-count filter here: any WHERE on a token/shingle-derived
+    # column gets predicate-pushed below the adaptive-spread exchange
+    # with the tokenizer inlined into it — running the whole tokenize in
+    # the single-task scan stage (measured 1.5 s CPU at sf0.1).  Zero-
+    # shingle docs are excluded from banding anyway: minhash_band_keys
+    # returns NULL for them and posexplode emits no rows.
+    per_doc = _minhash_frame(docs, id_col).persist()
+    # eager materialization: the plan consumes per_doc in FIVE branches
+    # (bucket-size agg, both self-join sides, both verify array sides);
+    # AQE materializes those query stages concurrently, and concurrent
+    # first readers of a cold cache each recompute it (measured ~5x the
+    # per_doc cost).  One count populates the cache before fan-out, and
+    # its value gates the bucket cap below.  Cache lifecycle: keyed by
+    # Spark's CacheManager on the analyzed plan, so repeated calls over
+    # the same input reuse ONE cache; a long-lived session feeding many
+    # DISTINCT inputs accumulates one cache per input and should
+    # spark.catalog.clearCache() between corpora.  Note the count also
+    # makes CONSTRUCTION run jobs — this operator's result is assumed
+    # consumed, as in the harness/driver.
+    n_banded = per_doc.count()
+    bk = _band_rows(per_doc, id_col)
+    # a bucket can never hold more members than there are banded docs,
+    # so when n_banded <= cap the cap provably drops nothing — skip the
+    # size-aggregate + anti-join branch outright (guide §2.4)
+    if max_bucket_size is not None and n_banded > max_bucket_size:
+        bk = drop_hot_buckets(bk, ["band", "band_key"], max_bucket_size)
+    a = bk.select(
+        F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"),
+        "band", "band_key",
     )
-    na = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(na, "id_a").join(nb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-                6,
-            ),
-        )
-        .where(F.col("jaccard") >= min_jaccard)
-        .select("id_a", "id_b", "jaccard")
+    b = bk.select(
+        F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"),
+        "band", "band_key",
     )
+    cand = (
+        a.join(b, ["band", "band_key"])
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", "n_a", "n_b")
+        .distinct()
+    )
+    return _verify_jaccard(cand, per_doc, id_col, min_jaccard)
 
 
 def ngram_jaccard_pairs(
@@ -571,8 +534,8 @@ def simhash_near_dup_pairs(
     bands, so an equi-join on (band, band_bits) finds every such pair
     without O(n²) enumeration; candidates are then verified with exact
     bit_count(a XOR b) ≤ max_hamming (all JVM-side).  Same hot-bucket cap
-    as minhash_lsh_pairs (an all-zero band over boilerplate docs is the
-    degenerate case)."""
+    (drop_hot_buckets) as minhash_lsh_pairs (an all-zero band over
+    boilerplate docs is the degenerate case)."""
     if max_hamming >= SIMHASH_BANDS:
         raise ValueError(
             f"banded candidates are exact only for max_hamming < {SIMHASH_BANDS}"
@@ -594,15 +557,7 @@ def simhash_near_dup_pairs(
         F.col("bb.band").alias("band"), F.col("bb.band_bits").alias("band_bits"),
     )
     if max_bucket_size is not None and n_docs > max_bucket_size:
-        # broadcast anti-join on the rare oversized buckets (see
-        # minhash_lsh_pairs) — no shuffle of the full bucket table
-        bad = (
-            bk.groupBy("band", "band_bits")
-            .agg(F.count(F.lit(1)).alias("_bsz"))
-            .where(F.col("_bsz") > max_bucket_size)
-            .select("band", "band_bits")
-        )
-        bk = bk.join(F.broadcast(bad), ["band", "band_bits"], "left_anti")
+        bk = drop_hot_buckets(bk, ["band", "band_bits"], max_bucket_size)
     a = bk.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("sh_a"),
                   "band", "band_bits")
     b = bk.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("sh_b"),

@@ -18,6 +18,8 @@ import hashlib
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pulse_spark.datapipe.dedup import drop_hot_buckets
+
 LSH_BITS = 16
 
 
@@ -351,8 +353,8 @@ def embedding_near_dup_pairs(
     pairs only.
 
     The 100 TB shape: groupBy(band, bucket) — never an all-pairs
-    crossJoin; the hot-bucket cap bounds degenerate buckets (e.g.
-    all-zero embeddings) like the minhash path's.  Worker residency is
+    crossJoin; the hot-bucket cap (dedup.drop_hot_buckets) bounds
+    degenerate buckets (e.g. all-zero embeddings).  Worker residency is
     O(bucket_size × dim) — the bucket's stacked vectors — plus a gram
     chunk bounded to ≤2^22 cells; the vector term is the one that can
     blow up at high dim, so the cap is tightened to whatever bucket
@@ -391,18 +393,9 @@ def embedding_near_dup_pairs(
     # come from a fresh count() of the frame being processed, while the
     # count available here is the memoized _corpus_count, whose
     # documented staleness contract covers sizing heuristics only — a
-    # stale low count must never disable a MEMORY-SAFETY cap (r6 review)
-    if max_bucket_size is not None:
-        # sizes from the id projection only (no vector duplication in the
-        # size agg); broadcast anti-join drops the rare oversized buckets
-        # (see dedup.minhash_lsh_pairs) — no shuffle of the bucket table
-        bad = (
-            bk.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("_bsz"))
-            .where(F.col("_bsz") > max_bucket_size)
-            .select("band", "bucket")
-        )
-        bk = bk.join(F.broadcast(bad), ["band", "bucket"], "left_anti")
+    # stale low count must never disable a MEMORY-SAFETY cap (r6 review).
+    # The size agg reads the id projection only (no vector duplication).
+    bk = drop_hot_buckets(bk, ["band", "bucket"], max_bucket_size)
 
     def gram_block(pdf):
         import numpy as np

@@ -13,6 +13,8 @@ ChunkReader API (pkg/spimi/reader.go:10-13): a new dataset = a new
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -71,21 +73,46 @@ def read_transcripts(spark: SparkSession, path_or_table: str, fmt: str = "parque
     return spark.read.format(fmt).load(path_or_table)
 
 
-# DataFrame objects per (applicationId, path): every fresh
+# DataFrame objects per (applicationId, path, file listing): every fresh
 # spark.read.parquet(path) call runs a 1-task schema/footer job before
 # the query proper — measured ~0.1-0.2 s per harness query at sf0.1 —
 # so the resolved relation is built once per session and reused (plans
-# are immutable; reuse is safe).  Entries of dead sessions evicted on
-# access, like harness._SHARED.
+# are immutable; reuse is safe).  The listing (each file's relative
+# name, size and st_mtime_ns) makes a path overwritten during the
+# session resolve afresh instead of serving the stale relation; paths
+# the local filesystem cannot stat (remote URIs) key on the path alone.
+# Entries of dead sessions and stale listings are evicted on access,
+# like harness._SHARED.
 _READ_CACHE: dict = {}
 
 
+def _listing(path: str) -> tuple | None:
+    """(relative name, size, st_mtime_ns) of every file under path, or
+    None when the local filesystem cannot stat it."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return (("", st.st_size, st.st_mtime_ns),)
+        out = []
+        for root, _, files in os.walk(path):
+            for f in files:
+                fp = os.path.join(root, f)
+                st = os.stat(fp)
+                out.append((os.path.relpath(fp, path), st.st_size, st.st_mtime_ns))
+        return tuple(sorted(out))
+    except OSError:
+        return None
+
+
 def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
-    """Plain parquet read, one footer/schema job per session per path."""
+    """Plain parquet read, one footer/schema job per session per path
+    and file listing."""
     app = spark.sparkContext.applicationId
-    for k in [k for k in _READ_CACHE if k[0] != app]:
+    listing = _listing(path)
+    for k in [k for k in _READ_CACHE
+              if k[0] != app or (k[1] == path and k[2] != listing)]:
         del _READ_CACHE[k]
-    key = (app, path, "plain")
+    key = (app, path, listing, "plain")
     if key not in _READ_CACHE:
         _READ_CACHE[key] = spark.read.parquet(path)
     return _READ_CACHE[key]
@@ -104,7 +131,7 @@ def read_parquet_spread(spark: SparkSession, path: str, key_col: str) -> DataFra
     the partitioning is derived from the input, never a local-mode
     constant."""
     sc = spark.sparkContext
-    key = (sc.applicationId, path, "spread", key_col)
+    key = (sc.applicationId, path, _listing(path), "spread", key_col)
     if key not in _READ_CACHE:
         df = read_parquet_cached(spark, path)
         par = sc.defaultParallelism

@@ -100,6 +100,29 @@ def test_no_cartesian_in_datapipe_scale_paths(spark):
         assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_minhash_plan_is_pinned(spark):
+    """minhash_lsh_pairs over sf0.001 documents keeps its shape: ONE
+    Arrow UDF eval (the band keys, computed once into the cached per-doc
+    frame that every branch scans) and four exchanges — the bucket-pair
+    distinct's shuffle plus three broadcasts (the self-join's build side
+    and the two verify lookups)."""
+    import contextlib
+    import io
+    import re
+
+    from pulse_spark.datapipe.dedup import minhash_lsh_pairs
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        minhash_lsh_pairs(docs).explain("formatted")
+    # the formatted plan's details list every physical node once
+    nodes = re.findall(r"^\(\d+\) (\w+)", buf.getvalue(), re.MULTILINE)
+    assert nodes.count("ArrowEvalPython") == 1, buf.getvalue()
+    assert nodes.count("Exchange") == 1, buf.getvalue()
+    assert nodes.count("BroadcastExchange") == 3, buf.getvalue()
+
+
 def test_expand_and_filter_plans_are_scale_safe(spark):
     """RM3 / more-like-this / filtered search: every join hash-based (no
     cartesian/nested-loop), the doc_filter a semi-join, and RM3's

@@ -107,3 +107,26 @@ def test_doc_metadata_fetch(spark, tsv_paths):
     assert len(meta) > 0
     cols = set(meta[0].asDict())
     assert {"doc_no", "conv_id", "turn_idx", "doc_len", "score", "rank"} <= cols
+
+
+def test_read_cache_sees_overwritten_parquet(spark, tmp_path):
+    """A parquet path overwritten during the session is re-resolved by
+    the read cache: the second read returns the new rows, through both
+    the plain and the spread reader."""
+    from pulse_spark.sources.readers import (read_parquet_cached,
+                                             read_parquet_spread)
+
+    path = str(tmp_path / "t.parquet")
+    schema = "doc_id long, text string"
+    spark.createDataFrame([(1, "old"), (2, "old")], schema).write.parquet(path)
+    assert sorted(read_parquet_cached(spark, path).collect()) == [
+        (1, "old"), (2, "old")]
+    assert read_parquet_spread(spark, path, "doc_id").count() == 2
+
+    spark.createDataFrame([(3, "new"), (4, "new"), (5, "new")], schema) \
+        .write.mode("overwrite").parquet(path)
+    new = [(3, "new"), (4, "new"), (5, "new")]
+    assert sorted(read_parquet_cached(spark, path).collect()) == new
+    assert sorted(read_parquet_spread(spark, path, "doc_id").collect()) == new
+    # an unchanged path keeps serving the one cached relation
+    assert read_parquet_cached(spark, path) is read_parquet_cached(spark, path)

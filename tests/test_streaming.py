@@ -234,7 +234,71 @@ def test_stateful_sessionizer_out_of_order_across_batches():
 # ---------------------------------------------------------------------------
 
 
-def test_streaming_neardup_equals_batch(spark, tmp_path):
+# an edge corpus for the near-dup parity test, as 3 arrivals of
+# (doc_id, text): empty and whitespace-only text, docs under SHINGLE_N
+# tokens (NULL band keys), exact duplicates within one arrival and
+# across arrivals, non-ASCII text, and later arrivals carrying doc ids
+# below earlier ones
+_BASE = "the quick brown fox jumps over the lazy dog near the river bank"
+_LOREM = "lorem ipsum dolor sit amet consectetur adipiscing elit sed do eiusmod"
+_SQL = "spark shuffle merge sort join window aggregate filter project scan"
+_JA = "Café naïve résumé über straße 日本語 の テキスト 検索 エンジン です"
+EDGE_ARRIVALS = [
+    [
+        (10, _BASE), (11, _BASE + " today"), (12, ""), (13, "hello world"),
+        (14, "one"), (15, _BASE), (16, _JA), (17, "   "), (18, _SQL),
+        (19, _LOREM),
+    ],
+    [
+        (20, _SQL), (21, _JA.lower() + " 二"), (22, "hello world"),
+        (23, ""), (24, _LOREM.replace("eiusmod", "tempor incididunt")),
+        (25, "a b"), (26, "Ünïcödé wörds ärë hërë ând thërë ôn ëvërÿ line"),
+        (27, "completely unrelated words about gardening tomatoes and soil"),
+        (28, _SQL + " limit"), (29, "x y z"),
+    ],
+    [
+        (1, _BASE.replace("river", "creek")), (2, _LOREM), (3, "hello"),
+        (4, ""), (5, "Ünïcödé wörds ärë hërë ând thërë ôn ëvërÿ lïne"),
+        (6, _JA), (7, "tomatoes and soil about gardening words completely"),
+        (30, _SQL), (31, "ab cd"), (32, "the quick brown fox"),
+    ],
+]
+
+
+def _write_arrivals(spark, src, corpus):
+    """Write the corpus as 3 parquet files (3 'arrivals') into src and
+    return the whole corpus as one (doc_id, text) DataFrame."""
+    import shutil
+
+    if corpus == "edge":
+        for i, rows in enumerate(EDGE_ARRIVALS):
+            pq.write_table(pa.table({
+                "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+                "text": pa.array([r[1] for r in rows], pa.string()),
+            }), str(src / f"part-{i}.parquet"))
+        return spark.createDataFrame(
+            [r for rows in EDGE_ARRIVALS for r in rows],
+            "doc_id long, text string",
+        )
+    docs = spark.read.parquet(
+        f"/root/testdata/{corpus}/documents.parquet"
+    ).select("doc_id", "text")
+    # three arrivals split by doc_id so near-dup pairs straddle batches
+    for i in range(3):
+        docs.where(f"doc_id % 3 = {i}").coalesce(1).write.parquet(
+            str(src / f"arrival_{i}"), mode="overwrite"
+        )
+        part = next(
+            p for p in (src / f"arrival_{i}").iterdir()
+            if p.name.endswith(".parquet")
+        )
+        shutil.move(str(part), str(src / f"part-{i}.parquet"))
+        shutil.rmtree(str(src / f"arrival_{i}"))
+    return docs
+
+
+@pytest.mark.parametrize("corpus", ["sf0.001", "edge"])
+def test_streaming_neardup_equals_batch(spark, tmp_path, corpus):
     """The union of near-dup pairs emitted across micro-batches must
     equal the batch minhash_lsh_pairs over the full corpus — same pairs,
     same exact jaccard — and each pair must be emitted exactly once (in
@@ -246,31 +310,15 @@ def test_streaming_neardup_equals_batch(spark, tmp_path):
         stream_pairs,
     )
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    )
+    src = tmp_path / "docs_in"
+    out = tmp_path / "nd_out"
+    src.mkdir()
+    docs = _write_arrivals(spark, src, corpus)
     exp = {
         (r["id_a"], r["id_b"]): r["jaccard"]
         for r in minhash_lsh_pairs(docs).collect()
     }
-    assert exp  # the fixture corpus does contain near-dups
-
-    src = tmp_path / "docs_in"
-    out = tmp_path / "nd_out"
-    src.mkdir()
-    # three arrivals split by doc_id so near-dup pairs straddle batches
-    for i in range(3):
-        docs.where(f"doc_id % 3 = {i}").coalesce(1).write.parquet(
-            str(src / f"arrival_{i}"), mode="overwrite"
-        )
-        import shutil as _sh
-
-        part = next(
-            p for p in (src / f"arrival_{i}").iterdir()
-            if p.name.endswith(".parquet")
-        )
-        _sh.move(str(part), str(src / f"part-{i}.parquet"))
-        _sh.rmtree(str(src / f"arrival_{i}"))
+    assert exp  # the corpus does contain near-dups
 
     q = start_streaming_neardup(spark, str(src), str(out))
     q.awaitTermination(180)
@@ -288,6 +336,33 @@ def test_streaming_neardup_equals_batch(spark, tmp_path):
     q2 = start_streaming_neardup(spark, str(src), str(out))
     q2.awaitTermination(120)
     assert stream_pairs(spark, str(out)).count() == len(exp)
+
+
+def test_streaming_neardup_failed_write_releases_cache(spark, tmp_path):
+    """A micro-batch whose state write raises fails the query and leaves
+    no persisted RDD behind: the batch's cache is released on failure,
+    not only after its last write succeeds."""
+    from pyspark.errors import StreamingQueryException
+
+    from pulse_spark.streaming.neardup import start_streaming_neardup
+
+    src = tmp_path / "docs_in"
+    out = tmp_path / "nd_out"
+    src.mkdir()
+    _write_arrivals(spark, src, "edge")
+    # a regular FILE where the bucket store's directory belongs: the
+    # pairs write (which fills the batch's cache) succeeds, then the
+    # bucket-state write under it fails
+    (out / "state").mkdir(parents=True)
+    (out / "state" / "buckets").write_text("not a directory")
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    q = start_streaming_neardup(spark, str(src), str(out))
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(180)
+    assert os.path.isdir(out / "pairs" / "batch_id=0")  # cache was filled
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_compact_stream_index_serves_and_merges(spark, stream_dirs, tmp_path):
