@@ -3,11 +3,11 @@
   - exact:   hash-groupBy on normalized text (one shuffle, no skew risk —
              hash keys are uniform)
   - MinHash+LSH: one per-doc frame (shingle set, its size, banded
-             bucket keys from an Arrow UDF) → band-key equi-join for
-             candidates → exact Jaccard verify by array_intersect.  The
-             banded join is the 100 TB path (no O(n^2) pair
-             enumeration).  The batch operator and the streaming one
-             (streaming/neardup.py) share the helpers.
+             bucket keys, all from one Arrow UDF over the normalized
+             text) → band-key equi-join for candidates → exact Jaccard
+             verify by array_intersect.  The banded join is the 100 TB
+             path (no O(n^2) pair enumeration).  The batch operator and
+             the streaming one (streaming/neardup.py) share the helpers.
   - Hot-bucket cap (drop_hot_buckets): boring-text buckets that would
              turn a band self-join quadratic are dropped — one policy
              for the MinHash, SimHash and embedding near-dup operators.
@@ -179,49 +179,81 @@ def repetition_score(
     )
 
 
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def minhash_band_keys(shd: pd.Series) -> pd.Series:
-    """BANDS band keys per distinct-shingle array, bit-identical to the
-    relational form (sig_i = min over shingles of md5(f"{i}|s") hex;
-    band_key_b = md5("|".join(sig_{b*r}..sig_{b*r+r-1}))), which the
-    DuckDB oracle (datapipe/harness.py _minhash_ctes) computes.
+@F.pandas_udf(T.StructType([
+    T.StructField("_shd", T.ArrayType(T.StringType())),
+    T.StructField("_bands", T.ArrayType(T.StringType())),
+]))
+def minhash_shingle_bands(norm: pd.Series) -> pd.DataFrame:
+    """struct<_shd, _bands> per normalized text: the DISTINCT SHINGLE_N-
+    token shingles in first-seen order (what array_distinct over the
+    slice+concat_ws shingle array gives) and the BANDS band keys, NULL
+    for a doc with no shingle.  Bit-identical to the relational form
+    (sig_i = min over shingles of md5(f"{i}|s") hex; band_key_b =
+    md5("|".join(sig_{b*r}..sig_{b*r+r-1}))), which the DuckDB oracle
+    (datapipe/harness.py _minhash_ctes) computes.
 
-    Why a UDF (guide §4.2): the pure-expression twin — 8 array_min(
-    transform(md5)) higher-order functions — is interpreted per element
-    (no codegen) and measured ~25 s CPU at sf0.1; hashlib runs the same
-    2.4 M digests in ~1.5 s, and a per-batch memo collapses repeated
-    shingles (Zipf) besides.  The explode + SortAggregate alternative
-    pays a corpus-wide (doc, shingle) shuffle instead (string min never
-    hash-aggregates)."""
+    Vectorized per Arrow batch: the batch's shingle occurrences are
+    factorized, MINHASH_K md5 hex digests are taken once per DISTINCT
+    shingle of the batch (Zipf text repeats shingles across docs), each
+    digest column is ranked once by argsort over its S32 bytes (fixed-
+    length hex: byte order == 128-bit value order), and every doc's
+    signature is a np.minimum.reduceat of those ranks over its segment
+    — no per-shingle Python min loop.  The remaining Python loops are
+    the shingle joins, the distinct-shingle digests and BANDS digests
+    per doc.
+
+    Why one UDF for the whole frame: the pure-expression shingle array
+    (transform(sequence, slice, concat_ws) + array_distinct) is an
+    interpreted higher-order function, and the pure-expression signature
+    (8 array_min(transform(md5))) is interpreted per element too; the
+    explode + SortAggregate alternative pays a corpus-wide (doc,
+    shingle) shuffle instead (string min never hash-aggregates).
+    Measured on the sf0.1 documents (5,000 docs, one cached partition,
+    warm JVM, 4-vCPU host): the frame took 1.56-1.84 s with the HOF
+    shingle array and a per-shingle min loop, 0.83-0.93 s with this
+    UDF.  The UDF alone runs 0.48-0.58 s over those docs, most of it
+    the md5 of their 27 k distinct shingles (218 k digests)."""
     import hashlib
 
-    memo: dict[str, list[str]] = {}
-    r = MINHASH_K // BANDS
-
-    def row_keys(shingles):
-        if shingles is None or len(shingles) == 0:
-            return None
-        sigs = None
-        for s in shingles:
-            hs = memo.get(s)
-            if hs is None:
-                hs = [
-                    hashlib.md5(f"{i}|{s}".encode()).hexdigest()
-                    for i in range(MINHASH_K)
-                ]
-                memo[s] = hs
-            if sigs is None:
-                sigs = list(hs)
-            else:
-                for i in range(MINHASH_K):
-                    if hs[i] < sigs[i]:
-                        sigs[i] = hs[i]
-        return [
-            hashlib.md5("|".join(sigs[b * r:(b + 1) * r]).encode()).hexdigest()
-            for b in range(BANDS)
-        ]
-
-    return shd.map(row_keys)
+    n, r = SHINGLE_N, MINHASH_K // BANDS
+    shd = []
+    for text in norm:
+        toks = [t for t in text.split(" ") if t] if text else []
+        shd.append(list(dict.fromkeys(
+            " ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)
+        )))
+    sizes = np.fromiter(map(len, shd), dtype=np.int64, count=len(shd))
+    bands = [None] * len(shd)
+    banded = np.flatnonzero(sizes)
+    if len(banded):
+        codes, uniq = pd.factorize(
+            np.fromiter((s for sh in shd for s in sh), dtype=object,
+                        count=int(sizes.sum()))
+        )
+        # md5(f"{i}|{s}") as a copy of the hashed f"{i}|" prefix updated
+        # with s (~30% cheaper than hashing each formatted string)
+        pre = [hashlib.md5(f"{i}|".encode()) for i in range(MINHASH_K)]
+        digests = []
+        for s in uniq:
+            sb = s.encode()
+            for p in pre:
+                h = p.copy()
+                h.update(sb)
+                digests.append(h.hexdigest())
+        hexes = np.array(digests, dtype="S32").reshape(len(uniq), MINHASH_K)
+        starts = np.concatenate(([0], np.cumsum(sizes[banded])[:-1]))
+        rank = np.empty(len(uniq), dtype=np.int64)
+        sig = np.empty((len(banded), MINHASH_K), dtype="S32")
+        for i in range(MINHASH_K):
+            order = np.argsort(hexes[:, i])
+            rank[order] = np.arange(len(uniq))
+            sig[:, i] = hexes[order[np.minimum.reduceat(rank[codes], starts)], i]
+        for d, row in zip(banded, sig.tolist()):
+            bands[d] = [
+                hashlib.md5(b"|".join(row[b * r:(b + 1) * r])).hexdigest()
+                for b in range(BANDS)
+            ]
+    return pd.DataFrame({"_shd": shd, "_bands": bands})
 
 
 def drop_hot_buckets(bk: DataFrame, keys: list[str], cap: int) -> DataFrame:
@@ -246,16 +278,17 @@ def drop_hot_buckets(bk: DataFrame, keys: list[str], cap: int) -> DataFrame:
 
 def _minhash_frame(docs: DataFrame, id_col: str) -> DataFrame:
     """(id, _shd, n_sh, _bands): per-doc distinct shingle set, its size
-    and the BANDS band keys (NULL for docs with zero shingles)."""
+    and the BANDS band keys (NULL for docs with zero shingles), from ONE
+    minhash_shingle_bands Arrow UDF over the JVM-normalized text."""
     return (
-        docs.withColumn("_toks", _ws_toks())
-        .select(
+        docs.select(
             F.col(id_col).cast("long").alias(id_col),
-            F.array_distinct(F.expr(_shingle_case(SHINGLE_N))).alias("_shd"),
+            minhash_shingle_bands(normalized_text()).alias("_mh"),
         )
         .select(
-            id_col, "_shd", F.size("_shd").alias("n_sh"),
-            minhash_band_keys(F.col("_shd")).alias("_bands"),
+            id_col, F.col("_mh._shd").alias("_shd"),
+            F.size("_mh._shd").alias("n_sh"),
+            F.col("_mh._bands").alias("_bands"),
         )
     )
 
@@ -313,9 +346,9 @@ def minhash_lsh_pairs(
 
     Shape (optimization guide §2.4 — remove shuffles outright): one
     cached per-doc frame (id, shingle_set, n_sh, band keys) from
-    _minhash_frame, whose band keys come from the minhash_band_keys
-    Arrow UDF — no (doc, shingle) shuffle and no string-min
-    SortAggregate.  Candidates are a band-key equi-join of its
+    _minhash_frame, whose shingle sets and band keys come from the
+    minhash_shingle_bands Arrow UDF — no (doc, shingle) shuffle and no
+    string-min SortAggregate.  Candidates are a band-key equi-join of its
     posexploded band rows; verification is size(array_intersect(set_a,
     set_b)) over the SURVIVING candidate pairs only.  The streaming
     operator (streaming/neardup.py) runs the same three helpers per
@@ -325,26 +358,28 @@ def minhash_lsh_pairs(
     all share the empty-signature bucket — quadratic at scale).
 
     max_bucket_size: the hot-bucket cap (drop_hot_buckets); buckets
-    larger than the cap are dropped from candidate generation."""
+    larger than the cap are dropped from candidate generation.
+
+    Runs a Spark job when the DataFrame is BUILT, not only when it is
+    consumed: the per-doc frame is persisted and counted here.  The
+    cache is keyed on the input's plan, so repeated calls over one
+    input share it, but every DISTINCT input keeps its own cache for
+    the life of the session — a long-lived session that dedups corpus
+    after corpus should call spark.catalog.clearCache() between
+    corpora."""
     # NO shingle-count filter here: any WHERE on a token/shingle-derived
     # column gets predicate-pushed below the adaptive-spread exchange
     # with the tokenizer inlined into it — running the whole tokenize in
     # the single-task scan stage (measured 1.5 s CPU at sf0.1).  Zero-
-    # shingle docs are excluded from banding anyway: minhash_band_keys
-    # returns NULL for them and posexplode emits no rows.
+    # shingle docs are excluded from banding anyway: minhash_shingle_bands
+    # returns NULL band keys for them and posexplode emits no rows.
     per_doc = _minhash_frame(docs, id_col).persist()
     # eager materialization: the plan consumes per_doc in FIVE branches
     # (bucket-size agg, both self-join sides, both verify array sides);
     # AQE materializes those query stages concurrently, and concurrent
     # first readers of a cold cache each recompute it (measured ~5x the
     # per_doc cost).  One count populates the cache before fan-out, and
-    # its value gates the bucket cap below.  Cache lifecycle: keyed by
-    # Spark's CacheManager on the analyzed plan, so repeated calls over
-    # the same input reuse ONE cache; a long-lived session feeding many
-    # DISTINCT inputs accumulates one cache per input and should
-    # spark.catalog.clearCache() between corpora.  Note the count also
-    # makes CONSTRUCTION run jobs — this operator's result is assumed
-    # consumed, as in the harness/driver.
+    # its value gates the bucket cap below (cache lifecycle: docstring).
     n_banded = per_doc.count()
     bk = _band_rows(per_doc, id_col)
     # a bucket can never hold more members than there are banded docs,
@@ -535,7 +570,13 @@ def simhash_near_dup_pairs(
     without O(n²) enumeration; candidates are then verified with exact
     bit_count(a XOR b) ≤ max_hamming (all JVM-side).  Same hot-bucket cap
     (drop_hot_buckets) as minhash_lsh_pairs (an all-zero band over
-    boilerplate docs is the degenerate case)."""
+    boilerplate docs is the degenerate case).
+
+    Runs a Spark job when the DataFrame is BUILT: the SimHash table is
+    persisted and counted here, as in minhash_lsh_pairs.  Every DISTINCT
+    input keeps its own cache for the life of the session, so a
+    long-lived session that dedups corpus after corpus should call
+    spark.catalog.clearCache() between corpora."""
     if max_hamming >= SIMHASH_BANDS:
         raise ValueError(
             f"banded candidates are exact only for max_hamming < {SIMHASH_BANDS}"

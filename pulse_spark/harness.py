@@ -173,6 +173,7 @@ def _topk(spark, sf_dir, metric, conjunctive, settings=SETTINGS,
     res = topk_from_tables(
         p, t, occ, n, adl, k=K, metric=metric, conjunctive=conjunctive,
         id_col="doc_id", tie_round=6, doc_filter=doc_filter,
+        df_attached=True,
     )
     return res.select(
         F.col("query_id").cast("long"),
@@ -402,7 +403,8 @@ def q_bm25_page2_topk(spark, sf_dir):
     n, adl = _stats(spark, sf_dir)
     occ = _occ_with_df(spark, sf_dir)
     res = topk_from_tables(p, t, occ, n, adl, k=K, metric="BM25",
-                           id_col="doc_id", tie_round=6, offset=K)
+                           id_col="doc_id", tie_round=6, offset=K,
+                           df_attached=True)
     return res.select(
         F.col("query_id").cast("long"),
         F.col("doc_id").cast("long"),
@@ -1002,7 +1004,7 @@ def q_hit_counts(spark, sf_dir):
     n, adl = _stats(spark, sf_dir)
     occ = _occ_with_df(spark, sf_dir)
     res = hit_stats(p, t, occ, n, adl, metric="BM25",
-                    id_col="doc_id", tie_round=6)
+                    id_col="doc_id", tie_round=6, df_attached=True)
     return res.select(
         F.col("query_id").cast("long"),
         F.col("n_hits").cast("long"),

@@ -89,6 +89,7 @@ def topk_from_tables(
     deletes: DataFrame | None = None,
     doc_filter: DataFrame | None = None,
     offset: int = 0,
+    df_attached: bool = False,
 ) -> DataFrame:
     """Core scorer over raw index tables.
 
@@ -120,11 +121,13 @@ def topk_from_tables(
     mathematically-equal scores (which can differ by summation-order ulps
     across engines) tie-break deterministically on id_col — used by the
     cross-engine oracle harness.
+
+    df_attached: see scored_candidates.
     """
     per_doc = scored_candidates(
         postings, terms, q_occurrences, n_docs, adl, metric=metric,
         conjunctive=conjunctive, id_col=id_col, deletes=deletes,
-        doc_filter=doc_filter,
+        doc_filter=doc_filter, df_attached=df_attached,
     )
     return bounded_topk(
         per_doc, k, id_col, tie_round, offset=offset,
@@ -143,22 +146,26 @@ def scored_candidates(
     id_col: str = "doc_no",
     deletes: DataFrame | None = None,
     doc_filter: DataFrame | None = None,
+    df_attached: bool = False,
 ) -> DataFrame:
     """The scoring stage of topk_from_tables without the top-k cut:
     every candidate doc's total score as (query_id, <id_col>, score)
     — one row per (query, matching doc).  Shared by top-k, collapse,
-    and anything else that ranks the candidate set differently."""
+    and anything else that ranks the candidate set differently.
+
+    df_attached: q_occurrences already carries each term's corpus `df`
+    (a bounded driver-side lookup, e.g. harness._occ_with_df) with the
+    corpus-absent terms dropped, so the global-term join and its
+    broadcast-build job are skipped.  Otherwise the df comes from
+    `terms`, and a `df` column the occurrences happen to carry is
+    ignored."""
     if metric.upper() not in ("BM25", "TFIDF"):
         raise ValueError(f"{metric} is not a valid metric")  # metric.go:30-37
-    if "df" in q_occurrences.columns:
-        # caller pre-attached per-term df (a bounded driver-side lookup —
-        # e.g. harness._occ_with_df): the global-term join and its
-        # broadcast-build job are skipped; absent terms were dropped when
-        # the df was attached, matching the inner join's semantics
+    if df_attached:
         qt = q_occurrences
     else:
         # global-term lookup: inner join drops absent terms (search.go:29-46)
-        qt = q_occurrences.join(terms.select("term", "df"), "term")
+        qt = q_occurrences.drop("df").join(terms.select("term", "df"), "term")
 
     part = score_expr(metric, n_docs, adl)
     if "weight" in q_occurrences.columns:
@@ -202,6 +209,7 @@ def hit_stats(
     tie_round: int | None = None,
     deletes: DataFrame | None = None,
     doc_filter: DataFrame | None = None,
+    df_attached: bool = False,
 ) -> DataFrame:
     """Total-hits response header (Lucene TotalHitCountCollector / ES
     `hits.total` + `max_score`): per query the exact candidate count and
@@ -209,11 +217,13 @@ def hit_stats(
     aggregation over the scored candidates — queries matching nothing
     produce no row (there is no count to report).
 
+    df_attached: see scored_candidates.
+
     Returns (query_id, n_hits, max_score)."""
     per_doc = scored_candidates(
         postings, terms, q_occurrences, n_docs, adl, metric=metric,
         conjunctive=conjunctive, id_col=id_col, deletes=deletes,
-        doc_filter=doc_filter,
+        doc_filter=doc_filter, df_attached=df_attached,
     )
     score = order_key(tie_round)
     return per_doc.groupBy("query_id").agg(

@@ -7,6 +7,18 @@ spark-submit conf; the interesting ones for this engine:
   - Arrow on (every per-row stage is a vectorized pandas UDF)
   - shuffle partitions sized to cores locally; on a real cluster this is
     set to ~2-3x total executor cores by the launcher (cli.py)
+  - JVM case mapping for lower()/upper()
+    (spark.sql.icu.caseMappings.enabled=false, always set).  Spark 4
+    defaults to ICU case mappings, and the first lower() in a JVM then
+    loads ICU's case-mapping data: 2.1-2.2 s for the first lower() over
+    5,000 docs on a 4-vCPU host, against 0.44-0.48 s with the JVM
+    mapping (a second lower() takes 0.2-0.3 s either way).  The JVM
+    mapping is the one Spark 3.x used.  ASCII lowercases identically
+    under both.  Over all 1,112,064 non-surrogate code points the two
+    differ on 67, every one a capital letter newer than the JVM's
+    Unicode tables, which the JVM mapping leaves as is; final sigma,
+    dotted capital I and capital sharp s agree (pinned in
+    tests/test_text.py).
 """
 
 from __future__ import annotations
@@ -55,6 +67,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        .config("spark.sql.icu.caseMappings.enabled", "false")
     )
     local_dir = os.environ.get("PULSE_SPARK_LOCAL_DIR")
     if local_dir:

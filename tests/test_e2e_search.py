@@ -308,3 +308,41 @@ def test_pagination_is_continuation_of_page_one(spark, spark_index):
     full = bounded_topk(per_doc, 2 * k, "doc_id").collect()
     assert sorted((r["rank"], r["doc_id"]) for r in p1 + p2) == \
         sorted((r["rank"], r["doc_id"]) for r in full)
+
+
+def test_scored_candidates_df_column_needs_flag(spark, spark_index):
+    """An occurrences frame that happens to carry a `df` column is scored
+    with the TERMS table's df unless the caller says the df is attached
+    (df_attached=True, the harness's driver-side lookup)."""
+    from pyspark.sql import functions as F
+
+    from pulse_spark.query.search import scored_candidates
+
+    idx = spark_index
+    rows = idx.terms.orderBy(F.desc("df"), "term").limit(3).collect()
+    occ = spark.createDataFrame(
+        [(0, i, r["term"]) for i, r in enumerate(rows)],
+        "query_id long, pos int, term string",
+    )
+    # a df unrelated to the corpus: 1 for every term
+    occ_junk_df = occ.withColumn("df", F.lit(1).cast("long"))
+    occ_true_df = spark.createDataFrame(
+        [(0, i, r["term"], int(r["df"])) for i, r in enumerate(rows)],
+        "query_id long, pos int, term string, df long",
+    )
+
+    def scores(q, **kw):
+        return sorted(
+            (r["doc_id"], round(r["score"], 9))
+            for r in scored_candidates(
+                idx.postings, idx.terms, q, idx.n_docs, idx.adl,
+                id_col="doc_id", **kw,
+            ).collect()
+        )
+
+    want = scores(occ)
+    assert want
+    assert scores(occ_junk_df) == want
+    assert scores(occ_true_df, df_attached=True) == want
+    # the flag really does take the attached df as given
+    assert scores(occ_junk_df, df_attached=True) != want

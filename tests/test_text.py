@@ -119,3 +119,33 @@ def test_doc_length_bytes_of_trimmed():
     assert doc_length("  hello ") == 5
     assert doc_length("café") == 5  # é is 2 bytes in UTF-8
     assert doc_length(" \t\n") == 0
+
+
+def test_case_mapping_is_pinned(spark):
+    """get_spark pins lowercasing to the JVM case mapping
+    (spark.sql.icu.caseMappings.enabled=false) and the dedup / text-stats
+    normalizations give these exact strings — a change of the conf or of
+    Spark's default shows up here, not as silently different results."""
+    from pyspark.sql import functions as F
+
+    from pulse_spark.datapipe.dedup import normalized_text
+    from pulse_spark.datapipe.textstats import ws_tokens
+
+    assert spark.conf.get("spark.sql.icu.caseMappings.enabled") == "false"
+    df = spark.createDataFrame(
+        [(1, "ΟΔΟΣ"), (2, "İstanbul"), (3, "ẞ"),
+         (4, "  Hello\tSpark  WORLD 42 ")],
+        "id long, text string",
+    )
+    got = {
+        r["id"]: (r["n"], list(r["t"]))
+        for r in df.select(
+            "id", normalized_text().alias("n"), ws_tokens(F.col("text")).alias("t")
+        ).collect()
+    }
+    assert got == {
+        1: ("οδος", ["οδος"]),                       # final sigma
+        2: ("i\u0307stanbul", ["i\u0307stanbul"]),  # i + combining dot
+        3: ("ß", ["ß"]),
+        4: ("hello spark world 42", ["hello", "spark", "world", "42"]),
+    }
