@@ -128,7 +128,7 @@ def cmd_search(args) -> int:
 
     spark = _spark(args)
     from pulse_spark.index.persist import load_index
-    from pulse_spark.query.search import search_topk
+    from pulse_spark.query.search import search_topk, with_doc_no
 
     idx = load_index(spark, args.index)
 
@@ -136,19 +136,12 @@ def cmd_search(args) -> int:
         if args.segments:
             # compressed block-max path (segments.py); doc_no recovered
             # from the docs table for TREC output
-            from pyspark.sql import functions as F
-
             from pulse_spark.index.segments import search_segments
 
             res = search_segments(spark, idx, qdf, k=args.k,
                                   metric=args.metric,
                                   conjunctive=args.conjunctive)
-            return (
-                idx.docs.select("doc_id", "doc_no")
-                .join(F.broadcast(res), "doc_id")
-                .select("query_id", "rank", "doc_no", "score")
-                .collect()
-            )
+            return with_doc_no(idx, res).collect()
         return search_topk(idx, qdf, k=args.k, metric=args.metric,
                            conjunctive=args.conjunctive).collect()
 

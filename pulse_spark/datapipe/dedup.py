@@ -443,7 +443,9 @@ def ngram_jaccard_pairs(
 
 @F.pandas_udf(T.LongType())
 def simhash64(texts: pd.Series) -> pd.Series:
-    """64-bit SimHash over whitespace tokens weighted by tf.
+    """64-bit SimHash over the space-separated tokens of normalized_text
+    (the JVM normalization every dedup operator shares, so SimHash and
+    MinHash see the same tokens), weighted by tf.
 
     Fully vectorized per Arrow batch: factorize the batch's token
     occurrences, md5 only the DISTINCT tokens into a (V, 64) ±1 bit-vote
@@ -455,7 +457,7 @@ def simhash64(texts: pd.Series) -> pd.Series:
     import hashlib
 
     n = len(texts)
-    tok_lists = [s.lower().split() if s else [] for s in texts]
+    tok_lists = [[t for t in s.split(" ") if t] if s else [] for s in texts]
     counts = [len(t) for t in tok_lists]
     if not any(counts):
         return pd.Series(np.zeros(n, dtype=np.int64))
@@ -479,7 +481,8 @@ def simhash64(texts: pd.Series) -> pd.Series:
 
 def simhash_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return docs.select(
-        F.col(id_col).cast("long").alias(id_col), simhash64(F.col("text")).alias("simhash")
+        F.col(id_col).cast("long").alias(id_col),
+        simhash64(normalized_text()).alias("simhash"),
     )
 
 

@@ -139,7 +139,15 @@ def _footer_row_counts(path: str) -> dict[str, int]:
 
 
 def read_stage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(out_dir, stage))
+    df = spark.read.parquet(os.path.join(out_dir, stage))
+    if stage == "postings" and "doc_id" not in df.columns:
+        # every reader (search, merge, vacuum, resume) joins postings on
+        # the dense doc_id; an older doc_no-keyed index must not be read
+        raise ValueError(
+            f"{out_dir}: postings have no doc_id column (an index built "
+            "with doc_no-keyed postings); rebuild the index"
+        )
+    return df
 
 
 def check_settings(manifest: dict, settings: IndexingSettings) -> None:

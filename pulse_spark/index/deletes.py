@@ -58,12 +58,9 @@ def delete_docs(spark: SparkSession, out_dir: str, doc_nos) -> int:
             [(str(d),) for d in doc_nos], "doc_no string"
         )
     docs = ckpt.read_stage(spark, out_dir, "docs")
-    cols = ["doc_no", "doc_id"] if "doc_id" in docs.columns else ["doc_no"]
-    resolved = docs.select(*cols).join(
+    resolved = docs.select("doc_no", "doc_id").join(
         F.broadcast(doc_nos.select("doc_no").distinct()), "doc_no"
     )
-    if "doc_id" not in resolved.columns:
-        resolved = resolved.withColumn("doc_id", F.lit(None).cast("long"))
     n = resolved.count()
     if n:
         import uuid
@@ -97,9 +94,7 @@ def deleted_id_array(out_dir: str) -> np.ndarray | None:
         t = pq.read_table(d, columns=["doc_id"])
     except FileNotFoundError:
         return None
-    ids = t["doc_id"].to_numpy(zero_copy_only=False)
-    ids = ids[~np.isnan(ids)] if ids.dtype.kind == "f" else ids
-    return np.unique(ids.astype(np.int64))
+    return np.unique(t["doc_id"].to_numpy(zero_copy_only=False).astype(np.int64))
 
 
 def vacuum_index(spark: SparkSession, in_dir: str, out_dir: str,
@@ -128,46 +123,37 @@ def vacuum_index(spark: SparkSession, in_dir: str, out_dir: str,
     if dels is not None:
         docs = docs.join(dels.select("doc_no"), "doc_no", "left_anti")
 
-    has_ids = "doc_id" in docs.columns
-    id_map = None
-    parted = None
-    if has_ids:
-        # dense re-rank over the survivors: same deterministic key as the
-        # builder (rank of (conv_id, turn_idx)), so a vacuumed index is
-        # bit-compatible with a fresh build over the surviving corpus.
-        # assign_doc_ids is the builder's range-partitioned two-phase
-        # numbering (no global window — the 10^12-doc-safe path); the
-        # id_map rows carry only ids + the 2-column key, never text.
-        npart = num_doc_partitions or spark.sparkContext.defaultParallelism
-        mapped, parted = B.assign_doc_ids(
-            spark,
-            docs.select(F.col("doc_id").alias("_old_id"),
-                        "conv_id", "turn_idx"),
-            npart,
-        )
-        id_map = mapped.select("_old_id", "doc_id")
-        docs = (
-            docs.withColumnRenamed("doc_id", "_old_id")
+    # dense re-rank over the survivors: same deterministic key as the
+    # builder (rank of (conv_id, turn_idx)), so a vacuumed index is
+    # bit-compatible with a fresh build over the surviving corpus.
+    # assign_doc_ids is the builder's range-partitioned two-phase
+    # numbering (no global window — the 10^12-doc-safe path); the id_map
+    # rows carry only ids + the 2-column key, never text.
+    npart = num_doc_partitions or spark.sparkContext.defaultParallelism
+    mapped, parted = B.assign_doc_ids(
+        spark,
+        docs.select(F.col("doc_id").alias("_old_id"), "conv_id", "turn_idx"),
+        npart,
+    )
+    id_map = mapped.select("_old_id", "doc_id")
+
+    def _reid(df):
+        return (
+            df.withColumnRenamed("doc_id", "_old_id")
             .join(id_map, "_old_id")
             .drop("_old_id")
         )
-    docs = ckpt.commit_stage(out_dir, manifest, "docs", docs)
+
+    docs = ckpt.commit_stage(out_dir, manifest, "docs", _reid(docs))
 
     postings = ckpt.read_stage(spark, in_dir, "postings")
     if dels is not None:
-        key = "doc_id" if "doc_id" in postings.columns else "doc_no"
-        postings = postings.join(dels.select(key).distinct(), key, "left_anti")
-    if "doc_id" in postings.columns and id_map is not None:
-        postings = (
-            postings.withColumnRenamed("doc_id", "_old_id")
-            .join(id_map, "_old_id")
-            .drop("_old_id")
+        postings = postings.join(
+            dels.select("doc_id").distinct(), "doc_id", "left_anti"
         )
-    id_col = "doc_id" if "doc_id" in postings.columns else "doc_no"
-    wall = write_postings(postings, out_dir, settings, id_col)
+    wall = write_postings(_reid(postings), out_dir, settings)
     postings = ckpt.record_stage(spark, out_dir, manifest, "postings", wall)
-    if parted is not None:
-        parted.unpersist()
+    parted.unpersist()
 
     terms = ckpt.commit_stage(out_dir, manifest, "terms", B.terms_df(postings))
 
@@ -175,7 +161,7 @@ def vacuum_index(spark: SparkSession, in_dir: str, out_dir: str,
     n_docs, adl = int(row["n_docs"]), float(row["adl"])
     write_stats(spark, out_dir, manifest, n_docs, adl)
 
-    if had_segments and has_ids:
+    if had_segments:
         from pulse_spark.index import segments as seg
 
         seg.build_segments(spark, out_dir, manifest, postings, settings,

@@ -67,6 +67,12 @@ def merge_indexes(
                       check_disjoint=check_disjoint)
 
 
+def _shift(df, off: int):
+    """df with its doc_ids moved up by off — input i's place in the
+    merged id space (docs, postings and tombstones alike)."""
+    return df.withColumn("doc_id", F.col("doc_id") + F.lit(off)) if off else df
+
+
 def _spans_disjoint(spans: list[tuple]) -> bool:
     """True iff every input's [min,max] doc_no interval is disjoint from
     every other's — a PROOF of doc_no disjointness that costs one
@@ -143,13 +149,10 @@ def merge_many(
     for d, df in zip(in_dirs, docs_in):
         if sorted(df.columns) != sorted(docs_in[0].columns):
             raise ValueError(
-                "docs schema mismatch (e.g. one side built with assign_ids/"
-                f"store_text and the other not): {sorted(docs_in[0].columns)}"
+                "docs schema mismatch (e.g. one side built with store_text "
+                f"and the other not): {sorted(docs_in[0].columns)}"
                 f" != {sorted(df.columns)} ({d})"
             )
-    has_ids = "doc_id" in docs_in[0].columns
-    if do_segments and not has_ids:
-        raise ValueError("segment merge needs dense doc_ids on all inputs")
 
     if check_disjoint:
         # cheap exact pre-pass: per-input (min,max) doc_no is a
@@ -191,38 +194,18 @@ def merge_many(
     manifest["merged_from"] = [os.path.abspath(d) for d in in_dirs]
     ckpt.save_manifest(out_dir, manifest)
 
-    def _shift(df, off):
-        return (
-            df.withColumn("doc_id", F.col("doc_id") + F.lit(off))
-            if has_ids and off else df
-        )
-
-    docs_u = _shift(docs_in[0], 0)
+    docs_u = docs_in[0]
     for df, off in zip(docs_in[1:], offsets[1:]):
         docs_u = docs_u.unionByName(_shift(df, off))
     docs = ckpt.commit_stage(out_dir, manifest, "docs", docs_u)
 
     posts_in = [ckpt.read_stage(spark, d, "postings") for d in in_dirs]
-    for d, df in zip(in_dirs, posts_in):
-        if sorted(df.columns) != sorted(posts_in[0].columns):
-            raise ValueError(
-                f"postings schema mismatch: {sorted(posts_in[0].columns)} != "
-                f"{sorted(df.columns)} ({d})"
-            )
-    id_col = "doc_id" if "doc_id" in posts_in[0].columns else "doc_no"
-
-    def _shift_p(df, off):
-        return (
-            df.withColumn("doc_id", F.col("doc_id") + F.lit(off))
-            if id_col == "doc_id" and off else df
-        )
-
     posts_u = posts_in[0]
     for df, off in zip(posts_in[1:], offsets[1:]):
-        posts_u = posts_u.unionByName(_shift_p(df, off))
+        posts_u = posts_u.unionByName(_shift(df, off))
     postings = ckpt.commit_stage(
         out_dir, manifest, "postings", posts_u,
-        partition_by=["bucket"], sort_within=["term", id_col],
+        partition_by=["bucket"], sort_within=["term", "doc_id"],
     )
 
     terms_u = ckpt.read_stage(spark, in_dirs[0], "terms")
@@ -302,8 +285,7 @@ def _merge_tombstones(spark, in_dirs, offsets, out_dir):
         dels = load_deletes(spark, d)
         if dels is None:
             continue
-        # null doc_id (a no-dense-ids build) stays null under the shift
-        parts.append(dels.withColumn("doc_id", F.col("doc_id") + F.lit(off)))
+        parts.append(_shift(dels, off))
     if not parts:
         return
     merged = parts[0]

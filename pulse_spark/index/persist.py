@@ -3,15 +3,15 @@
 Layout (out_dir):
   manifest.json                 settings + stage lineage (checkpoint.py)
   docs/                         (doc_no, conv_id, turn_idx, doc_len
-                                 [, text when settings.store_text]
-                                 [, doc_id when assign_ids])
-  postings/bucket=B/            (term, <id>, tf, doc_len) where <id> is
-                                the 8-byte doc_id when assign_ids=True
-                                (slim layout — no doc_no string on the
-                                wire) else the doc_no string; sorted by
-                                (term, <id>) within files → parquet
+                                 [, text when settings.store_text],
+                                 doc_id)
+  postings/bucket=B/            (term, doc_id, tf, doc_len): keyed on the
+                                dense 8-byte doc_id, never the doc_no
+                                string (doc_no is joined back over the
+                                k·q winners, document.go:47-61); sorted
+                                by (term, doc_id) within files → parquet
                                 row-group min/max prune on term.  Written
-                                only by write_postings: hash(<id>) into
+                                only by write_postings: hash(doc_id) into
                                 max(shuffle.partitions, salt_partitions)
                                 reducers, each writing one file per bucket
   terms/                        (term, df, max_tf)
@@ -48,10 +48,8 @@ def _fingerprint_metrics():
     )
 
 
-def write_postings(
-    p: DataFrame, out_dir: str, settings: IndexingSettings, id_col: str
-) -> float:
-    """Write the postings stage layout from (term, <id_col>, tf, doc_len)
+def write_postings(p: DataFrame, out_dir: str, settings: IndexingSettings) -> float:
+    """Write the postings stage layout from (term, doc_id, tf, doc_len)
     rows — the one writer of it (batch build, stream compaction, vacuum).
     Records nothing; returns wall seconds.
 
@@ -69,10 +67,10 @@ def write_postings(
         int(p.sparkSession.conf.get("spark.sql.shuffle.partitions")),
         settings.salt_partitions,
     )
-    key = id_col if settings.salt_partitions > 1 else "bucket"
+    key = "doc_id" if settings.salt_partitions > 1 else "bucket"
     p = B.with_term_bucket(p, settings.term_buckets).repartition(n_reducers, key)
     return ckpt.write_stage(
-        p, out_dir, "postings", partition_by=["bucket"], sort_within=["term", id_col]
+        p, out_dir, "postings", partition_by=["bucket"], sort_within=["term", "doc_id"]
     )
 
 
@@ -119,21 +117,14 @@ def build_persisted_index(
     settings: IndexingSettings = IndexingSettings(),
     num_doc_partitions: int | None = None,
     build_segments: bool = False,
-    assign_ids: bool | None = None,
 ) -> Index:
     """Stage-checkpointed build; resumable — completed stages are skipped.
 
-    assign_ids: dense deterministic doc_ids (rank of (conv_id, turn_idx)).
-    Needed only by the compressed-segments layout (delta-varint wants
-    ints); the DataFrame query path keys on doc_no, like the reference's
-    doc numbers.  Defaults to build_segments — skipping it removes a
-    range-sample pass, a full-corpus shuffle, and a count job from the
-    build's critical path.
+    Every doc gets a dense deterministic doc_id (rank of (conv_id,
+    turn_idx)), the one key of the postings stage and of the segments'
+    delta-varint id lists — the reference's docID array
+    (inverseindex.Document: O(1) lookup by id).
     """
-    if assign_ids is None:
-        assign_ids = build_segments
-    if build_segments and not assign_ids:
-        raise ValueError("segments need dense doc_ids (assign_ids=True)")
     manifest = ckpt.load_manifest(out_dir)
     ckpt.check_settings(manifest, settings)
     ckpt.save_manifest(out_dir, manifest)
@@ -150,7 +141,7 @@ def build_persisted_index(
     # the committed text back.
     d_full = B.docs_df(transcripts)
     cached = None
-    if assign_ids and (do_docs or do_postings):
+    if do_docs or do_postings:
         d_full, cached = B.assign_doc_ids(spark, d_full, npart)
 
     # stage: docs.  With store_text=False this is METADATA ONLY — the
@@ -162,8 +153,7 @@ def build_persisted_index(
         meta_cols = ["doc_no", "conv_id", "turn_idx", "doc_len"]
         if settings.store_text:
             meta_cols.insert(3, "text")
-        if assign_ids:
-            meta_cols.append("doc_id")
+        meta_cols.append("doc_id")
         d_write = d_full.select(*meta_cols)
         # stats (N, ADL) + the INPUT FINGERPRINT ride the docs WRITE as
         # accumulator metrics — zero extra jobs, zero extra scans
@@ -204,11 +194,10 @@ def build_persisted_index(
     # stage: postings, hash-bucketed by term, term-sorted within files
     if do_postings:
         # doc_id rides through the tokenizer — no join back to docs, so
-        # the only shuffle here is the bucket layout one.  With dense ids
-        # the posting row carries ONLY the 8-byte id (doc_no is recovered
-        # at output time from the docs table): at 10^12 turns the doc_no
-        # string would dominate shuffle/storage bytes.
-        id_col = "doc_id" if assign_ids else "doc_no"
+        # the only shuffle here is the bucket layout one.  The posting row
+        # carries ONLY the 8-byte id (doc_no is recovered at output time
+        # from the docs table): at 10^12 turns the doc_no string would
+        # dominate shuffle/storage bytes.
         # RESUME GUARD: when the docs stage is committed but postings are
         # not, the postings rows are recomputed from the source — observe
         # the recomputed per-doc plan and refuse to record the stage if
@@ -224,11 +213,11 @@ def build_persisted_index(
 
             fp_obs = Observation("resume_fp")
             d_postings_src = d_full.observe(fp_obs, *_fingerprint_metrics())
-        p = B.postings_df(d_postings_src, settings, id_col=id_col)
+        p = B.postings_df(d_postings_src, settings, id_col="doc_id")
         # write first, verify the fingerprint, THEN record: on mismatch
         # the stage is never marked committed (the partial files are
         # overwritten by the next attempt)
-        wall = write_postings(p, out_dir, settings, id_col)
+        wall = write_postings(p, out_dir, settings)
         if fp_obs is not None:
             m = fp_obs.get
             got = {

@@ -22,7 +22,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pulse_spark.query.search import score_expr, topk_from_tables
+from pulse_spark.query.search import (
+    prepare_query_scan,
+    score_expr,
+    topk_from_tables,
+    with_doc_no,
+)
 
 _OUT_COLS = (
     "query_id", "rank", "doc_no", "score", "term", "tf", "df",
@@ -86,15 +91,14 @@ def explain_search(index, queries: DataFrame, k: int = 10,
                    max_driver_queries: int = 10_000) -> DataFrame:
     """Index-level explain: the shared prepare_query_scan front half
     (driver-side tokenize with distributed fallback, bucket/term scan
-    pruning, slim-layout id detection — identical to search_topk), then
-    the per-term breakdown instead of the bare ranked list.
+    pruning — identical to search_topk), then the per-term breakdown
+    instead of the bare ranked list, mapped back to doc_no.
 
     queries: (query_id, text).  Returns one row per (query, winning
     doc, matched term): (query_id, rank, doc_no, score, term, tf, df,
     occurrences, idf, term_score)."""
     spark = queries.sparkSession
     from pulse_spark.index.deletes import load_deletes
-    from pulse_spark.query.search import prepare_query_scan
 
     qt, postings, id_col = prepare_query_scan(
         index, queries, max_driver_queries=max_driver_queries
@@ -110,10 +114,4 @@ def explain_search(index, queries: DataFrame, k: int = 10,
         metric=metric, id_col=id_col,
         deletes=load_deletes(spark, index.out_dir),
     )
-    if id_col == "doc_id":
-        res = (
-            index.docs.select("doc_id", "doc_no")
-            .join(F.broadcast(res), "doc_id")
-            .select(*_OUT_COLS)
-        )
-    return res
+    return with_doc_no(index, res, _OUT_COLS)

@@ -18,8 +18,9 @@ Scale notes (the part that must survive 100 TB):
     (search.go:89-117).
   - The per-occurrence query-term table is broadcast; the big side never
     shuffles before aggregation.
-  - groupBy(query_id, doc_no) uses partial aggregation; the final top-k
-    window sees only the per-query survivor sets.
+  - groupBy(query_id, doc_id) uses partial aggregation; the final top-k
+    window sees only the per-query survivor sets; doc_no is joined back
+    over the k·q winners only (with_doc_no).
 
 Semantics pinned to the reference:
   - duplicate query tokens score once PER OCCURRENCE (search.go:30-46
@@ -29,7 +30,8 @@ Semantics pinned to the reference:
     138-141);
   - BM25 k1=1.3 b=0.5, natural log, global df, doc_len in bytes
     (metric.go:18-19, search.go:174-187);
-  - tie-break (score desc, doc_no asc) — the reference's heap order is
+  - tie-break (score desc, doc_id asc) on a committed index, i.e.
+    (conv_id, turn_idx) order — the reference's heap order is
     unspecified; tests compare equal-score groups.
 """
 
@@ -297,6 +299,20 @@ def bounded_topk(
     )
 
 
+def with_doc_no(
+    index: Index, results: DataFrame,
+    cols: tuple[str, ...] = ("query_id", "rank", "doc_no", "score"),
+) -> DataFrame:
+    """Map the k·q winners' doc_id back to doc_no (inverseindex.Document's
+    O(1) id lookup, document.go:47-61): broadcast of the tiny result
+    side, the docs table never shuffles.  Returns `cols`."""
+    return (
+        index.docs.select("doc_id", "doc_no")
+        .join(F.broadcast(results), "doc_id")
+        .select(*cols)
+    )
+
+
 def with_doc_metadata(index: Index, results: DataFrame) -> DataFrame:
     """Q11 (doc metadata fetch, inverseindex/document.go:47-61): join the
     k·q winning doc_nos back to the docs table — broadcast of the tiny
@@ -314,16 +330,15 @@ def prepare_query_scan(
 ):
     """Shared front half of every index-level query path (search_topk,
     explain_search): driver-side tokenization with the index's persisted
-    settings (distributed pandas-UDF fallback past max_driver_queries),
-    bucket + term literal pruning of the postings scan, and slim-layout
-    id-column detection.
+    settings (distributed pandas-UDF fallback past max_driver_queries)
+    and bucket + term literal pruning of the postings scan.
 
     Returns (qt, postings, id_col); qt is None when the query set
     tokenizes to nothing (callers return their empty frame).  qt is the
     (query_id, pos, term) occurrence table; postings is index.postings
-    term/bucket-pruned (when prune_scan); id_col is "doc_no" or — under
-    the slim doc_id-only layout — "doc_id" (the caller joins doc_no back
-    over the k·q winners, document.go:47-61).
+    term/bucket-pruned (when prune_scan); id_col is the postings key,
+    "doc_id", for the id-generic scorers (the caller maps the k·q
+    winners back to doc_no with with_doc_no).
     """
     spark = queries.sparkSession
     head = queries.limit(max_driver_queries + 1).collect()
@@ -352,19 +367,17 @@ def prepare_query_scan(
             q_terms = [r["term"] for r in qt.select("term").distinct().collect()]
         if not q_terms:
             return None, None, None
-        if "bucket" in postings.columns:
-            # driver-side bucket hashes (pure-Python XXH64, bit-identical
-            # to F.xxhash64 — tests/test_xxhash.py): zero Spark jobs
-            from pulse_spark.compression.xxhash64 import term_bucket
+        # driver-side bucket hashes (pure-Python XXH64, bit-identical to
+        # F.xxhash64 — tests/test_xxhash.py): zero Spark jobs
+        from pulse_spark.compression.xxhash64 import term_bucket
 
-            buckets = sorted({
-                term_bucket(t, index.settings.term_buckets) for t in q_terms
-            })
-            postings = postings.where(F.col("bucket").isin(buckets))
+        buckets = sorted({
+            term_bucket(t, index.settings.term_buckets) for t in q_terms
+        })
+        postings = postings.where(F.col("bucket").isin(buckets))
         postings = postings.where(F.col("term").isin(q_terms))
 
-    id_col = "doc_no" if "doc_no" in postings.columns else "doc_id"
-    return qt, postings, id_col
+    return qt, postings, "doc_id"
 
 
 def search_topk(
@@ -383,9 +396,8 @@ def search_topk(
     doc_filter: optional DataFrame with a doc_no column — restrict
     results to these docs (e.g. index.docs.where(conv-predicate)
     .select("doc_no")); global df/adl statistics stay corpus-wide (see
-    topk_from_tables).  Under the slim doc_id-only postings layout the
-    filter is translated to internal ids by one semi-join against the
-    docs table before scoring.
+    topk_from_tables).  The filter is translated to the postings' doc_ids
+    by one semi-join against the docs table before scoring.
 
     Latency plan: a query set is small by contract (the reference loads
     its whole TSV in memory, query.go:19-51), so queries are tokenized
@@ -411,7 +423,7 @@ def search_topk(
     from pulse_spark.index.deletes import load_deletes
 
     dels = load_deletes(spark, index.out_dir)
-    if doc_filter is not None and id_col == "doc_id":
+    if doc_filter is not None:
         doc_filter = index.docs.join(
             doc_filter.select("doc_no"), "doc_no", "left_semi"
         ).select("doc_id")
@@ -420,10 +432,4 @@ def search_topk(
         k=k, metric=metric, conjunctive=conjunctive, id_col=id_col,
         deletes=dels, doc_filter=doc_filter,
     )
-    if id_col == "doc_id":
-        res = (
-            index.docs.select("doc_id", "doc_no")
-            .join(F.broadcast(res), "doc_id")
-            .select("query_id", "rank", "doc_no", "score")
-        )
-    return res
+    return with_doc_no(index, res)

@@ -3,9 +3,9 @@
 The reference is batch-only (SURVEY §2.6); this module extends the engine
 the Spark-native way: transcripts arriving in a directory (stand-in for
 Kafka/Iceberg CDC) are tokenized per micro-batch and appended as posting
-DELTAS; the global term table / stats are cheap re-aggregations over the
-deltas at finalize (or on a schedule — the classic "segment + merge"
-search-engine pattern, which is also exactly SPIMI's dump-then-merge
+DELTAS; compact_stream_index turns the deltas into a committed index
+(on a schedule — the classic "segment + merge" search-engine pattern,
+which is also exactly SPIMI's dump-then-merge
 (pkg/spimi/spimi.go:44-90,123-228) reborn as streaming micro-batches).
 
 Each micro-batch writes an idempotent parquet append keyed by batch_id
@@ -83,21 +83,6 @@ def start_incremental_build(
     return writer.start()
 
 
-def finalize_stream_index(spark: SparkSession, out_dir: str, settings: IndexingSettings):
-    """Merge deltas into a queryable Index (terms/stats re-aggregated —
-    the 'merge' half of SPIMI, one shuffle)."""
-    from pulse_spark.index.persist import Index
-
-    docs = spark.read.parquet(os.path.join(out_dir, "docs_delta"))
-    postings = spark.read.parquet(os.path.join(out_dir, "postings_delta"))
-    terms = B.terms_df(postings)
-    row = B.stats_df(docs).collect()[0]
-    return Index(
-        out_dir=out_dir, settings=settings, docs=docs, postings=postings,
-        terms=terms, n_docs=int(row["n_docs"]), adl=float(row["adl"]),
-    )
-
-
 def streaming_hourly_counts(spark: SparkSession, input_dir: str, watermark: str = "2 hours"):
     """Watermarked tumbling-window aggregation over an event stream —
     the streaming form of datapipe.events.hourly_counts."""
@@ -128,18 +113,19 @@ def compact_stream_index(
 ):
     """Compact accumulated micro-batch deltas into a COMMITTED index —
     the terminal "merge" of the streaming SPIMI analogy, closing the
-    loop: stream all day into deltas, compact once into the
-    bucketed/sorted layout (+ compressed block segments), then serve it
-    via serve.PointServer or absorb it into the main corpus index with
-    index.merge.merge_indexes — all without ever re-tokenizing a turn
-    (the deltas already hold posting rows; the only per-token work
-    happened in the micro-batches).
+    loop: stream all day into deltas, compact once into the same
+    doc_id-keyed, bucketed/sorted layout a batch build commits (+
+    compressed block segments unless build_segments=False), then query
+    it with search_topk, serve it via serve.PointServer or absorb it into
+    the main corpus index with index.merge.merge_indexes — all without
+    ever re-tokenizing a turn (the deltas already hold posting rows; the
+    only per-token work happened in the micro-batches).
 
     Shuffle profile: doc_id assignment (range partition on the stable
     key), one doc_no->doc_id equi-join of the posting deltas (no
     broadcast assumption — AQE picks the strategy), the salted bucket
-    layout shuffle, and the segments range shuffle.  Token-linear Python:
-    none.
+    layout shuffle, and (with segments) the segments range shuffle.
+    Token-linear Python: none.
     """
     import json
 
@@ -173,31 +159,21 @@ def compact_stream_index(
     ckpt.check_settings(manifest, settings)
     ckpt.save_manifest(out_dir, manifest)
 
-    assign_ids = build_segments
-    d = docs_delta
-    cached = None
-    if assign_ids:
-        d, cached = B.assign_doc_ids(spark, d, npart)
+    d, cached = B.assign_doc_ids(spark, docs_delta, npart)
     meta_cols = ["doc_no", "conv_id", "turn_idx", "doc_len"]
     if settings.store_text:
         meta_cols.insert(3, "text")
-    if assign_ids:
-        meta_cols.append("doc_id")
+    meta_cols.append("doc_id")
     docs = ckpt.commit_stage(out_dir, manifest, "docs", d.select(*meta_cols))
 
-    p = postings_delta
-    id_col = "doc_no"
-    if assign_ids:
-        # deltas key postings by doc_no; map to the dense ids via ONE
-        # equi-join against the committed docs stage (never re-tokenize)
-        id_col = "doc_id"
-        p = (
-            p.join(docs.select("doc_no", "doc_id"), "doc_no")
-            .select("term", "doc_id", "doc_len", "tf")
-        )
+    # deltas key postings by doc_no; map to the dense ids via ONE
+    # equi-join against the committed docs stage (never re-tokenize)
+    p = (
+        postings_delta.join(docs.select("doc_no", "doc_id"), "doc_no")
+        .select("term", "doc_id", "doc_len", "tf")
+    )
     postings = ckpt.record_stage(
-        spark, out_dir, manifest, "postings",
-        write_postings(p, out_dir, settings, id_col),
+        spark, out_dir, manifest, "postings", write_postings(p, out_dir, settings)
     )
 
     terms = ckpt.commit_stage(out_dir, manifest, "terms", B.terms_df(postings))
@@ -205,8 +181,7 @@ def compact_stream_index(
     row = B.stats_df(docs).collect()[0]
     n_docs, adl = int(row["n_docs"]), float(row["adl"])
     write_stats(spark, out_dir, manifest, n_docs, adl)
-    if cached is not None:
-        cached.unpersist()
+    cached.unpersist()
 
     if build_segments:
         from pulse_spark.index import segments as seg

@@ -130,6 +130,35 @@ def test_simhash_locality(spark):
     assert hamming(sh[1], sh[4]) > hamming(sh[1], sh[3])
 
 
+def test_simhash_uses_jvm_normalized_tokens(spark):
+    r"""SimHash hashes the tokens of dedup.normalized_text split on " ",
+    the tokens MinHash sees: U+00A0 and \x1c (separators to Python's
+    str.split, not to Spark's \s) stay inside a token, and letters the
+    JVM case mapping leaves alone (U+10570) are not lowercased."""
+    import hashlib
+
+    from pulse_spark.datapipe.dedup import simhash_table
+
+    def ref(tokens):
+        acc = [0] * 64
+        for t in tokens:
+            h = int.from_bytes(hashlib.md5(t.encode()).digest()[:8], "big")
+            for i in range(64):
+                acc[i] += 1 if (h >> (63 - i)) & 1 else -1
+        v = sum(1 << (63 - i) for i in range(64) if acc[i] > 0)
+        return v - (1 << 64) if v >= 1 << 63 else v
+
+    rows = [
+        (1, "foo\u00a0bar baz", ["foo\u00a0bar", "baz"]),
+        (2, "  Foo\x1cBar \t BAZ  baz", ["foo\x1cbar", "baz", "baz"]),
+        (3, "\U00010570 Qux", ["\U00010570", "qux"]),
+        (4, " \t ", []),
+    ]
+    df = spark.createDataFrame([r[:2] for r in rows], "doc_id long, text string")
+    got = {r["doc_id"]: r["simhash"] for r in simhash_table(df).collect()}
+    assert got == {i: ref(toks) for i, _, toks in rows}
+
+
 def test_exact_dedup_finds_planted_duplicates(spark):
     from pulse_spark.datapipe.dedup import exact_dup_groups, minhash_lsh_pairs
 

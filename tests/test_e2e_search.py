@@ -26,8 +26,7 @@ def settings():
 def spark_index(spark, transcripts_path, settings, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("index") / "idx")
     transcripts = spark.read.parquet(transcripts_path)
-    # assign_ids=True exercises the dense doc_id path even without segments
-    return build_persisted_index(spark, transcripts, out, settings, assign_ids=True)
+    return build_persisted_index(spark, transcripts, out, settings)
 
 
 @pytest.fixture(scope="session")
@@ -274,6 +273,31 @@ def test_resume_refuses_changed_input(spark, transcripts_path, settings, tmp_pat
     assert idx2.n_docs == idx1.n_docs
     t2 = {r["term"]: (r["df"], r["max_tf"]) for r in idx2.terms.collect()}
     assert t2 == t1
+
+
+def test_doc_no_keyed_postings_are_refused(spark, transcripts_path, settings,
+                                          tmp_path):
+    """Postings keyed on the doc_no string (the layout of indexes built
+    before every index keyed its postings on the dense doc_id) are
+    refused when the index is opened, with a hint to rebuild."""
+    import os
+    import shutil
+
+    out = str(tmp_path / "idx")
+    idx = build_persisted_index(
+        spark, spark.read.parquet(transcripts_path), out, settings,
+        build_segments=True,
+    )
+    old = str(tmp_path / "old_postings")
+    (
+        idx.postings.join(idx.docs.select("doc_id", "doc_no"), "doc_id")
+        .select("term", "doc_no", "tf", "doc_len", "bucket")
+        .write.partitionBy("bucket").parquet(old)
+    )
+    shutil.rmtree(os.path.join(out, "postings"))
+    os.rename(old, os.path.join(out, "postings"))
+    with pytest.raises(ValueError, match="rebuild the index"):
+        load_index(spark, out)
 
 
 def test_pagination_is_continuation_of_page_one(spark, spark_index):

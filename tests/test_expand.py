@@ -176,7 +176,6 @@ def test_search_topk_doc_filter_on_committed_index(spark, transcripts_path,
     idx = build_persisted_index(
         spark, transcripts, out,
         IndexingSettings(stopwords_removal=True, stemming=False, term_buckets=8),
-        assign_ids=True,
     )
     from pulse_spark.fixtures import gen_queries
 

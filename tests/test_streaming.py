@@ -15,7 +15,7 @@ from pulse_spark.config import IndexingSettings
 from pulse_spark.fixtures import gen_transcripts
 from pulse_spark.query.search import search_topk
 from pulse_spark.streaming.incremental import (
-    finalize_stream_index,
+    compact_stream_index,
     start_incremental_build,
 )
 
@@ -44,12 +44,14 @@ def stream_dirs(tmp_path_factory):
     return str(src), str(d / "out"), rows
 
 
-def test_incremental_equals_batch(spark, stream_dirs):
+def test_incremental_equals_batch(spark, stream_dirs, tmp_path):
     src, out, rows = stream_dirs
     q = start_incremental_build(spark, src, out, SETTINGS)
     q.awaitTermination(120)
 
-    sidx = finalize_stream_index(spark, out, SETTINGS)
+    sidx = compact_stream_index(
+        spark, out, str(tmp_path / "c1"), SETTINGS, build_segments=False
+    )
     assert sidx.n_docs == len(rows)
 
     # batch build over the same data
@@ -75,7 +77,9 @@ def test_incremental_equals_batch(spark, stream_dirs):
     # resume idempotence: restarting the finished stream adds nothing
     q2 = start_incremental_build(spark, src, out, SETTINGS)
     q2.awaitTermination(60)
-    sidx2 = finalize_stream_index(spark, out, SETTINGS)
+    sidx2 = compact_stream_index(
+        spark, out, str(tmp_path / "c2"), SETTINGS, build_segments=False
+    )
     assert sidx2.n_docs == sidx.n_docs
     assert sidx2.postings.count() == sidx.postings.count()
 
