@@ -305,7 +305,6 @@ def cmd_stats(args) -> int:
         "index": os.path.abspath(args.index),
         "n_docs": int(stats["n_docs"]),
         "adl": round(float(stats["adl"]), 6),
-        "id_space": int(stats.get("id_space") or stats["n_docs"]),
         "n_terms": int(sum(
             pq.ParquetFile(os.path.join(r, x)).metadata.num_rows
             for r, _d, fs in os.walk(os.path.join(args.index, "terms"))

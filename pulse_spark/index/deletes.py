@@ -106,16 +106,16 @@ def vacuum_index(spark: SparkSession, in_dir: str, out_dir: str,
 
     from pulse_spark.config import IndexingSettings
     from pulse_spark.index import build as B
-    from pulse_spark.index.persist import Index, write_postings, write_stats
+    from pulse_spark.index.persist import finish_index, write_postings
 
     with open(os.path.join(in_dir, "manifest.json")) as f:
         src_manifest = json.load(f)
     settings = IndexingSettings.from_dict(src_manifest["settings"])
     had_segments = "segments" in src_manifest.get("stages", {})
 
-    manifest = ckpt.load_manifest(out_dir)
-    manifest["settings"] = settings.to_dict()
-    manifest["vacuumed_from"] = os.path.abspath(in_dir)
+    # a vacuum rewrites every stage: none of a prior run's is reused
+    manifest = {"settings": settings.to_dict(), "stages": {},
+                "vacuumed_from": os.path.abspath(in_dir)}
     ckpt.save_manifest(out_dir, manifest)
 
     dels = load_deletes(spark, in_dir)
@@ -154,18 +154,5 @@ def vacuum_index(spark: SparkSession, in_dir: str, out_dir: str,
     wall = write_postings(_reid(postings), out_dir, settings)
     postings = ckpt.record_stage(spark, out_dir, manifest, "postings", wall)
     parted.unpersist()
-
-    terms = ckpt.commit_stage(out_dir, manifest, "terms", B.terms_df(postings))
-
-    row = B.stats_df(docs).collect()[0]
-    n_docs, adl = int(row["n_docs"]), float(row["adl"])
-    write_stats(spark, out_dir, manifest, n_docs, adl)
-
-    if had_segments:
-        from pulse_spark.index import segments as seg
-
-        seg.build_segments(spark, out_dir, manifest, postings, settings,
-                           n_docs, adl)
-
-    return Index(out_dir=out_dir, settings=settings, docs=docs,
-                 postings=postings, terms=terms, n_docs=n_docs, adl=adl)
+    return finish_index(spark, out_dir, manifest, settings, docs, postings,
+                        segments=had_segments)

@@ -9,16 +9,18 @@ non-starter; merging committed indexes touches only index artifacts
 a union + aggregation — no tokenization, no per-token work at all.
 
 Mechanics (N-way; doc_nos must be disjoint across inputs; input i's
-doc_ids are shifted by the cumulative id_space of inputs 0..i-1):
+doc_ids are shifted by the cumulative n_docs of inputs 0..i-1, so merged
+ids stay dense and n_docs sizes every doc_id-indexed array):
 
   docs      union, input_i.doc_id += offset_i
-  postings  union, shifted; bucket values are identical on every side
-            (same term_buckets -> same xxhash64 bucketing), so the
-            merged layout keeps partition pruning with NO shuffle
-  terms     groupBy(term): df = sum, max_tf = max  (lexicon.go:37-42)
-  stats     n = Σ n_i, adl = weighted mean, fingerprint = xor-combine
-            (the input fingerprint is an order-independent xor, so merge
-            composes it exactly)
+  postings  union, shifted, written by persist.write_postings — the
+            build's writer, so a merged index has a fresh build's
+            postings file layout
+  terms     groupBy(term): df = sum, max_tf = max  (lexicon.go:37-42),
+            cheaper than re-aggregating the postings
+  stats     n = Σ n_i, adl = weighted mean, computed on the driver;
+            fingerprint = xor-combine (the input fingerprint is an
+            order-independent xor, so merge composes it exactly)
   deletes   tombstones (index/deletes.py) are CARRIED FORWARD: each
             input's (doc_no, doc_id) rows are doc_id-shifted by that
             input's offset and written into the output's deletes/ tree,
@@ -26,21 +28,17 @@ doc_ids are shifted by the cumulative id_space of inputs 0..i-1):
             (takedown safety — merging must never resurrect).  Live-docs
             semantics are preserved: merged N/ADL/df still count the
             tombstoned docs, exactly as they did in the input.
-  segments  ONE linear mapInPandas pass over the union of all sides'
-            blocks: each input's doc_ids are shifted and its blocks
-            re-split onto the FIRST input's doc_range grid (inputs may
-            have different range_size — np.searchsorted at the range
-            boundaries, no sorting); and per-block max_part is
-            RECOMPUTED for every block at the MERGED ADL.  The recompute
-            is a correctness requirement, not housekeeping: max_part is
-            increasing in ADL, so a bound stored against an input's own
-            (smaller) ADL understates scores under the merged ADL and
+  segments  rebuilt by segments.build_segments over the merged
+            postings, as a build does: the merged index gets a fresh
+            build's range grid (range_size from the merged n_docs), and
+            every block's max_part is computed at the merged ADL by
+            construction.  An input's stored bound would not do: max_part
+            is increasing in ADL, so a bound computed against an input's
+            own (smaller) ADL understates scores under the merged ADL and
             would make MaxScore pruning drop true top-k docs.
 
-doc_id offset = the cumulative id_space exactly (no padding), so merged
-ids stay dense; stats still records `id_space` explicitly so
-dense-accumulator consumers (serve.PointServer) never have to assume
-density.
+Terms, stats and segments are committed by persist.finish_index, the
+tail every index writer ends in.
 """
 
 from __future__ import annotations
@@ -52,7 +50,7 @@ from pyspark.sql import functions as F
 
 from pulse_spark.config import IndexingSettings
 from pulse_spark.index import checkpoint as ckpt
-from pulse_spark.index.persist import Index
+from pulse_spark.index.persist import Index, finish_index, write_postings
 
 
 def merge_indexes(
@@ -98,9 +96,8 @@ def merge_many(
     Requires identical IndexingSettings on all inputs (an index's
     preprocessing binds its query path — engine.go:38-43 — so merging
     differently-preprocessed indexes would corrupt semantics).  Segments
-    are merged iff ALL inputs have them; inputs may have DIFFERENT
-    range_size — every side's blocks are re-split onto the first input's
-    range grid (the module docstring's linear pass).
+    are built iff ALL inputs have them; the inputs' own segments are not
+    read (see the module docstring).
 
     check_disjoint: assert no doc_no occurs in two inputs (one count
     aggregation over the union of docs tables — cheap next to the
@@ -130,20 +127,12 @@ def merge_many(
         ckpt.read_stage(spark, d, "stats").collect()[0] for d in in_dirs
     ]
     n_i = [int(s["n_docs"]) for s in stats_rows]
-    # id_space (≥ n_docs when an input is itself a gap-carrying merge)
-    space_i = [
-        int(s["id_space"]) if "id_space" in s.asDict() else int(s["n_docs"])
-        for s in stats_rows
-    ]
     if any(n == 0 for n in n_i):
         raise ValueError("refusing to merge an empty index (nothing to do)")
     offsets = [0]
-    for sp in space_i[:-1]:
-        offsets.append(offsets[-1] + sp)
-    id_space = offsets[-1] + space_i[-1]
-
-    seg_meta = [m.get("stages", {}).get("segments") for m in manifests]
-    do_segments = all(s is not None for s in seg_meta)
+    for n in n_i[:-1]:
+        offsets.append(offsets[-1] + n)
+    do_segments = all("segments" in m["stages"] for m in manifests)
 
     docs_in = [ckpt.read_stage(spark, d, "docs") for d in in_dirs]
     for d, df in zip(in_dirs, docs_in):
@@ -189,9 +178,9 @@ def merge_many(
                 "merge requires disjoint corpora"
             )
 
-    manifest = ckpt.load_manifest(out_dir)
-    manifest["settings"] = settings.to_dict()
-    manifest["merged_from"] = [os.path.abspath(d) for d in in_dirs]
+    # a merge rewrites every stage: none of a prior run's is reused
+    manifest = {"settings": settings.to_dict(), "stages": {},
+                "merged_from": [os.path.abspath(d) for d in in_dirs]}
     ckpt.save_manifest(out_dir, manifest)
 
     docs_u = docs_in[0]
@@ -203,42 +192,18 @@ def merge_many(
     posts_u = posts_in[0]
     for df, off in zip(posts_in[1:], offsets[1:]):
         posts_u = posts_u.unionByName(_shift(df, off))
-    postings = ckpt.commit_stage(
-        out_dir, manifest, "postings", posts_u,
-        partition_by=["bucket"], sort_within=["term", "doc_id"],
-    )
+    postings = ckpt.record_stage(spark, out_dir, manifest, "postings",
+                                 write_postings(posts_u, out_dir, settings))
 
     terms_u = ckpt.read_stage(spark, in_dirs[0], "terms")
     for d in in_dirs[1:]:
         terms_u = terms_u.unionByName(ckpt.read_stage(spark, d, "terms"))
-    terms = ckpt.commit_stage(
-        out_dir, manifest, "terms",
-        terms_u.groupBy("term").agg(
-            F.sum("df").alias("df"), F.max("max_tf").alias("max_tf")
-        ),
+    terms = terms_u.groupBy("term").agg(
+        F.sum("df").alias("df"), F.max("max_tf").alias("max_tf")
     )
-
-    # stats: weighted-exact mean; fingerprint xor-composes when present
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
     n = sum(n_i)
     adl = sum(float(s["adl"]) * ni for s, ni in zip(stats_rows, n_i)) / n
-    t0 = _time.time()
-    stats_dir = os.path.join(out_dir, "stats")
-    os.makedirs(stats_dir, exist_ok=True)
-    pq.write_table(
-        pa.table({
-            "n_docs": pa.array([n], pa.int64()),
-            "adl": pa.array([adl], pa.float64()),
-            "id_space": pa.array([id_space], pa.int64()),
-        }),
-        os.path.join(stats_dir, "part-00000.parquet"),
-    )
-    ckpt.record_stage(spark, out_dir, manifest, "stats",
-                      round(_time.time() - t0, 3))
     fps = [m.get("input_fingerprint") for m in manifests]
     if all(fps):
         fp = {"rows": 0, "xor": 0}
@@ -249,14 +214,8 @@ def merge_many(
         ckpt.save_manifest(out_dir, manifest)
 
     _merge_tombstones(spark, in_dirs, offsets, out_dir)
-
-    if do_segments:
-        _merge_segments(spark, in_dirs, out_dir, manifest, settings,
-                        offsets, int(seg_meta[0]["range_size"]),
-                        id_space, adl)
-
-    return Index(out_dir=out_dir, settings=settings, docs=docs,
-                 postings=postings, terms=terms, n_docs=n, adl=adl)
+    return finish_index(spark, out_dir, manifest, settings, docs, postings,
+                        terms=terms, stats=(n, adl), segments=do_segments)
 
 
 def _merge_tombstones(spark, in_dirs, offsets, out_dir):
@@ -294,86 +253,3 @@ def _merge_tombstones(spark, in_dirs, offsets, out_dir):
     merged.write.mode("overwrite").parquet(
         os.path.join(out_deletes, "merged")
     )
-
-
-def _merge_segments(spark, in_dirs, out_dir, manifest, settings,
-                    offsets, range_size, id_space, adl):
-    """One linear pass over every side's blocks (see module docstring):
-    shift + re-split each input onto the first input's range grid,
-    recompute max_part everywhere at the merged ADL.  Embarrassingly
-    parallel; never sorts."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from pulse_spark.index.segments import (
-        SEGMENT_SCHEMA,
-        _encode_block,
-        decode_payload,
-    )
-
-    compress = settings.compression
-    rs = range_size
-
-    def make_pass(shift: int):
-        def blocks_pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import numpy as np
-
-            for pdf in batches:
-                out = []
-                for term, ids_bin, tfs_bin, lens_bin in zip(
-                    pdf["term"], pdf["doc_ids_bin"], pdf["tfs_bin"],
-                    pdf["doc_lens_bin"]
-                ):
-                    ids, tfs, lens = decode_payload(
-                        ids_bin, tfs_bin, lens_bin, compress
-                    )
-                    if shift:
-                        ids = ids + np.uint64(shift)
-                    # split at the merged range grid (ids are ascending)
-                    lo_r = int(ids[0]) // rs
-                    hi_r = int(ids[-1]) // rs
-                    if lo_r == hi_r:
-                        pieces = [(lo_r, slice(None))]
-                    else:
-                        bounds = np.searchsorted(
-                            ids, [np.uint64((r + 1) * rs)
-                                  for r in range(lo_r, hi_r)]
-                        )
-                        cuts = [0, *bounds.tolist(), len(ids)]
-                        pieces = [
-                            (lo_r + i, slice(cuts[i], cuts[i + 1]))
-                            for i in range(len(cuts) - 1)
-                            if cuts[i] < cuts[i + 1]
-                        ]
-                    for rng, sl in pieces:
-                        # _encode_block recomputes max_tf AND max_part at
-                        # the MERGED adl — the pruning-safety requirement
-                        out.append(_encode_block(
-                            term, rng, ids[sl], tfs[sl], lens[sl], adl,
-                            compress,
-                        ))
-                yield pd.DataFrame(
-                    out, columns=[f.name for f in SEGMENT_SCHEMA.fields]
-                )
-
-        return blocks_pass
-
-    from pulse_spark.index.segments import SEGMENT_ROW_GROUP_BYTES
-
-    cols = [f.name for f in SEGMENT_SCHEMA.fields]
-    union = None
-    for d, off in zip(in_dirs, offsets):
-        side = (
-            ckpt.read_stage(spark, d, "segments").select(*cols)
-            .mapInPandas(make_pass(off), SEGMENT_SCHEMA)
-        )
-        union = side if union is None else union.unionByName(side)
-    ckpt.commit_stage(
-        out_dir, manifest, "segments", union,
-        partition_by=["doc_range"], sort_within=["term", "min_doc_id"],
-        options={"parquet.block.size": str(SEGMENT_ROW_GROUP_BYTES)},
-    )
-    manifest["stages"]["segments"]["range_size"] = rs
-    manifest["stages"]["segments"]["n_ranges"] = -(-id_space // rs)
-    ckpt.save_manifest(out_dir, manifest)

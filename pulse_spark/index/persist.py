@@ -2,22 +2,31 @@
 
 Layout (out_dir):
   manifest.json                 settings + stage lineage (checkpoint.py)
-  docs/                         (doc_no, conv_id, turn_idx, doc_len
-                                 [, text when settings.store_text],
-                                 doc_id)
+  docs/                         docs_columns(settings): (doc_no,
+                                conv_id, turn_idx [, text when
+                                settings.store_text], doc_len, doc_id)
   postings/bucket=B/            (term, doc_id, tf, doc_len): keyed on the
                                 dense 8-byte doc_id, never the doc_no
                                 string (doc_no is joined back over the
                                 k·q winners, document.go:47-61); sorted
                                 by (term, doc_id) within files → parquet
                                 row-group min/max prune on term.  Written
-                                only by write_postings: hash(doc_id) into
-                                max(shuffle.partitions, salt_partitions)
-                                reducers, each writing one file per bucket
+                                only by write_postings (build, stream
+                                compaction, vacuum and merge alike):
+                                hash(doc_id) into max(shuffle.partitions,
+                                salt_partitions) reducers, each writing
+                                one file per bucket
   terms/                        (term, df, max_tf)
-  stats/                        single row (n_docs, adl)
+  stats/                        single row (n_docs, adl); doc_ids are
+                                dense, so n_docs also sizes every
+                                doc_id-indexed array
   segments/doc_range=R/         (M3) block-compressed postings, see
                                 segments.py
+
+Each stage has one writer, whichever of build, stream compaction,
+vacuum and merge writes the index: docs go through commit_stage with
+docs_columns, postings through write_postings, and terms, stats and
+segments through finish_index, which every index writer ends in.
 
 Equivalent of the reference's data/dump/<i>/ files (SURVEY §1.2) with the
 merge (spimi.go:123-228) replaced by shuffles.
@@ -50,7 +59,8 @@ def _fingerprint_metrics():
 
 def write_postings(p: DataFrame, out_dir: str, settings: IndexingSettings) -> float:
     """Write the postings stage layout from (term, doc_id, tf, doc_len)
-    rows — the one writer of it (batch build, stream compaction, vacuum).
+    rows — the one writer of it (batch build, stream compaction, vacuum,
+    merge).
     Records nothing; returns wall seconds.
 
     The layout shuffle has max(spark.sql.shuffle.partitions,
@@ -95,6 +105,15 @@ def write_stats(
     ckpt.record_stage(spark, out_dir, manifest, "stats", round(time.time() - t0, 3))
 
 
+def docs_columns(settings: IndexingSettings) -> list[str]:
+    """The committed docs stage's columns, in order.  With
+    store_text=False the stage is metadata only: the reference's doc.bin
+    stores (docno, size), not text, and the source table stays the text
+    store."""
+    text = ["text"] if settings.store_text else []
+    return ["doc_no", "conv_id", "turn_idx", *text, "doc_len", "doc_id"]
+
+
 @dataclass
 class Index:
     out_dir: str
@@ -108,6 +127,54 @@ class Index:
     @property
     def has_segments(self) -> bool:
         return os.path.isdir(os.path.join(self.out_dir, "segments"))
+
+
+def _stats_of(df: DataFrame) -> tuple[int, float]:
+    """(n_docs, adl) of a one-row stats frame."""
+    row = df.collect()[0]
+    return int(row["n_docs"]), float(row["adl"])
+
+
+def finish_index(
+    spark: SparkSession,
+    out_dir: str,
+    manifest: dict,
+    settings: IndexingSettings,
+    docs: DataFrame,
+    postings: DataFrame,
+    terms: DataFrame | None = None,
+    stats: tuple[int, float] | None = None,
+    segments: bool = False,
+) -> Index:
+    """Commit the stages after postings and return the Index: the tail
+    every index writer (build, stream compaction, vacuum, merge) ends in.
+    A stage the manifest already records is read back, not rewritten
+    (build resume).
+
+    terms: the lexicon plan (default: terms_df of the committed
+    postings).  stats: (n_docs, adl) when the caller already has them
+    (default: one aggregate over docs).  segments: build the block
+    segments over the committed postings at the committed stats."""
+    if ckpt.stage_done(manifest, "terms"):
+        terms = ckpt.read_stage(spark, out_dir, "terms")
+    else:
+        if terms is None:
+            terms = B.terms_df(postings)
+        terms = ckpt.commit_stage(out_dir, manifest, "terms", terms)
+    if ckpt.stage_done(manifest, "stats"):
+        stats = _stats_of(ckpt.read_stage(spark, out_dir, "stats"))
+    else:
+        if stats is None:
+            stats = _stats_of(B.stats_df(docs))
+        write_stats(spark, out_dir, manifest, *stats)
+    n_docs, adl = stats
+    if segments and not ckpt.stage_done(manifest, "segments"):
+        from pulse_spark.index import segments as seg
+
+        seg.build_segments(spark, out_dir, manifest, postings, settings,
+                           n_docs, adl)
+    return Index(out_dir=out_dir, settings=settings, docs=docs,
+                 postings=postings, terms=terms, n_docs=n_docs, adl=adl)
 
 
 def build_persisted_index(
@@ -132,7 +199,6 @@ def build_persisted_index(
 
     do_docs = not ckpt.stage_done(manifest, "docs")
     do_postings = not ckpt.stage_done(manifest, "postings")
-    do_stats = not ckpt.stage_done(manifest, "stats")
 
     # The in-memory docs plan is the single source of truth for BOTH the
     # docs and postings stages: it is a pure deterministic function of the
@@ -144,17 +210,12 @@ def build_persisted_index(
     if do_docs or do_postings:
         d_full, cached = B.assign_doc_ids(spark, d_full, npart)
 
-    # stage: docs.  With store_text=False this is METADATA ONLY — the
-    # reference's doc.bin stores (docno, size), not text; at 10^12 turns
-    # copying the text corpus into the index doubles the largest IO in
-    # the build for nothing (the source table remains the text store).
+    # stage: docs.  With store_text=False this is METADATA ONLY (see
+    # docs_columns): at 10^12 turns copying the text corpus into the
+    # index doubles the largest IO in the build for nothing.
     obs = None
     if do_docs:
-        meta_cols = ["doc_no", "conv_id", "turn_idx", "doc_len"]
-        if settings.store_text:
-            meta_cols.insert(3, "text")
-        meta_cols.append("doc_id")
-        d_write = d_full.select(*meta_cols)
+        d_write = d_full.select(*docs_columns(settings))
         # stats (N, ADL) + the INPUT FINGERPRINT ride the docs WRITE as
         # accumulator metrics — zero extra jobs, zero extra scans
         # (spimi's running mean, stats.go:19-23, as an Observation)
@@ -178,8 +239,7 @@ def build_persisted_index(
         # makes obs.get block behind thousands of queued task events
         # (measured: 14-25 s stall for a 1-row result)
         m = obs.get
-        if do_stats:
-            stats_vals = (int(m["n_docs"]), float(m["adl"]))
+        stats_vals = (int(m["n_docs"]), float(m["adl"]))
         # the fingerprint (rows + order-independent key/len checksum) is
         # what a resumed postings build must match: postings recompute
         # their rows from the SOURCE, not the committed docs stage, so a
@@ -238,38 +298,11 @@ def build_persisted_index(
     if cached is not None:
         cached.unpersist()
 
-    # stage: terms (global lexicon merge: df sum, max_tf max)
-    if ckpt.stage_done(manifest, "terms"):
-        terms = ckpt.read_stage(spark, out_dir, "terms")
-    else:
-        terms = ckpt.commit_stage(out_dir, manifest, "terms", B.terms_df(postings))
-
-    # stage: stats (from the docs-write Observation when available —
-    # resume runs fall back to a column-pruned scan of committed docs)
-    if not do_stats:
-        row = ckpt.read_stage(spark, out_dir, "stats").collect()[0]
-        n_docs, adl = int(row["n_docs"]), float(row["adl"])
-    else:
-        if stats_vals is None:
-            row = B.stats_df(docs).collect()[0]
-            stats_vals = (int(row["n_docs"]), float(row["adl"]))
-        n_docs, adl = stats_vals
-        write_stats(spark, out_dir, manifest, n_docs, adl)
-
-    if build_segments and not ckpt.stage_done(manifest, "segments"):
-        from pulse_spark.index import segments as seg
-        seg.build_segments(spark, out_dir, manifest, postings, settings,
-                           n_docs, adl)
-
-    return Index(
-        out_dir=out_dir,
-        settings=settings,
-        docs=docs,
-        postings=postings,
-        terms=terms,
-        n_docs=n_docs,
-        adl=adl,
-    )
+    # terms (global lexicon merge: df sum, max_tf max), stats (from the
+    # docs-write Observation when available; resume runs fall back to a
+    # column-pruned scan of committed docs) and segments
+    return finish_index(spark, out_dir, manifest, settings, docs, postings,
+                        stats=stats_vals, segments=build_segments)
 
 
 def load_index(spark: SparkSession, out_dir: str, cache_terms: bool = True) -> Index:
@@ -288,9 +321,8 @@ def load_index(spark: SparkSession, out_dir: str, cache_terms: bool = True) -> I
     terms = ckpt.read_stage(spark, out_dir, "terms")
     if cache_terms:
         terms = terms.cache()
-    row = ckpt.read_stage(spark, out_dir, "stats").collect()[0]
+    n_docs, adl = _stats_of(ckpt.read_stage(spark, out_dir, "stats"))
     return Index(
         out_dir=out_dir, settings=settings, docs=docs,
-        postings=postings, terms=terms,
-        n_docs=int(row["n_docs"]), adl=float(row["adl"]),
+        postings=postings, terms=terms, n_docs=n_docs, adl=adl,
     )

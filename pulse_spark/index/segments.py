@@ -83,6 +83,11 @@ SEGMENT_SCHEMA = T.StructType([
 
 
 def _encode_block(term, rng, ids, tfs, lens, adl, compress):
+    """One segment block as a row dict, encoded posting by posting: the
+    byte-level reference that tests/test_build_layout.py and
+    tests/test_maxscore.py compare encode_blocks against.  No production
+    path calls it; every index writes its segments through
+    build_segments."""
     ids = np.asarray(ids, dtype=np.uint64)
     tfs = np.asarray(tfs, dtype=np.uint64)
     lens = np.asarray(lens, dtype=np.uint64)

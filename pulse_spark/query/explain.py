@@ -100,7 +100,7 @@ def explain_search(index, queries: DataFrame, k: int = 10,
     spark = queries.sparkSession
     from pulse_spark.index.deletes import load_deletes
 
-    qt, postings, id_col = prepare_query_scan(
+    qt, postings = prepare_query_scan(
         index, queries, max_driver_queries=max_driver_queries
     )
     if qt is None:
@@ -111,7 +111,7 @@ def explain_search(index, queries: DataFrame, k: int = 10,
         )
     res = explain_topk(
         postings, index.terms, qt, index.n_docs, index.adl, k=k,
-        metric=metric, id_col=id_col,
+        metric=metric, id_col="doc_id",
         deletes=load_deletes(spark, index.out_dir),
     )
     return with_doc_no(index, res, _OUT_COLS)

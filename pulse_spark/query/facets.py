@@ -36,8 +36,8 @@ def facet_counts(
     """Per-query facet histograms of the matched document set.
 
     postings:      (term, <id_col>, ...) — pass a term-pruned scan for
-                   point queries (search.py prune_scan) so only the
-                   query terms' lists are read.
+                   point queries (search.py prepare_query_scan) so only
+                   the query terms' lists are read.
     q_occurrences: (query_id, ..., term) — duplicate terms are harmless
                    (matched docs are deduplicated); absent terms drop
                    out in the postings join.

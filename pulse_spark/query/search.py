@@ -325,7 +325,6 @@ def with_doc_metadata(index: Index, results: DataFrame) -> DataFrame:
 def prepare_query_scan(
     index: Index,
     queries: DataFrame,
-    prune_scan: bool = True,
     max_driver_queries: int = 10_000,
 ):
     """Shared front half of every index-level query path (search_topk,
@@ -333,18 +332,18 @@ def prepare_query_scan(
     settings (distributed pandas-UDF fallback past max_driver_queries)
     and bucket + term literal pruning of the postings scan.
 
-    Returns (qt, postings, id_col); qt is None when the query set
-    tokenizes to nothing (callers return their empty frame).  qt is the
-    (query_id, pos, term) occurrence table; postings is index.postings
-    term/bucket-pruned (when prune_scan); id_col is the postings key,
-    "doc_id", for the id-generic scorers (the caller maps the k·q
-    winners back to doc_no with with_doc_no).
+    Returns (qt, postings); qt is None when the query set tokenizes to
+    nothing (callers return their empty frame).  qt is the (query_id,
+    pos, term) occurrence table; postings is index.postings pruned to
+    the query terms and their buckets (every committed postings stage is
+    bucketed), keyed on doc_id (the caller maps the k·q winners back to
+    doc_no with with_doc_no).
     """
     spark = queries.sparkSession
     head = queries.limit(max_driver_queries + 1).collect()
     if len(head) > max_driver_queries:
         qt = tokenize_queries(queries, index)  # distributed fallback
-        q_terms = None
+        q_terms = [r["term"] for r in qt.select("term").distinct().collect()]
     else:
         from pulse_spark.text.normalize import tokens as py_tokens
 
@@ -355,29 +354,23 @@ def prepare_query_scan(
             for pos, t in enumerate(py_tokens(r["text"], index.settings.preprocess)):
                 occ.append((r["query_id"], pos, t))
         if not occ:
-            return None, None, None
+            return None, None
         from pulse_spark.sources.readers import local_table
 
         qt = local_table(spark, occ, "query_id long, pos int, term string")
         q_terms = sorted({t for _, _, t in occ})
 
-    postings = index.postings
-    if prune_scan:
-        if q_terms is None:
-            q_terms = [r["term"] for r in qt.select("term").distinct().collect()]
-        if not q_terms:
-            return None, None, None
-        # driver-side bucket hashes (pure-Python XXH64, bit-identical to
-        # F.xxhash64 — tests/test_xxhash.py): zero Spark jobs
-        from pulse_spark.compression.xxhash64 import term_bucket
+    if not q_terms:
+        return None, None
+    # driver-side bucket hashes (pure-Python XXH64, bit-identical to
+    # F.xxhash64 — tests/test_xxhash.py): zero Spark jobs
+    from pulse_spark.compression.xxhash64 import term_bucket
 
-        buckets = sorted({
-            term_bucket(t, index.settings.term_buckets) for t in q_terms
-        })
-        postings = postings.where(F.col("bucket").isin(buckets))
-        postings = postings.where(F.col("term").isin(q_terms))
-
-    return qt, postings, "doc_id"
+    buckets = sorted({
+        term_bucket(t, index.settings.term_buckets) for t in q_terms
+    })
+    postings = index.postings.where(F.col("bucket").isin(buckets))
+    return qt, postings.where(F.col("term").isin(q_terms))
 
 
 def search_topk(
@@ -386,7 +379,6 @@ def search_topk(
     k: int = 10,
     metric: str = "BM25",
     conjunctive: bool = False,
-    prune_scan: bool = True,
     max_driver_queries: int = 10_000,
     doc_filter: DataFrame | None = None,
 ) -> DataFrame:
@@ -412,9 +404,8 @@ def search_topk(
         raise ValueError(f"{metric} is not a valid metric")  # metric.go:30-37
     spark = queries.sparkSession
 
-    qt, postings, id_col = prepare_query_scan(
-        index, queries, prune_scan=prune_scan,
-        max_driver_queries=max_driver_queries,
+    qt, postings = prepare_query_scan(
+        index, queries, max_driver_queries=max_driver_queries
     )
     if qt is None:
         return spark.createDataFrame(
@@ -429,7 +420,7 @@ def search_topk(
         ).select("doc_id")
     res = topk_from_tables(
         postings, index.terms, qt, index.n_docs, index.adl,
-        k=k, metric=metric, conjunctive=conjunctive, id_col=id_col,
+        k=k, metric=metric, conjunctive=conjunctive, id_col="doc_id",
         deletes=dels, doc_filter=doc_filter,
     )
     return with_doc_no(index, res)

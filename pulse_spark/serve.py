@@ -149,11 +149,12 @@ def enable_malloc_arena(mb: int = 512) -> bool:
     return True
 
 
-def load_doc_no_array(out_dir: str, id_space: int) -> np.ndarray:
-    """doc_id -> doc_no object array for a committed index (driver-side
-    pyarrow).  Shared by PointServer and ShardedServer so a sharded
-    composition loads it ONCE instead of once per shard — or, worse,
-    via a throwaway whole-index server."""
+def load_doc_no_array(out_dir: str, n_docs: int) -> np.ndarray:
+    """doc_id -> doc_no object array of length n_docs (doc_ids are
+    dense) for a committed index (driver-side pyarrow).  Shared by
+    PointServer and ShardedServer so a sharded composition loads it ONCE
+    instead of once per shard — or, worse, via a throwaway whole-index
+    server."""
     import pyarrow.parquet as pq
 
     d = pq.read_table(
@@ -162,7 +163,7 @@ def load_doc_no_array(out_dir: str, id_space: int) -> np.ndarray:
     ids = np.asarray(d["doc_id"].to_numpy())
     nos = np.asarray(d["doc_no"].to_pylist(), dtype=object)
     order = np.argsort(ids)
-    arr = np.empty(id_space, dtype=object)
+    arr = np.empty(n_docs, dtype=object)
     arr[ids[order]] = nos[order]
     return arr
 
@@ -220,17 +221,15 @@ class PointServer:
         self.settings = IndexingSettings.from_dict(manifest["settings"])
         self.n_docs = int(stats["n_docs"])
         self.adl = float(stats["adl"])
-        # a merged index (index/merge.py) may carry id-space gaps when an
-        # input was itself a gap-carrying merge: dense arrays size by the
-        # recorded id_space, BM25's N stays the true doc count.  (The
-        # merge offset itself is exact — cumulative id_space, no padding.)
-        self.id_space = int(stats.get("id_space") or self.n_docs)
+        # the size of every doc_id-indexed array: doc_ids are dense on
+        # every write path (merge included), so it is n_docs
+        self.id_space = self.n_docs
 
         # shard envelope: a shard server's dense accumulators cover ONLY
         # its own contiguous doc_id span (doc_range slice × range_size),
         # so N shards together hold ~1× the corpus in accumulator memory,
         # not N× — the memory half of sharding.  _base/_span stay
-        # (0, id_space) for a whole-index server.  Shard pruning on the
+        # (0, n_docs) for a whole-index server.  Shard pruning on the
         # segment scan guarantees every posting id lands inside the span.
         rs = int(manifest["stages"]["segments"].get("range_size") or 0)
         if self.doc_ranges is not None and rs:
@@ -450,9 +449,9 @@ class PointServer:
         doc_nos=None,
         conv_ids=None,
     ) -> np.ndarray:
-        """Build a global-id_space boolean mask for search(allowed_mask=...)
+        """Build a boolean mask over all doc_ids for search(allowed_mask=...)
         from external doc_nos and/or conv_ids ("conv" matches every
-        "conv:turn" doc).  Requires load_doc_nos=True.  One O(id_space)
+        "conv:turn" doc).  Requires load_doc_nos=True.  One O(n_docs)
         Python pass — build once and REUSE across queries (the mask is
         the serving analog of query/search.py's doc_filter; a production
         fleet would precompute masks for its common filters)."""
@@ -484,7 +483,7 @@ class PointServer:
         requires all remaining distinct terms (search.go:113-116); ties
         (score desc, doc_id asc).
 
-        allowed_mask: optional global-id_space bool array (see
+        allowed_mask: optional bool array over all doc_ids (see
         filter_mask) — restrict results to these docs, stats global
         (query/search.py doc_filter semantics).  Applied at accumulation
         time, before candidates enter the top-k state (maxscore_topk
@@ -498,7 +497,7 @@ class PointServer:
         if allowed_mask is not None:
             if allowed_mask.shape[0] != self.id_space:
                 raise ValueError(
-                    f"allowed_mask must cover id_space {self.id_space}"
+                    f"allowed_mask must cover all {self.id_space} doc_ids"
                 )
             fmask = allowed_mask[self._base:self._base + self._span]
 
@@ -604,8 +603,7 @@ class ShardedServer:
         # real fleet) — not via a throwaway whole-index PointServer,
         # whose init would redundantly scan every segment footer and
         # load the full lexicon just to be discarded
-        id_space = int(stats.get("id_space") or stats["n_docs"])
-        self._nos = load_doc_no_array(out_dir, id_space)
+        self._nos = load_doc_no_array(out_dir, int(stats["n_docs"]))
         self.parallel = parallel
         self.shards: list[PointServer] = []
         self._procs: list = []
@@ -702,7 +700,7 @@ class ShardedServer:
     ) -> list[ServeResult]:
         if self.parallel:
             if allowed_mask is not None:
-                # shipping an id_space-sized mask per query over the
+                # shipping a corpus-sized mask per query over the
                 # shard pipes would dwarf the query itself; a process
                 # fleet should register masks shard-side at startup
                 raise ValueError(

@@ -130,7 +130,8 @@ def compact_stream_index(
     import json
 
     from pulse_spark.index import checkpoint as ckpt
-    from pulse_spark.index.persist import Index, write_postings, write_stats
+    from pulse_spark.index.persist import (docs_columns, finish_index,
+                                           write_postings)
 
     # the stream's persisted settings are authoritative (they bound the
     # tokenization of the deltas); an explicit settings arg must agree
@@ -157,14 +158,13 @@ def compact_stream_index(
     npart = num_doc_partitions or spark.sparkContext.defaultParallelism
     manifest = ckpt.load_manifest(out_dir)
     ckpt.check_settings(manifest, settings)
+    # a compaction rewrites every stage: none of a prior run's is reused
+    manifest["stages"] = {}
     ckpt.save_manifest(out_dir, manifest)
 
     d, cached = B.assign_doc_ids(spark, docs_delta, npart)
-    meta_cols = ["doc_no", "conv_id", "turn_idx", "doc_len"]
-    if settings.store_text:
-        meta_cols.insert(3, "text")
-    meta_cols.append("doc_id")
-    docs = ckpt.commit_stage(out_dir, manifest, "docs", d.select(*meta_cols))
+    docs = ckpt.commit_stage(out_dir, manifest, "docs",
+                             d.select(*docs_columns(settings)))
 
     # deltas key postings by doc_no; map to the dense ids via ONE
     # equi-join against the committed docs stage (never re-tokenize)
@@ -175,19 +175,6 @@ def compact_stream_index(
     postings = ckpt.record_stage(
         spark, out_dir, manifest, "postings", write_postings(p, out_dir, settings)
     )
-
-    terms = ckpt.commit_stage(out_dir, manifest, "terms", B.terms_df(postings))
-
-    row = B.stats_df(docs).collect()[0]
-    n_docs, adl = int(row["n_docs"]), float(row["adl"])
-    write_stats(spark, out_dir, manifest, n_docs, adl)
     cached.unpersist()
-
-    if build_segments:
-        from pulse_spark.index import segments as seg
-
-        seg.build_segments(spark, out_dir, manifest, postings, settings,
-                           n_docs, adl)
-
-    return Index(out_dir=out_dir, settings=settings, docs=docs,
-                 postings=postings, terms=terms, n_docs=n_docs, adl=adl)
+    return finish_index(spark, out_dir, manifest, settings, docs, postings,
+                        segments=build_segments)

@@ -1,8 +1,8 @@
 """Build-shape guards for the index build: how its work is laid out in
 tasks and files, which correctness tests can't see — the doc-id stage's
 single exchange, the postings shuffle sized to the session, term-sorted
-postings files on every write path, and the vectorized segment encoder's
-byte identity with the per-block encoder."""
+postings files and one segments grid on every write path, and the
+vectorized segment encoder's byte identity with the per-block encoder."""
 
 from __future__ import annotations
 
@@ -98,11 +98,16 @@ def _assert_sorted(root: str, cols: list[str]) -> int:
 
 
 def test_postings_files_term_sorted_on_every_write_path(spark, tmp_path):
-    """Batch build, stream compaction and vacuum write postings files
-    sorted by (term, id) — the order row-group min/max pruning on term
-    relies on — and segments files sorted by (term, min_doc_id)."""
+    """Batch build, stream compaction, vacuum and merge write postings
+    files sorted by (term, id) — the order row-group min/max pruning on
+    term relies on — and segments files sorted by (term, min_doc_id); a
+    merge lays its segments on the grid a batch build of its corpus
+    gets."""
+    import json
+
     from pulse_spark.fixtures import gen_transcripts
     from pulse_spark.index.deletes import delete_docs, vacuum_index
+    from pulse_spark.index.merge import merge_indexes
     from pulse_spark.index.persist import build_persisted_index
     from pulse_spark.streaming.incremental import (compact_stream_index,
                                                    start_incremental_build)
@@ -123,6 +128,15 @@ def test_postings_files_term_sorted_on_every_write_path(spark, tmp_path):
     batch = build_persisted_index(spark, spark.read.parquet(str(src)),
                                   str(tmp_path / "batch"), settings,
                                   build_segments=True)
+    halves = [
+        build_persisted_index(
+            spark, spark.read.parquet(str(src)).where(
+                F.pmod(F.xxhash64("conv_id"), F.lit(2)) == i),
+            str(tmp_path / f"half{i}"), settings, build_segments=True)
+        for i in range(2)
+    ]
+    merged = merge_indexes(spark, halves[0].out_dir, halves[1].out_dir,
+                           str(tmp_path / "merged"))
     stream_out = str(tmp_path / "stream")
     start_incremental_build(spark, str(src), stream_out,
                             settings).awaitTermination(120)
@@ -132,11 +146,17 @@ def test_postings_files_term_sorted_on_every_write_path(spark, tmp_path):
     assert delete_docs(spark, batch.out_dir, victims) == 5
     vacuumed = vacuum_index(spark, batch.out_dir, str(tmp_path / "vac"))
 
-    for idx in (batch, compacted, vacuumed):
+    for idx in (batch, compacted, vacuumed, merged):
         assert _assert_sorted(os.path.join(idx.out_dir, "postings"),
                               ["term", "doc_id"]) > 4
         assert _assert_sorted(os.path.join(idx.out_dir, "segments"),
                               ["term", "min_doc_id"])
+
+    def range_size(idx):
+        with open(os.path.join(idx.out_dir, "manifest.json")) as f:
+            return json.load(f)["stages"]["segments"]["range_size"]
+
+    assert range_size(merged) == range_size(batch)
 
 
 # ---------------------------------------------------------------------------

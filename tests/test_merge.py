@@ -254,10 +254,10 @@ def test_merge_many_three_way_equals_full(spark, transcripts_path, tmp_path):
 
 def test_merge_resplits_different_range_sizes(spark, transcripts_path, tmp_path):
     """Inputs of very different sizes build segments with DIFFERENT
-    range_size (ceil(n_docs/n_ranges)); _merge_segments must re-split
-    the absorbed side's blocks onto the first input's grid.  A skewed
-    1/8 vs 7/8 split forces the mismatch the equal-halves fixture can't
-    produce."""
+    range_size (ceil(n_docs/n_ranges)); the merge rebuilds its segments
+    from the merged postings, so it gets the full build's grid whatever
+    the inputs' grids were.  A skewed 1/8 vs 7/8 split forces the
+    mismatch the equal-halves fixture can't produce."""
     import json
 
     from pulse_spark.serve import PointServer
@@ -278,7 +278,7 @@ def test_merge_resplits_different_range_sizes(spark, transcripts_path, tmp_path)
 
     assert rs(a.out_dir) != rs(b.out_dir), "split failed to differ — fixture"
     merged = merge_indexes(spark, a.out_dir, b.out_dir, str(tmp_path / "rm"))
-    assert rs(merged.out_dir) == rs(a.out_dir)  # first input's grid
+    assert rs(merged.out_dir) == rs(full.out_dir)  # a fresh build's grid
 
     sf_srv, sm_srv = PointServer(full.out_dir), PointServer(merged.out_dir)
     for qid, text in gen_queries():

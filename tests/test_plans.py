@@ -72,7 +72,8 @@ def test_search_plan_partial_topk(spark, plan_index):
     assert small_plan.count("Window") == 1, small_plan
 
     # at-scale shape: same scorer with a candidate bound above the gate
-    qt, postings, id_col = prepare_query_scan(plan_index, q)
+    qt, postings = prepare_query_scan(plan_index, q)
+    id_col = "doc_id"
     per_doc = scored_candidates(
         postings, plan_index.terms, qt, plan_index.n_docs, plan_index.adl,
         id_col=id_col,

@@ -71,7 +71,7 @@ def test_incremental_equals_batch(spark, stream_dirs, tmp_path):
     qdf = spark.createDataFrame(
         [(i, t) for i, t in enumerate(some_terms)], "query_id long, text string"
     )
-    res = search_topk(sidx, qdf, k=5, prune_scan=False).collect()
+    res = search_topk(sidx, qdf, k=5).collect()
     assert len(res) > 0
 
     # resume idempotence: restarting the finished stream adds nothing
