@@ -289,10 +289,9 @@ def cmd_stats(args) -> int:
     against an index a cluster is actively serving."""
     import os
 
-    import pyarrow.parquet as pq
+    from pulse_spark.index.checkpoint import read_committed
 
-    with open(os.path.join(args.index, "manifest.json")) as f:
-        manifest = json.load(f)
+    manifest, n_docs, adl = read_committed(args.index)
 
     def du(path):
         total = 0
@@ -300,22 +299,17 @@ def cmd_stats(args) -> int:
             total += sum(os.path.getsize(os.path.join(root, x)) for x in files)
         return total
 
-    stats = pq.read_table(os.path.join(args.index, "stats")).to_pylist()[0]
     out = {
         "index": os.path.abspath(args.index),
-        "n_docs": int(stats["n_docs"]),
-        "adl": round(float(stats["adl"]), 6),
-        "n_terms": int(sum(
-            pq.ParquetFile(os.path.join(r, x)).metadata.num_rows
-            for r, _d, fs in os.walk(os.path.join(args.index, "terms"))
-            for x in fs if x.endswith(".parquet")
-        )),
-        "settings": manifest.get("settings"),
+        "n_docs": n_docs,
+        "adl": round(adl, 6),
+        "n_terms": manifest["stages"]["terms"]["rows"],
+        "settings": manifest["settings"],
         "stages": {
             s: {"rows": v.get("rows"),
                 "bytes": du(os.path.join(args.index, s)),
                 "wall_sec": v.get("wall_sec")}
-            for s, v in manifest.get("stages", {}).items()
+            for s, v in manifest["stages"].items()
         },
         "merged_from": manifest.get("merged_from"),
         "vacuumed_from": manifest.get("vacuumed_from"),

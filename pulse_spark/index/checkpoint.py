@@ -18,16 +18,20 @@ manifest.json:
      "postings": {...}, "terms": {...}, "stats": {...}, "segments": {...}
   }
 }
+
+A build resumes from its manifest; merge, vacuum and stream compaction
+rewrite every stage and start through begin_rewrite.  Readers of a
+finished index open it through read_committed.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from pulse_spark.config import IndexingSettings
 
@@ -52,6 +56,53 @@ def save_manifest(out_dir: str, manifest: dict) -> None:
     with open(tmp, "w") as f:
         json.dump(manifest, f, indent=2, sort_keys=True)
     os.replace(tmp, _manifest_path(out_dir))  # atomic commit
+
+
+def read_committed(out_dir: str, stage: str = "stats") -> tuple[dict, int, float]:
+    """(manifest, n_docs, adl) of a committed index, read without Spark:
+    the manifest, then the one-row stats stage through pyarrow.  Raises
+    FileNotFoundError when out_dir holds no index manifest or the
+    manifest does not list `stage` (every finished index lists stats;
+    the servers and the segments scorer ask for segments)."""
+    import pyarrow.parquet as pq
+
+    manifest = load_manifest(out_dir)
+    if manifest["settings"] is None:
+        raise FileNotFoundError(f"no index manifest at {out_dir}")
+    for s in ("stats", stage):
+        if s not in manifest["stages"]:
+            raise FileNotFoundError(f"no committed {s} stage at {out_dir}")
+    row = pq.read_table(os.path.join(out_dir, "stats")).to_pylist()[0]
+    return manifest, int(row["n_docs"]), float(row["adl"])
+
+
+def begin_rewrite(out_dir: str, settings: IndexingSettings, **lineage) -> dict:
+    """Start a full rewrite of out_dir (merge, vacuum, stream compaction)
+    and return its manifest: settings + lineage and no stages, so
+    nothing of a previous run there is reused.
+
+    Refuses an out_dir that one of the lineage's source dirs resolves to
+    (realpath, so a symlink alias is caught too): the rewrite would
+    clear its own input before reading it.  Refuses an out_dir holding
+    an index built with other settings (check_settings).  The empty
+    manifest is committed first, then the previous run's stage
+    directories and its deletes/ tombstones are removed: tombstones are
+    keyed on that run's doc_ids and would silently hide live docs of the
+    new index."""
+    out = os.path.realpath(out_dir)
+    for src in lineage.values():
+        for d in [src] if isinstance(src, str) else src:
+            if os.path.realpath(d) == out:
+                raise ValueError(
+                    "rewrite out_dir must differ from every input dir "
+                    f"({d})"
+                )
+    check_settings(load_manifest(out_dir), settings)
+    manifest = {"settings": settings.to_dict(), "stages": {}, **lineage}
+    save_manifest(out_dir, manifest)
+    for d in ("docs", "postings", "terms", "stats", "segments", "deletes"):
+        shutil.rmtree(os.path.join(out_dir, d), ignore_errors=True)
+    return manifest
 
 
 def stage_done(manifest: dict, stage: str) -> bool:

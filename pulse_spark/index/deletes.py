@@ -11,7 +11,8 @@ Semantics are Lucene's live-docs model, stated explicitly:
       and it is also what Lucene does between merges.
   vacuum (vacuum_index)    physically rewrites the index without the
       deleted docs into a NEW directory (immutable index dirs, like
-      merge/compact): dense doc_ids reassigned by the same deterministic
+      merge/compact; vacuuming an index into its own directory is
+      refused): dense doc_ids reassigned by the same deterministic
       rank, terms/stats recomputed, segments rebuilt — scores now
       reflect the reduced corpus, and the result is indistinguishable
       from a fresh build over the surviving corpus.  Still zero
@@ -26,7 +27,10 @@ the FileOutputCommitter's `_temporary` staging dir and can clobber each
 other's commits; per-call subdirs make concurrent deleters safe by
 construction).  Duplicates across calls are harmless (every consumer
 treats the set as membership).  Readers list the tree recursively, so
-pre-subdir flat layouts keep working.
+pre-subdir flat layouts keep working.  Tombstones are keyed on one
+run's doc_ids, so every rewrite of an index dir (merge, vacuum, stream
+compaction) clears deletes/ in checkpoint.begin_rewrite; merge then
+carries its inputs' tombstones forward, shifted into the merged ids.
 
 Scale note: query paths consume tombstones as an anti-join (DataFrame
 path — arbitrarily large delete sets) or as an in-memory sorted id array
@@ -102,21 +106,15 @@ def vacuum_index(spark: SparkSession, in_dir: str, out_dir: str,
     """Physically drop tombstoned docs: write a NEW committed index over
     the survivors (see module docstring for semantics).  Returns the new
     Index."""
-    import json
-
     from pulse_spark.config import IndexingSettings
     from pulse_spark.index import build as B
-    from pulse_spark.index.persist import finish_index, write_postings
+    from pulse_spark.index.persist import (commit_docs, finish_index,
+                                           write_postings)
 
-    with open(os.path.join(in_dir, "manifest.json")) as f:
-        src_manifest = json.load(f)
+    src_manifest = ckpt.read_committed(in_dir)[0]
     settings = IndexingSettings.from_dict(src_manifest["settings"])
-    had_segments = "segments" in src_manifest.get("stages", {})
-
-    # a vacuum rewrites every stage: none of a prior run's is reused
-    manifest = {"settings": settings.to_dict(), "stages": {},
-                "vacuumed_from": os.path.abspath(in_dir)}
-    ckpt.save_manifest(out_dir, manifest)
+    manifest = ckpt.begin_rewrite(out_dir, settings,
+                                  vacuumed_from=os.path.abspath(in_dir))
 
     dels = load_deletes(spark, in_dir)
     docs = ckpt.read_stage(spark, in_dir, "docs")
@@ -144,7 +142,7 @@ def vacuum_index(spark: SparkSession, in_dir: str, out_dir: str,
             .drop("_old_id")
         )
 
-    docs = ckpt.commit_stage(out_dir, manifest, "docs", _reid(docs))
+    docs, stats = commit_docs(out_dir, manifest, settings, _reid(docs))
 
     postings = ckpt.read_stage(spark, in_dir, "postings")
     if dels is not None:
@@ -155,4 +153,5 @@ def vacuum_index(spark: SparkSession, in_dir: str, out_dir: str,
     postings = ckpt.record_stage(spark, out_dir, manifest, "postings", wall)
     parted.unpersist()
     return finish_index(spark, out_dir, manifest, settings, docs, postings,
-                        segments=had_segments)
+                        stats=stats,
+                        segments="segments" in src_manifest["stages"])

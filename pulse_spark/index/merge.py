@@ -12,18 +12,18 @@ Mechanics (N-way; doc_nos must be disjoint across inputs; input i's
 doc_ids are shifted by the cumulative n_docs of inputs 0..i-1, so merged
 ids stay dense and n_docs sizes every doc_id-indexed array):
 
-  docs      union, input_i.doc_id += offset_i
+  docs      union, input_i.doc_id += offset_i, written by
+            persist.commit_docs, whose write observes the merged
+            n_docs, ADL and input fingerprint as a build's does
   postings  union, shifted, written by persist.write_postings — the
             build's writer, so a merged index has a fresh build's
             postings file layout
   terms     groupBy(term): df = sum, max_tf = max  (lexicon.go:37-42),
             cheaper than re-aggregating the postings
-  stats     n = Σ n_i, adl = weighted mean, computed on the driver;
-            fingerprint = xor-combine (the input fingerprint is an
-            order-independent xor, so merge composes it exactly)
   deletes   tombstones (index/deletes.py) are CARRIED FORWARD: each
             input's (doc_no, doc_id) rows are doc_id-shifted by that
-            input's offset and written into the output's deletes/ tree,
+            input's offset and written into the output's deletes/ tree
+            (which checkpoint.begin_rewrite cleared of any earlier run's),
             so a doc deleted before the merge stays deleted after it
             (takedown safety — merging must never resurrect).  Live-docs
             semantics are preserved: merged N/ADL/df still count the
@@ -38,7 +38,9 @@ ids stay dense and n_docs sizes every doc_id-indexed array):
             would make MaxScore pruning drop true top-k docs.
 
 Terms, stats and segments are committed by persist.finish_index, the
-tail every index writer ends in.
+tail every index writer ends in.  The merge starts, as vacuum and
+stream compaction do, with checkpoint.begin_rewrite, which refuses an
+out_dir that is one of the inputs.
 """
 
 from __future__ import annotations
@@ -50,7 +52,8 @@ from pyspark.sql import functions as F
 
 from pulse_spark.config import IndexingSettings
 from pulse_spark.index import checkpoint as ckpt
-from pulse_spark.index.persist import Index, finish_index, write_postings
+from pulse_spark.index.persist import (Index, commit_docs, finish_index,
+                                       write_postings)
 
 
 def merge_indexes(
@@ -104,17 +107,8 @@ def merge_many(
     postings union; disable for trusted disjoint batches)."""
     if len(in_dirs) < 2:
         raise ValueError("merge needs at least two inputs")
-    # realpath, not abspath: a symlink alias of an input would bypass an
-    # abspath guard and _merge_tombstones' rmtree would then delete the
-    # input's deletes/ tree mid-merge
-    if any(os.path.realpath(d) == os.path.realpath(out_dir) for d in in_dirs):
-        # refuse BEFORE any stage write — merging an index into itself
-        # would clobber the input mid-read
-        raise ValueError("merge out_dir must differ from every input dir")
-    manifests = [ckpt.load_manifest(d) for d in in_dirs]
+    manifests, n_i, _ = zip(*(ckpt.read_committed(d) for d in in_dirs))
     for d, m in zip(in_dirs, manifests):
-        if m["settings"] is None:
-            raise FileNotFoundError(f"{d} is not a committed index")
         if m["settings"] != manifests[0]["settings"]:
             raise ValueError(
                 f"settings mismatch: {manifests[0]['settings']} != "
@@ -123,10 +117,6 @@ def merge_many(
             )
     settings = IndexingSettings.from_dict(manifests[0]["settings"])
 
-    stats_rows = [
-        ckpt.read_stage(spark, d, "stats").collect()[0] for d in in_dirs
-    ]
-    n_i = [int(s["n_docs"]) for s in stats_rows]
     if any(n == 0 for n in n_i):
         raise ValueError("refusing to merge an empty index (nothing to do)")
     offsets = [0]
@@ -178,15 +168,13 @@ def merge_many(
                 "merge requires disjoint corpora"
             )
 
-    # a merge rewrites every stage: none of a prior run's is reused
-    manifest = {"settings": settings.to_dict(), "stages": {},
-                "merged_from": [os.path.abspath(d) for d in in_dirs]}
-    ckpt.save_manifest(out_dir, manifest)
-
+    manifest = ckpt.begin_rewrite(
+        out_dir, settings, merged_from=[os.path.abspath(d) for d in in_dirs]
+    )
     docs_u = docs_in[0]
     for df, off in zip(docs_in[1:], offsets[1:]):
         docs_u = docs_u.unionByName(_shift(df, off))
-    docs = ckpt.commit_stage(out_dir, manifest, "docs", docs_u)
+    docs, stats = commit_docs(out_dir, manifest, settings, docs_u)
 
     posts_in = [ckpt.read_stage(spark, d, "postings") for d in in_dirs]
     posts_u = posts_in[0]
@@ -202,20 +190,9 @@ def merge_many(
         F.sum("df").alias("df"), F.max("max_tf").alias("max_tf")
     )
 
-    n = sum(n_i)
-    adl = sum(float(s["adl"]) * ni for s, ni in zip(stats_rows, n_i)) / n
-    fps = [m.get("input_fingerprint") for m in manifests]
-    if all(fps):
-        fp = {"rows": 0, "xor": 0}
-        for f in fps:
-            fp["rows"] += f["rows"]
-            fp["xor"] ^= f["xor"]
-        manifest["input_fingerprint"] = fp
-        ckpt.save_manifest(out_dir, manifest)
-
     _merge_tombstones(spark, in_dirs, offsets, out_dir)
     return finish_index(spark, out_dir, manifest, settings, docs, postings,
-                        terms=terms, stats=(n, adl), segments=do_segments)
+                        terms=terms, stats=stats, segments=do_segments)
 
 
 def _merge_tombstones(spark, in_dirs, offsets, out_dir):
@@ -223,22 +200,10 @@ def _merge_tombstones(spark, in_dirs, offsets, out_dir):
     doc_ids shifted by the same offset the docs union used — deleting
     then merging must equal merging then deleting (takedown safety;
     pinned in tests/test_merge.py).  O(deleted) rows, zero cost when no
-    input has tombstones.
-
-    Idempotent like every other merge stage: the output's deletes/ tree
-    is CLEARED first, so re-merging into a previously-used out_dir
-    cannot leave a prior run's tombstones behind (their doc_id offsets
-    were computed for the OLD input set — stale ones would silently
-    tombstone live docs of the new index).  Post-merge `delete_docs`
-    calls append fresh uuid subdirs as usual."""
-    import shutil
-
+    input has tombstones.  Post-merge `delete_docs` calls append fresh
+    uuid subdirs as usual."""
     from pulse_spark.index.deletes import load_deletes
 
-    out_deletes = os.path.join(out_dir, "deletes")
-    # out_dir != every in_dir is guaranteed by merge_many's early guard,
-    # so this never removes an INPUT's tombstones
-    shutil.rmtree(out_deletes, ignore_errors=True)
     parts = []
     for d, off in zip(in_dirs, offsets):
         dels = load_deletes(spark, d)
@@ -251,5 +216,5 @@ def _merge_tombstones(spark, in_dirs, offsets, out_dir):
     for p in parts[1:]:
         merged = merged.unionByName(p)
     merged.write.mode("overwrite").parquet(
-        os.path.join(out_deletes, "merged")
+        os.path.join(out_dir, "deletes", "merged")
     )

@@ -22,11 +22,17 @@ Layout (out_dir):
                                 doc_id-indexed array
   segments/doc_range=R/         (M3) block-compressed postings, see
                                 segments.py
+  deletes/<uuid>/               (doc_no, doc_id) tombstones, see
+                                deletes.py; not a manifest stage, and
+                                every rewrite (merge, vacuum, stream
+                                compaction) clears it in
+                                checkpoint.begin_rewrite
 
 Each stage has one writer, whichever of build, stream compaction,
-vacuum and merge writes the index: docs go through commit_stage with
-docs_columns, postings through write_postings, and terms, stats and
-segments through finish_index, which every index writer ends in.
+vacuum and merge writes the index: docs go through commit_docs,
+postings through write_postings, and terms, stats and segments through
+finish_index, which every index writer ends in.  Readers of a finished
+index take its manifest and stats from checkpoint.read_committed.
 
 Equivalent of the reference's data/dump/<i>/ files (SURVEY §1.2) with the
 merge (spimi.go:123-228) replaced by shuffles.
@@ -114,6 +120,35 @@ def docs_columns(settings: IndexingSettings) -> list[str]:
     return ["doc_no", "conv_id", "turn_idx", *text, "doc_len", "doc_id"]
 
 
+def commit_docs(
+    out_dir: str, manifest: dict, settings: IndexingSettings, docs: DataFrame
+) -> tuple[DataFrame, tuple[int, float]]:
+    """Commit the docs stage (docs_columns of `docs`) and return it with
+    its (n_docs, adl): the one docs writer of build, stream compaction,
+    vacuum and merge.  The stats and the input fingerprint ride the
+    write as Observation metrics, no extra job (spimi's running mean,
+    stats.go:19-23).  They are read right after the write: deferred past
+    the postings stage, obs.get blocks behind thousands of queued task
+    events (measured: 14-25 s for a 1-row result).  An empty input is
+    refused before the stage is recorded."""
+    from pyspark.sql import Observation
+
+    obs = Observation("corpus_stats")
+    d = docs.select(*docs_columns(settings)).observe(
+        obs, F.avg("doc_len").alias("adl"), *_fingerprint_metrics()
+    )
+    wall = ckpt.write_stage(d, out_dir, "docs")
+    m = obs.get
+    n_docs = int(m["fp_rows"])
+    if not n_docs:
+        raise ValueError(
+            f"refusing to index an empty input (no documents for {out_dir})"
+        )
+    manifest["input_fingerprint"] = {"rows": n_docs, "xor": int(m["fp_xor"])}
+    docs = ckpt.record_stage(docs.sparkSession, out_dir, manifest, "docs", wall)
+    return docs, (n_docs, float(m["adl"]))
+
+
 @dataclass
 class Index:
     out_dir: str
@@ -126,13 +161,8 @@ class Index:
 
     @property
     def has_segments(self) -> bool:
-        return os.path.isdir(os.path.join(self.out_dir, "segments"))
-
-
-def _stats_of(df: DataFrame) -> tuple[int, float]:
-    """(n_docs, adl) of a one-row stats frame."""
-    row = df.collect()[0]
-    return int(row["n_docs"]), float(row["adl"])
+        """Whether the committed manifest lists a segments stage."""
+        return "segments" in ckpt.read_committed(self.out_dir)[0]["stages"]
 
 
 def finish_index(
@@ -152,9 +182,10 @@ def finish_index(
     (build resume).
 
     terms: the lexicon plan (default: terms_df of the committed
-    postings).  stats: (n_docs, adl) when the caller already has them
-    (default: one aggregate over docs).  segments: build the block
-    segments over the committed postings at the committed stats."""
+    postings).  stats: (n_docs, adl) from commit_docs (default, on a
+    resume whose docs stage an earlier run committed: one aggregate
+    over docs).  segments: build the block segments over the committed
+    postings at the committed stats."""
     if ckpt.stage_done(manifest, "terms"):
         terms = ckpt.read_stage(spark, out_dir, "terms")
     else:
@@ -162,10 +193,11 @@ def finish_index(
             terms = B.terms_df(postings)
         terms = ckpt.commit_stage(out_dir, manifest, "terms", terms)
     if ckpt.stage_done(manifest, "stats"):
-        stats = _stats_of(ckpt.read_stage(spark, out_dir, "stats"))
+        stats = ckpt.read_committed(out_dir)[1:]
     else:
         if stats is None:
-            stats = _stats_of(B.stats_df(docs))
+            row = B.stats_df(docs).first()
+            stats = int(row["n_docs"]), float(row["adl"])
         write_stats(spark, out_dir, manifest, *stats)
     n_docs, adl = stats
     if segments and not ckpt.stage_done(manifest, "segments"):
@@ -212,44 +244,17 @@ def build_persisted_index(
 
     # stage: docs.  With store_text=False this is METADATA ONLY (see
     # docs_columns): at 10^12 turns copying the text corpus into the
-    # index doubles the largest IO in the build for nothing.
-    obs = None
+    # index doubles the largest IO in the build for nothing.  Its
+    # fingerprint is what a resumed postings build must match: postings
+    # recompute their rows from the SOURCE, not the committed docs
+    # stage, so a source that changed between run and resume would
+    # silently give the committed docs and the resumed postings
+    # diverging doc_ids.
+    stats_vals: tuple[int, float] | None = None
     if do_docs:
-        d_write = d_full.select(*docs_columns(settings))
-        # stats (N, ADL) + the INPUT FINGERPRINT ride the docs WRITE as
-        # accumulator metrics — zero extra jobs, zero extra scans
-        # (spimi's running mean, stats.go:19-23, as an Observation)
-        from pyspark.sql import Observation
-
-        obs = Observation("corpus_stats")
-        d_write = d_write.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_docs"),
-            F.avg("doc_len").alias("adl"),
-            *_fingerprint_metrics(),
-        )
-        docs = ckpt.commit_stage(out_dir, manifest, "docs", d_write)
+        docs, stats_vals = commit_docs(out_dir, manifest, settings, d_full)
     else:
         docs = ckpt.read_stage(spark, out_dir, "docs")
-
-    stats_vals: tuple[int, float] | None = None
-    if obs is not None:
-        # read the Observation NOW, while the listener bus holds only the
-        # docs stage's events — deferring this past the postings stage
-        # makes obs.get block behind thousands of queued task events
-        # (measured: 14-25 s stall for a 1-row result)
-        m = obs.get
-        stats_vals = (int(m["n_docs"]), float(m["adl"]))
-        # the fingerprint (rows + order-independent key/len checksum) is
-        # what a resumed postings build must match: postings recompute
-        # their rows from the SOURCE, not the committed docs stage, so a
-        # source that changed between run and resume would silently give
-        # the committed docs and the resumed postings diverging doc_ids
-        manifest["input_fingerprint"] = {
-            "rows": int(m["fp_rows"]),
-            "xor": int(m["fp_xor"]) if m["fp_xor"] is not None else 0,
-        }
-        ckpt.save_manifest(out_dir, manifest)
 
     # stage: postings, hash-bucketed by term, term-sorted within files
     if do_postings:
@@ -312,16 +317,13 @@ def load_index(spark: SparkSession, out_dir: str, cache_terms: bool = True) -> I
     cache_terms: Spark-cache the terms table — the query path joins it on
     every search (the reference mmaps its lexicon once at load,
     engine.go:45-54; distributed cache is the Spark analog)."""
-    manifest = ckpt.load_manifest(out_dir)
-    if manifest["settings"] is None:
-        raise FileNotFoundError(f"no index manifest at {out_dir}")
+    manifest, n_docs, adl = ckpt.read_committed(out_dir)
     settings = IndexingSettings.from_dict(manifest["settings"])
     docs = ckpt.read_stage(spark, out_dir, "docs")
     postings = ckpt.read_stage(spark, out_dir, "postings")
     terms = ckpt.read_stage(spark, out_dir, "terms")
     if cache_terms:
         terms = terms.cache()
-    n_docs, adl = _stats_of(ckpt.read_stage(spark, out_dir, "stats"))
     return Index(
         out_dir=out_dir, settings=settings, docs=docs,
         postings=postings, terms=terms, n_docs=n_docs, adl=adl,

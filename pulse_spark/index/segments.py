@@ -49,6 +49,7 @@ from pulse_spark.compression.codecs import (
     unary_encode_concat,
 )
 from pulse_spark.config import BM25_B, BM25_K1, IndexingSettings
+from pulse_spark.index import checkpoint as ckpt
 from pulse_spark.index.maxscore import (
     FUSED_COLUMNS,
     fuse_terms,
@@ -216,8 +217,6 @@ def build_segments(
 ) -> DataFrame:
     """postings must carry (term, doc_id, tf, doc_len); n_docs/adl are
     the committed stats stage's.  One shuffle."""
-    from pulse_spark.index import checkpoint as ckpt
-
     n_ranges = n_ranges or max(spark.sparkContext.defaultParallelism, 8)
     range_size = max(1, -(-n_docs // n_ranges))  # ceil
     block_size = settings.block_size
@@ -274,10 +273,9 @@ def search_segments(
     """
     import os
 
-    from pulse_spark.index.checkpoint import load_manifest
     from pulse_spark.query.search import tokenize_queries
 
-    manifest = load_manifest(index.out_dir)
+    manifest = ckpt.read_committed(index.out_dir, "segments")[0]
     compress = index.settings.compression
     n, adl = index.n_docs, index.adl
     # live-docs tombstones (index/deletes.py), dropped during

@@ -168,22 +168,6 @@ def load_doc_no_array(out_dir: str, n_docs: int) -> np.ndarray:
     return arr
 
 
-def _segments_meta(out_dir: str) -> tuple[dict, dict]:
-    """(manifest, stats row) of a committed index; raises unless it has
-    a segments stage."""
-    import pyarrow.parquet as pq
-
-    from pulse_spark.index.checkpoint import load_manifest
-
-    manifest = load_manifest(out_dir)
-    if "segments" not in manifest["stages"]:
-        raise FileNotFoundError(
-            f"no committed segments stage at {out_dir} "
-            "(build with build_segments=True)"
-        )
-    return manifest, pq.read_table(os.path.join(out_dir, "stats")).to_pylist()[0]
-
-
 class PointServer:
     """Serve BM25/TFIDF top-k point queries from a committed segments
     index without a SparkSession (requires build_segments=True at build
@@ -215,12 +199,12 @@ class PointServer:
 
         import pyarrow.parquet as pq
 
-        manifest, stats = _segments_meta(out_dir)
+        from pulse_spark.index.checkpoint import read_committed
+
+        manifest, self.n_docs, self.adl = read_committed(out_dir, "segments")
         self.out_dir = out_dir
         self.doc_ranges = set(doc_ranges) if doc_ranges is not None else None
         self.settings = IndexingSettings.from_dict(manifest["settings"])
-        self.n_docs = int(stats["n_docs"])
-        self.adl = float(stats["adl"])
         # the size of every doc_id-indexed array: doc_ids are dense on
         # every write path (merge included), so it is n_docs
         self.id_space = self.n_docs
@@ -594,7 +578,9 @@ class ShardedServer:
     def __init__(self, out_dir: str, n_shards: int = 2,
                  cache_terms: int = 4096, parallel: bool = False,
                  malloc_arena_mb: "int | None" = None):
-        manifest, stats = _segments_meta(out_dir)
+        from pulse_spark.index.checkpoint import read_committed
+
+        manifest, n_docs, _ = read_committed(out_dir, "segments")
         n_ranges = int(manifest["stages"]["segments"]["n_ranges"])
         n_shards = max(1, min(n_shards, n_ranges))
         # contiguous doc_range slices -> contiguous doc_id spans per shard
@@ -603,7 +589,7 @@ class ShardedServer:
         # real fleet) — not via a throwaway whole-index PointServer,
         # whose init would redundantly scan every segment footer and
         # load the full lexicon just to be discarded
-        self._nos = load_doc_no_array(out_dir, int(stats["n_docs"]))
+        self._nos = load_doc_no_array(out_dir, n_docs)
         self.parallel = parallel
         self.shards: list[PointServer] = []
         self._procs: list = []

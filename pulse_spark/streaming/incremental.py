@@ -130,7 +130,7 @@ def compact_stream_index(
     import json
 
     from pulse_spark.index import checkpoint as ckpt
-    from pulse_spark.index.persist import (docs_columns, finish_index,
+    from pulse_spark.index.persist import (commit_docs, finish_index,
                                            write_postings)
 
     # the stream's persisted settings are authoritative (they bound the
@@ -156,15 +156,10 @@ def compact_stream_index(
         os.path.join(stream_dir, "postings_delta")
     )
     npart = num_doc_partitions or spark.sparkContext.defaultParallelism
-    manifest = ckpt.load_manifest(out_dir)
-    ckpt.check_settings(manifest, settings)
-    # a compaction rewrites every stage: none of a prior run's is reused
-    manifest["stages"] = {}
-    ckpt.save_manifest(out_dir, manifest)
+    manifest = ckpt.begin_rewrite(out_dir, settings)
 
     d, cached = B.assign_doc_ids(spark, docs_delta, npart)
-    docs = ckpt.commit_stage(out_dir, manifest, "docs",
-                             d.select(*docs_columns(settings)))
+    docs, stats = commit_docs(out_dir, manifest, settings, d)
 
     # deltas key postings by doc_no; map to the dense ids via ONE
     # equi-join against the committed docs stage (never re-tokenize)
@@ -177,4 +172,4 @@ def compact_stream_index(
     )
     cached.unpersist()
     return finish_index(spark, out_dir, manifest, settings, docs, postings,
-                        segments=build_segments)
+                        stats=stats, segments=build_segments)

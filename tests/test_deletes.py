@@ -108,6 +108,30 @@ def test_vacuum_equals_fresh_build(spark, transcripts_path, tmp_path):
         assert rv == rf, text
 
 
+def test_vacuum_into_its_own_input_is_refused(spark, transcripts_path,
+                                              tmp_path):
+    """Vacuum would clear its input's stages and tombstones before it
+    reads them: an out_dir that is the input, or a symlink to it, is
+    refused and the input is left as it was."""
+    import os
+
+    from pulse_spark.index.deletes import deleted_id_array
+
+    tr = spark.read.parquet(transcripts_path).limit(30)
+    idx = build_persisted_index(spark, tr, str(tmp_path / "vi"), SETTINGS)
+    delete_docs(spark, idx.out_dir, [idx.docs.first()["doc_no"]])
+    with open(os.path.join(idx.out_dir, "manifest.json")) as f:
+        manifest = f.read()
+    alias = str(tmp_path / "alias")
+    os.symlink(idx.out_dir, alias)
+    for out in (idx.out_dir, alias):
+        with pytest.raises(ValueError, match="differ from every input"):
+            vacuum_index(spark, idx.out_dir, out)
+    with open(os.path.join(idx.out_dir, "manifest.json")) as f:
+        assert f.read() == manifest
+    assert deleted_id_array(idx.out_dir).size == 1
+
+
 def test_delete_unknown_doc_nos_is_noop(spark, transcripts_path, tmp_path):
     tr = spark.read.parquet(transcripts_path).limit(30)
     idx = build_persisted_index(spark, tr, str(tmp_path / "nk"), SETTINGS)

@@ -79,3 +79,91 @@ def test_torn_manifest_and_segment_files(spark, transcripts_path, tmp_path):
         f.write(raw[: len(raw) // 2])
     with pytest.raises(pa.ArrowInvalid, match="(?i)parquet"):
         PointServer(m)
+
+
+def test_empty_input_is_refused_before_any_stage_commits(spark,
+                                                         transcripts_path,
+                                                         tmp_path):
+    out = str(tmp_path / "empty")
+    tr = spark.read.parquet(transcripts_path).where(F.lit(False))
+    with pytest.raises(ValueError, match="empty input"):
+        build_persisted_index(spark, tr, out, SETTINGS)
+    with open(os.path.join(out, "manifest.json")) as f:
+        assert json.load(f)["stages"] == {}
+
+
+@pytest.fixture(scope="module")
+def rewrite_sources(spark, transcripts_path, tmp_path_factory):
+    """Inputs of the three index rewrites plus `old`: an index with
+    segments and doc_ids 0, 1 and 2 tombstoned, the earlier run that a
+    reused out_dir holds.  Input a (no segments) has one tombstone of
+    its own; the stream dir holds half b's deltas."""
+    from pulse_spark.index.deletes import delete_docs
+    from pulse_spark.streaming.incremental import start_incremental_build
+
+    base = tmp_path_factory.mktemp("rewrites")
+    tr = spark.read.parquet(transcripts_path)
+    half_a = tr.where(F.col("conv_id") < "c000060")
+    half_b = tr.where(F.col("conv_id") >= "c000060")
+    old = build_persisted_index(spark, tr, str(base / "old"), SETTINGS,
+                                build_segments=True)
+    first3 = [r["doc_no"] for r in old.docs.where(F.col("doc_id") < 3).collect()]
+    assert delete_docs(spark, old.out_dir, first3) == 3
+    a = build_persisted_index(spark, half_a, str(base / "a"), SETTINGS)
+    assert delete_docs(spark, a.out_dir,
+                       [a.docs.select("doc_no").first()["doc_no"]]) == 1
+    b = build_persisted_index(spark, half_b, str(base / "b"), SETTINGS)
+    half_b.write.parquet(str(base / "arrivals"))
+    stream = str(base / "stream")
+    start_incremental_build(spark, str(base / "arrivals"), stream,
+                            SETTINGS).awaitTermination(120)
+    return {
+        "old": old.out_dir,
+        "merge": ["merge", "--a", a.out_dir, "--b", b.out_dir],
+        "vacuum": ["vacuum", "--index", a.out_dir],
+        "compact": ["compact", "--stream-dir", stream, "--no-segments"],
+    }
+
+
+@pytest.mark.parametrize("rewrite", ["merge", "vacuum", "compact"])
+def test_rewrite_into_reused_out_dir_equals_fresh(spark, rewrite_sources,
+                                                  rewrite, tmp_path, capsys):
+    """A merge, vacuum or stream compaction into an out_dir that holds an
+    earlier index keeps nothing of it: neither its segments stage (none
+    of these rewrites builds one here) nor its tombstones, which are
+    keyed on the old run's doc_ids and would hide live docs."""
+    import shutil
+
+    from pulse_spark import cli
+    from pulse_spark.index.deletes import deleted_id_array
+    from pulse_spark.index.persist import load_index
+    from pulse_spark.query.search import search_topk
+
+    def run(out):
+        assert cli.main([*rewrite_sources[rewrite], "--output", out]) == 0
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    reused, fresh = str(tmp_path / "reused"), str(tmp_path / "fresh")
+    shutil.copytree(rewrite_sources["old"], reused)
+    printed = run(reused)
+    run(fresh)
+
+    def tombstones(d):
+        ids = deleted_id_array(d)
+        return [] if ids is None else ids.tolist()
+
+    assert tombstones(reused) == tombstones(fresh)
+    with open(os.path.join(reused, "manifest.json")) as f:
+        listed = "segments" in json.load(f)["stages"]
+    idx = load_index(spark, reused)
+    assert idx.has_segments == printed["segments"] == listed
+
+    qdf = spark.createDataFrame(gen_queries(), "query_id long, text string")
+
+    def topk(index):
+        return sorted(
+            (r["query_id"], r["rank"], r["doc_no"], round(r["score"], 9))
+            for r in search_topk(index, qdf, k=10).collect()
+        )
+
+    assert topk(idx) == topk(load_index(spark, fresh))
