@@ -281,6 +281,9 @@ _TRIM = (
     r"regexp_replace(regexp_replace(text, '^[ \t\n\r\f\x0B]+', ''),"
     r" '[ \t\n\r\f\x0B]+$', '')"
 )
+# DuckDB's lower() maps case simply ('ΟΔΟΣ' -> 'οδοσ', 'İstanbul' ->
+# 'istanbul'; Spark gives 'οδος', 'i̇stanbul'), so the oracles on _NORM and
+# _WS_TOKS are exact only on text without final sigma or dotted capital I.
 _NORM = f"regexp_replace(lower({_TRIM}), '\\s+', ' ', 'g')"
 _WS_TOKS = f"list_filter(string_split_regex(lower({_TRIM}), '\\s+'), x -> x <> '')"
 

@@ -171,16 +171,20 @@ def conv_weighted_topk(
 
     Returns (query_id, rank, conv_id, score), rank 0-based.
 
-    Scale shape: tokenize once (Arrow UDF), ONE (conv_id, term) shuffle
-    for weighted tf, one bounded conv_id agg for weighted length, tiny
-    broadcast query side, and topk_from_tables' two-phase bounded top-k
-    — the same plan skeleton as the flat index build, nothing new to
-    salt (term skew lives in the (conv, term) groupBy whose key space is
-    corpus-sized).
+    Weighted tf is Σ w·tf over the term_freq_rows kernel's per-turn
+    rows: exact for integer-valued weights (the defaults, the DuckDB
+    oracle's, the tests'); other weights can differ from a per-token sum
+    in the last ulp, which `tie_round` absorbs.
+
+    Scale shape: ONE (conv_id, term) shuffle of one row per turn-term,
+    one bounded conv_id agg for weighted length, tiny broadcast query
+    side, and topk_from_tables' two-phase bounded top-k — the flat index
+    build's plan skeleton, nothing new to salt (term skew lives in the
+    (conv, term) groupBy whose key space is corpus-sized).
     """
     from pulse_spark.config import IndexingSettings
     from pulse_spark.query.search import topk_from_tables
-    from pulse_spark.text.udfs import make_tokenizer_udf
+    from pulse_spark.text.udfs import term_freq_rows
 
     settings = settings or IndexingSettings()
     role_weights = role_weights or {"user": 2.0, "assistant": 1.0}
@@ -212,11 +216,10 @@ def conv_weighted_topk(
         F.sum(F.col("_len") * F.col("w")).alias("doc_len")
     )
 
-    tok = make_tokenizer_udf(settings.preprocess)
     wtf = (
-        turns.select("conv_id", "w", F.explode(tok(F.col("text"))).alias("term"))
+        term_freq_rows(turns, settings.preprocess, ("conv_id", "w"))
         .groupBy("conv_id", "term")
-        .agg(F.sum("w").alias("tf"))
+        .agg(F.sum(F.col("w") * F.col("tf")).alias("tf"))
     )
     postings = wtf.join(wlen, "conv_id")
     terms = wtf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))

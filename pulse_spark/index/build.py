@@ -7,17 +7,16 @@ them sequentially, this builder declares the same computation as a
 DataFrame plan and lets Spark's shuffle machinery do the spilling and the
 merge:
 
-  transcripts ──mapInPandas tokenize──► exploded terms
-      ──groupBy(doc,term).count()──► postings (tf)           [shuffle 1]
-      ──groupBy(term).agg(df,max_tf)──► terms                [shuffle 2*]
+  docs ──mapInArrow term_freq_rows──► postings (term, doc, doc_len, tf)
+      ──groupBy(term).agg(df,max_tf)──► terms                [shuffle*]
       ──agg(count,avg)──► stats (N, ADL)
 
-(*) partial/map-side aggregation makes shuffle 2 carry one row per
-(task, term) — the salted two-phase pattern the north rule asks for is
-exactly Catalyst's partial+final HashAggregate; an explicit salt column is
-only needed for order-sensitive merges (segment building), where we avoid
-per-term grouping entirely by range-partitioning on (term, doc_id) and
-cutting bounded blocks inside each partition (segments.py).
+tf is counted inside each Arrow batch, so postings need no shuffle of
+their own.  (*) partial/map-side aggregation makes the terms shuffle
+carry one row per (task, term) — the salted two-phase pattern the north
+rule asks for is exactly Catalyst's partial+final HashAggregate; an
+explicit salt column is only needed for order-sensitive merges (segment
+building, which cuts bounded blocks per doc_range; segments.py).
 
 The build is stage-checkpointed: each stage commits a parquet directory
 and a manifest entry with per-partition row counts (lineage); re-running
@@ -30,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pulse_spark.config import IndexingSettings
-from pulse_spark.text.udfs import doc_no, make_term_freq_udf, trimmed
+from pulse_spark.text.udfs import doc_no, term_freq_rows, trimmed
 
 # ---------------------------------------------------------------------------
 # logical-plan builders (no IO) — shared by the persisted build and the
@@ -56,30 +55,18 @@ def docs_df(transcripts: DataFrame) -> DataFrame:
 
 
 def postings_df(
-    docs: DataFrame,
-    settings: IndexingSettings,
-    id_col: str = "doc_no",
-    extra_cols: tuple[str, ...] = (),
+    docs: DataFrame, settings: IndexingSettings, id_col: str = "doc_no"
 ) -> DataFrame:
-    """(term, <id_col>, tf, doc_len [, extra_cols]): the exploded
-    inverted index.  Tokenize + doc-local tf run inside one fused Arrow
-    pandas UDF (preprocess.Frequencies, preprocess.go:36-46), so the
-    stage is ZERO-shuffle.
+    """(term, <id_col>, doc_len, tf): one posting row per (doc, distinct
+    term), from the term_freq_rows kernel — zero-shuffle, tf is
+    doc-local.
 
     Equivalent of the reference's per-partition Lexicon accumulation +
-    global merge (lexicon.go:28-42, spimi.go:123-228).  doc_len (and
-    optionally doc_id) are denormalized into the posting row so scoring
-    never joins the docs table (the reference likewise reads
-    (docno, size) per hit).
+    global merge (lexicon.go:28-42, spimi.go:123-228).  doc_len is
+    denormalized into the posting row so scoring never joins the docs
+    table (the reference likewise reads (docno, size) per hit).
     """
-    keep = [id_col, "doc_len", *extra_cols]
-    tf = make_term_freq_udf(settings.preprocess)
-    exploded = docs.select(
-        *keep, F.explode(tf(F.col("text"))).alias("p")
-    )
-    return exploded.select(
-        F.col("p.term").alias("term"), *keep, F.col("p.tf").alias("tf")
-    )
+    return term_freq_rows(docs, settings.preprocess, (id_col, "doc_len"))
 
 
 def terms_df(postings: DataFrame) -> DataFrame:

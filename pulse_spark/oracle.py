@@ -24,9 +24,10 @@ Semantics pinned to the reference:
 from __future__ import annotations
 
 import math
+from collections import Counter
 from dataclasses import dataclass, field
 
-from pulse_spark.text.normalize import PreprocessSettings, term_frequencies, tokens
+from pulse_spark.text.normalize import PreprocessSettings, tokens
 
 BM25_K1 = 1.3
 BM25_B = 0.5
@@ -64,7 +65,7 @@ def build_index(
         dl = len(trimmed.encode("utf-8"))
         idx.doc_lens[doc_no] = dl
         total_len += dl
-        for term, tf in term_frequencies(tokens(trimmed, settings)).items():
+        for term, tf in Counter(tokens(trimmed, settings)).items():
             idx.postings.setdefault(term, {})[doc_no] = tf
     idx.n_docs = len(docs)
     idx.adl = (total_len / idx.n_docs) if idx.n_docs else 0.0

@@ -21,8 +21,8 @@ occurrence table and re-entering `topk_from_tables` (whose optional
 Scale design (the part that must survive 100 TB): both operators touch
 document TEXT only for a driver-bounded handful of docs (fb_k·|q| resp.
 |sources|).  The doc vectors come from re-tokenizing just those rows —
-a broadcast semi-join prunes the docs scan, then the same pandas-UDF
-tokenizer the index build uses runs on ≤ a few dozen rows — NOT from
+a broadcast semi-join prunes the docs scan, then the term-frequency
+kernel the index build uses runs on ≤ a few dozen rows — NOT from
 the inverted postings table (fetching a doc's terms from an inverted
 index is a full scan; a forward index is the classical alternative, and
 here the docs table IS the forward index).  Everything between the two
@@ -41,9 +41,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pulse_spark.query.search import topk_from_tables
+from pulse_spark.query.search import (bounded_topk, scored_candidates,
+                                      topk_from_tables)
 from pulse_spark.text.normalize import PreprocessSettings
-from pulse_spark.text.udfs import make_tokenizer_udf
+from pulse_spark.text.udfs import term_freq_rows
 
 
 def _doc_term_freqs(
@@ -52,17 +53,14 @@ def _doc_term_freqs(
     settings: PreprocessSettings,
     id_col: str,
 ) -> DataFrame:
-    """(<id_col>, term, tf, n_toks) for ONLY the docs in `wanted` —
-    broadcast semi-join prune, then tokenize the survivors."""
-    tok = make_tokenizer_udf(settings)
+    """(term, <id_col>, tf, n_toks) for ONLY the docs in `wanted` —
+    broadcast semi-join prune, then the term_freq_rows kernel over the
+    survivors; n_toks (the doc's token count) is the doc's sum of tf."""
     picked = docs_text.join(
         F.broadcast(wanted.select(id_col).distinct()), id_col, "left_semi"
-    ).select(id_col, tok(F.col("text")).alias("toks"))
-    exploded = picked.select(
-        id_col, F.size("toks").alias("n_toks"), F.explode("toks").alias("term")
     )
-    return exploded.groupBy(id_col, "n_toks", "term").agg(
-        F.count(F.lit(1)).alias("tf")
+    return term_freq_rows(picked, settings, (id_col,)).withColumn(
+        "n_toks", F.sum("tf").over(Window.partitionBy(id_col))
     )
 
 
@@ -230,22 +228,9 @@ def more_like_this_topk(
         docs_text, sources, terms, n_docs, settings,
         id_col=id_col, top_terms=top_terms,
     )
-    res = topk_from_tables(
-        postings, terms, occ, n_docs, adl,
-        # over-fetch by one: the source doc itself is usually its own
-        # best match and is dropped below
-        k=k + 1, metric=metric, id_col=id_col, tie_round=tie_round,
-    )
-    res = res.where(F.col("query_id") != F.col(id_col))
-    order_key = (
-        F.round("score", tie_round) if tie_round is not None
-        else F.col("score")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(order_key), F.asc(id_col)
-    )
-    return (
-        res.withColumn("rank", F.row_number().over(w) - 1)
-        .where(F.col("rank") < k)
-        .select("query_id", "rank", id_col, "score")
+    per_doc = scored_candidates(
+        postings, terms, occ, n_docs, adl, metric=metric, id_col=id_col,
+    ).where(F.col("query_id") != F.col(id_col))
+    return bounded_topk(
+        per_doc, k, id_col, tie_round, approx_candidates=n_docs
     )

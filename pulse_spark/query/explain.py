@@ -23,8 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pulse_spark.query.search import (
+    match_postings,
     prepare_query_scan,
-    score_expr,
     topk_from_tables,
     with_doc_no,
 )
@@ -62,12 +62,8 @@ def explain_topk(
         id_col=id_col, tie_round=tie_round, deletes=deletes,
         doc_filter=doc_filter,
     )
-    qt = q_occurrences.join(terms.select("term", "df"), "term")
-    part = score_expr(metric, n_docs, adl)
-    if "weight" in q_occurrences.columns:
-        part = part * F.col("weight")
-    matched = postings.join(F.broadcast(qt), "term").withColumn(
-        "part_score", part
+    _, matched = match_postings(
+        postings, terms, q_occurrences, n_docs, adl, metric
     )
     per_term = matched.groupBy("query_id", id_col, "term").agg(
         F.max("tf").alias("tf"),

@@ -163,17 +163,8 @@ def scored_candidates(
     ignored."""
     if metric.upper() not in ("BM25", "TFIDF"):
         raise ValueError(f"{metric} is not a valid metric")  # metric.go:30-37
-    if df_attached:
-        qt = q_occurrences
-    else:
-        # global-term lookup: inner join drops absent terms (search.go:29-46)
-        qt = q_occurrences.drop("df").join(terms.select("term", "df"), "term")
-
-    part = score_expr(metric, n_docs, adl)
-    if "weight" in q_occurrences.columns:
-        part = part * F.col("weight")
-    matched = postings.join(F.broadcast(qt), "term").withColumn(
-        "part_score", part
+    qt, matched = match_postings(
+        postings, terms, q_occurrences, n_docs, adl, metric, df_attached
     )
     if doc_filter is not None:
         matched = matched.join(
@@ -197,6 +188,31 @@ def scored_candidates(
             deletes.select(id_col).distinct(), id_col, "left_anti"
         )
     return per_doc.select("query_id", id_col, "score")
+
+
+def match_postings(
+    postings: DataFrame,
+    terms: DataFrame,
+    q_occurrences: DataFrame,
+    n_docs: int,
+    adl: float,
+    metric: str,
+    df_attached: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """The scorer's match step, shared with explain: (qt, matched) — the
+    occurrences with their term's df (absent terms dropped, search.go:29-46)
+    and one row per (posting, occurrence) with its `part_score` (times
+    `weight` when present).  df_attached: see scored_candidates."""
+    if df_attached:
+        qt = q_occurrences
+    else:
+        qt = q_occurrences.drop("df").join(terms.select("term", "df"), "term")
+    part = score_expr(metric, n_docs, adl)
+    if "weight" in q_occurrences.columns:
+        part = part * F.col("weight")
+    return qt, postings.join(F.broadcast(qt), "term").withColumn(
+        "part_score", part
+    )
 
 
 def hit_stats(

@@ -1,5 +1,5 @@
 """Text preprocessing pipeline — pure-Python core shared by the
-pandas-UDF wrappers (``pulse_spark.text.udfs``) and the test oracle
+Arrow UDFs (``pulse_spark.text.udfs``) and the test oracle
 (``pulse_spark.oracle``).
 
 Reproduces the reference pipeline exactly
@@ -33,7 +33,6 @@ __all__ = [
     "clean",
     "tokenize",
     "tokens",
-    "term_frequencies",
     "doc_length",
 ]
 
@@ -133,14 +132,6 @@ def tokens(content: str, settings: PreprocessSettings = PreprocessSettings()) ->
     if settings.stemming:
         toks = stem_tokens(toks)
     return toks
-
-
-def term_frequencies(toks: list[str]) -> dict[str, int]:
-    """preprocess.Frequencies (preprocess.go:36-46)."""
-    freqs: dict[str, int] = {}
-    for t in toks:
-        freqs[t] = freqs.get(t, 0) + 1
-    return freqs
 
 
 def doc_length(raw_text: str) -> int:

@@ -1,10 +1,9 @@
 """Arrow-vectorized Spark UDFs for the text pipeline.
 
-Per the north rule, no per-row Python UDFs anywhere: tokenization runs as
-a pandas UDF over Arrow batches, with a per-batch memo on distinct strings
-(Zipfian text ⇒ most batch rows share few distinct token sets is false,
-but tokens themselves repeat heavily, and the Porter stemmer keeps its own
-distinct-token memo — see porter.stem_tokens).
+No per-row Python UDFs: ``normalize.tokens`` runs over Arrow batches,
+as the array tokenizer (``make_tokenizer_udf``, for positional and
+array consumers) or as the term-frequency kernel (``term_freq_rows``).
+The Porter stemmer keeps its own distinct-token memo (porter.stem_tokens).
 
 Column-expression (JVM/codegen) equivalents are used wherever exact
 (trim/length); only the unicode-normalize + stem steps genuinely need
@@ -13,8 +12,12 @@ Python.
 
 from __future__ import annotations
 
+from itertools import chain
+
+import numpy as np
 import pandas as pd
-from pyspark.sql import Column
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -57,46 +60,55 @@ def make_tokenizer_udf(settings: PreprocessSettings):
     """Returns a pandas UDF str -> array<string> running the full
     reference pipeline (T1-T7 of SURVEY.md §2.2)."""
 
-    stop = settings.stopwords_removal
-    stemming = settings.stemming
-
     @pandas_udf(T.ArrayType(T.StringType()))
     def tokenize_udf(texts: pd.Series) -> pd.Series:
-        s = PreprocessSettings(stopwords_removal=stop, stemming=stemming)
-        return texts.map(lambda t: tokens(t, s) if t is not None else [])
+        return texts.map(lambda t: tokens(t, settings) if t is not None else [])
 
     return tokenize_udf
 
 
-def make_term_freq_udf(settings: PreprocessSettings):
-    """T1-T7 + T8 fused: str -> array<struct<term,tf>>.
+def term_freq_rows(
+    df: DataFrame, settings: PreprocessSettings, keep: tuple[str, ...]
+) -> DataFrame:
+    """(term, *keep, tf int): one row per (doc, distinct term) of
+    tokens(text), preprocess.Frequencies (preprocess.go:36-46) — the one
+    per-doc term-frequency count of the package.  A null text or a doc
+    with no tokens emits no rows.
 
-    Per-doc term frequencies are computed INSIDE the Arrow batch
-    (preprocess.Frequencies, preprocess.go:36-46), so the index build
-    needs no (term, doc) shuffle at all — tf is local to the document by
-    construction; only the df/max_tf merge aggregates across documents."""
+    One mapInArrow over (*keep, text): per Arrow batch, pd.factorize codes
+    the batch's token occurrences, np.unique counts the (doc, code) keys,
+    and the keep columns are taken from the batch by doc index — no
+    per-doc Python list, no array<struct>, no explode, no shuffle."""
+    schema = T.StructType([
+        T.StructField("term", T.StringType()),
+        *(df.schema[c] for c in keep),
+        T.StructField("tf", T.IntegerType()),
+    ])
+    n_keep = len(keep)
 
-    stop = settings.stopwords_removal
-    stemming = settings.stemming
-    out_t = T.ArrayType(
-        T.StructType([
-            T.StructField("term", T.StringType()),
-            T.StructField("tf", T.IntegerType()),
-        ])
-    )
+    def count(batches):
+        for b in batches:
+            toks = [
+                tokens(t, settings) if t is not None else []
+                for t in b.column(n_keep).to_pylist()
+            ]
+            sizes = np.fromiter(map(len, toks), dtype=np.int64, count=len(toks))
+            n = int(sizes.sum())
+            if n == 0:
+                continue
+            codes, uniq = pd.factorize(
+                np.fromiter(chain.from_iterable(toks), dtype=object, count=n)
+            )
+            key = np.repeat(np.arange(len(toks)), sizes) * len(uniq) + codes
+            key, tf = np.unique(key, return_counts=True)
+            doc, code = np.divmod(key, len(uniq))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(uniq, pa.string()).take(code),
+                    *(b.column(i).take(doc) for i in range(n_keep)),
+                    pa.array(tf.astype(np.int32)),
+                ],
+                names=schema.names,
+            )
 
-    @pandas_udf(out_t)
-    def term_freq_udf(texts: pd.Series) -> pd.Series:
-        s = PreprocessSettings(stopwords_removal=stop, stemming=stemming)
-
-        def freqs(t):
-            if t is None:
-                return []
-            counts: dict[str, int] = {}
-            for tok in tokens(t, s):
-                counts[tok] = counts.get(tok, 0) + 1
-            return list(counts.items())
-
-        return texts.map(freqs)
-
-    return term_freq_udf
+    return df.select(*keep, "text").mapInArrow(count, schema)

@@ -1,11 +1,16 @@
 """Golden tokenizer tests ported from the reference
 (pkg/word/word_test.go, pkg/preprocess semantics)."""
 
+from collections import Counter
+
+import pytest
+from hypothesis import given, seed, settings
+from hypothesis import strategies as st
+
 from pulse_spark.text.normalize import (
     PreprocessSettings,
     clean,
     doc_length,
-    term_frequencies,
     tokenize,
     tokens,
 )
@@ -109,9 +114,56 @@ def test_unicode_and_html():
     assert tokens("x=y+1 ... C++", s) == ["x", "y", "1", "c"]
 
 
-def test_term_frequencies():
-    assert term_frequencies(["a", "b", "a"]) == {"a": 2, "b": 1}
-    assert term_frequencies([]) == {}
+# fragments that exercise every step of the pipeline: stopwords, stems,
+# duplicates, HTML, control chars, non-ASCII (final sigma, dotted I)
+_FRAGMENTS = [
+    "spark", "Spark", "running", "runs", "the", "and", "of", "x", "42",
+    "café", "naïve", "ΟΔΟΣ", "İstanbul", "ẞ", "日本語", "🚀", "<b>", "</p>",
+    "<a href='x'>", "\x00", "\x07", "\u200b", "...", "C++", " ", "\t", "\n",
+]
+_TEXTS = st.one_of(
+    st.none(),
+    st.sampled_from(["", "  \t\n ", "the and a of", "<br/>"]),
+    st.lists(st.sampled_from(_FRAGMENTS), max_size=12).map(" ".join),
+    st.lists(st.sampled_from(_FRAGMENTS), max_size=12).map("".join),
+    st.text(max_size=40),
+)
+
+
+@pytest.mark.parametrize("stemming", [True, False])
+@seed(7102)
+@settings(max_examples=5, deadline=None)
+@given(texts=st.lists(_TEXTS, min_size=1, max_size=12))
+def test_term_freq_rows_matches_counter(spark, stemming, texts):
+    """term_freq_rows == Counter(tokens(text)) per doc, no rows for a
+    doc without tokens.  Batches of 2 rows over one partition that
+    starts with two token-less docs: docs span many batches and the
+    first batch emits zero rows."""
+    from pulse_spark.text.udfs import term_freq_rows
+
+    s = PreprocessSettings(stopwords_removal=True, stemming=stemming)
+    texts = [None, "the and"] + texts
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(list(enumerate(texts)), 1),
+        "id long, text string",
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        rows = term_freq_rows(df, s, ("id",)).collect()
+    finally:
+        spark.conf.set(key, prev)
+    got: dict[int, dict[str, int]] = {}
+    for r in rows:
+        assert r["term"] not in got.setdefault(r["id"], {})
+        got[r["id"]][r["term"]] = r["tf"]
+    exp = {
+        i: dict(Counter(tokens(t, s)))
+        for i, t in enumerate(texts)
+        if t is not None and tokens(t, s)
+    }
+    assert got == exp
 
 
 def test_doc_length_bytes_of_trimmed():
@@ -125,7 +177,11 @@ def test_case_mapping_is_pinned(spark):
     """get_spark pins lowercasing to the JVM case mapping
     (spark.sql.icu.caseMappings.enabled=false) and the dedup / text-stats
     normalizations give these exact strings — a change of the conf or of
-    Spark's default shows up here, not as silently different results."""
+    Spark's default shows up here, not as silently different results.
+    DuckDB's lower() (the datapipe oracles' _NORM) maps final sigma and
+    dotted capital I differently: those oracles are exact only on text
+    without them."""
+    import duckdb
     from pyspark.sql import functions as F
 
     from pulse_spark.datapipe.dedup import normalized_text
@@ -149,3 +205,6 @@ def test_case_mapping_is_pinned(spark):
         3: ("ß", ["ß"]),
         4: ("hello spark world 42", ["hello", "spark", "world", "42"]),
     }
+    assert duckdb.sql(
+        "SELECT lower('ΟΔΟΣ'), lower('İstanbul'), lower('ẞ')"
+    ).fetchone() == ("οδοσ", "istanbul", "ß")
