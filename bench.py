@@ -176,7 +176,7 @@ def _build_throughput(cpus: int, src: str, tmp: str) -> dict:
     """Index-build throughput (turns/sec) at one parallelism level, in a
     fresh JVM, over the pre-generated shared input.
 
-    The job's LOGICAL config (term_buckets, shuffle partitions, salt) is
+    The job's LOGICAL config (term_buckets, shuffle partitions) is
     IDENTICAL at both levels — comparing N vs 4N executors means changing
     only the resource count, never the plan.  store_text=False is the
     at-scale configuration (the index stores doc metadata; the source

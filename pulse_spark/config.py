@@ -8,7 +8,7 @@ We persist it in the index manifest for the same reason.
 
 from __future__ import annotations
 
-from dataclasses import asdict, dataclass
+from dataclasses import asdict, dataclass, fields
 
 from pulse_spark.text.normalize import PreprocessSettings
 
@@ -20,13 +20,6 @@ class IndexingSettings:
     compression: bool = True          # delta+varint postings / unary tfs in segments
     term_buckets: int = 32            # hash-partition count of the postings layout
     block_size: int = 128             # max postings per compressed block
-    salt_partitions: int = 8          # least reducer count of the postings
-                                      # layout shuffle (it runs max(this,
-                                      # spark.sql.shuffle.partitions)); each
-                                      # reducer takes a doc-id hash slice of
-                                      # every term bucket (hot-term skew
-                                      # defusal).  0/1 = unsalted: a bucket
-                                      # stays in one reducer
     store_text: bool = True           # keep the trimmed text in docs/ (the
                                       # per-turn text-equality surface).  At
                                       # 10^12-turn scale set False: the index
@@ -47,7 +40,10 @@ class IndexingSettings:
 
     @staticmethod
     def from_dict(d: dict) -> "IndexingSettings":
-        return IndexingSettings(**d)
+        """Keys that are not fields (a deleted knob such as salt_partitions)
+        are dropped, so every older manifest still opens."""
+        names = {f.name for f in fields(IndexingSettings)}
+        return IndexingSettings(**{k: v for k, v in d.items() if k in names})
 
 
 BM25_K1 = 1.3   # pkg/engine/metric.go:18

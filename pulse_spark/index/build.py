@@ -11,8 +11,9 @@ merge:
       ──groupBy(term).agg(df,max_tf)──► terms                [shuffle*]
       ──agg(count,avg)──► stats (N, ADL)
 
-tf is counted inside each Arrow batch, so postings need no shuffle of
-their own.  (*) partial/map-side aggregation makes the terms shuffle
+tf is counted inside each Arrow batch and each doc-id range partition
+writes its own postings files, so postings need no shuffle.
+(*) partial/map-side aggregation makes the terms shuffle
 carry one row per (task, term) — the salted two-phase pattern the north
 rule asks for is exactly Catalyst's partial+final HashAggregate; an
 explicit salt column is only needed for order-sensitive merges (segment

@@ -143,18 +143,21 @@ def write_stage(
 
 
 def record_stage(
-    spark: SparkSession, out_dir: str, manifest: dict, stage: str, wall_sec: float
+    spark: SparkSession, out_dir: str, manifest: dict, stage: str,
+    wall_sec: float, **extra,
 ) -> DataFrame:
     """Record lineage for an already-written stage and return the re-read
     DataFrame (downstream stages consume the committed data, making
     boundaries deterministic for resume).  Lineage = rows per committed
-    file, read from parquet FOOTERS only — no Spark job, no data scan."""
+    file, read from parquet FOOTERS only — no Spark job, no data scan.
+    `extra` keys join the stage entry in the same (atomic) save."""
     path = os.path.join(out_dir, stage)
     part_counts = _footer_row_counts(path)
     manifest["stages"][stage] = {
         "rows": int(sum(part_counts.values())),
         "partitions": part_counts,
         "wall_sec": wall_sec,
+        **extra,
     }
     save_manifest(out_dir, manifest)
     return spark.read.parquet(path)
@@ -168,10 +171,12 @@ def commit_stage(
     partition_by: list[str] | None = None,
     sort_within: list[str] | None = None,
     options: dict[str, str] | None = None,
+    **extra,
 ) -> DataFrame:
     """write_stage + record_stage (the sequential convenience form)."""
     wall = write_stage(df, out_dir, stage, partition_by, sort_within, options)
-    return record_stage(df.sparkSession, out_dir, manifest, stage, wall)
+    return record_stage(df.sparkSession, out_dir, manifest, stage, wall,
+                        **extra)
 
 
 def _footer_row_counts(path: str) -> dict[str, int]:
@@ -205,16 +210,9 @@ def check_settings(manifest: dict, settings: IndexingSettings) -> None:
     if manifest["settings"] is None:
         manifest["settings"] = settings.to_dict()
         return
-    # forward-compatible comparison: a manifest written before a new
-    # settings field existed resumes under that field's DEFAULT (strict
-    # dict equality would refuse to resume every pre-upgrade index);
-    # unknown stored keys are ignored for the same reason.
-    import dataclasses
-
-    known = {f.name for f in dataclasses.fields(IndexingSettings)}
-    stored = IndexingSettings.from_dict(
-        {k: v for k, v in manifest["settings"].items() if k in known}
-    ).to_dict()
+    # from_dict gives a field the stored dict lacks its default and drops
+    # stored keys that are no longer fields, so every older index resumes
+    stored = IndexingSettings.from_dict(manifest["settings"]).to_dict()
     if stored != settings.to_dict():
         raise ValueError(
             "index at this path was built with different settings; "

@@ -108,14 +108,16 @@ def merge_many(
     if len(in_dirs) < 2:
         raise ValueError("merge needs at least two inputs")
     manifests, n_i, _ = zip(*(ckpt.read_committed(d) for d in in_dirs))
+    # compare parsed settings: raw dicts differ by an older index's deleted keys
+    settings = IndexingSettings.from_dict(manifests[0]["settings"])
     for d, m in zip(in_dirs, manifests):
-        if m["settings"] != manifests[0]["settings"]:
+        other = IndexingSettings.from_dict(m["settings"])
+        if other != settings:
             raise ValueError(
-                f"settings mismatch: {manifests[0]['settings']} != "
-                f"{m['settings']} ({d}) — an index's preprocessing binds "
+                f"settings mismatch: {settings.to_dict()} != "
+                f"{other.to_dict()} ({d}) — an index's preprocessing binds "
                 "its query semantics"
             )
-    settings = IndexingSettings.from_dict(manifests[0]["settings"])
 
     if any(n == 0 for n in n_i):
         raise ValueError("refusing to merge an empty index (nothing to do)")

@@ -12,9 +12,9 @@ Layout (out_dir):
                                 by (term, doc_id) within files → parquet
                                 row-group min/max prune on term.  Written
                                 only by write_postings (build, stream
-                                compaction, vacuum and merge alike):
-                                hash(doc_id) into max(shuffle.partitions,
-                                salt_partitions) reducers, each writing
+                                compaction, vacuum and merge alike), with
+                                no shuffle: each input partition (in the
+                                build, one contiguous doc-id range) writes
                                 one file per bucket
   terms/                        (term, df, max_tf)
   stats/                        single row (n_docs, adl); doc_ids are
@@ -69,22 +69,14 @@ def write_postings(p: DataFrame, out_dir: str, settings: IndexingSettings) -> fl
     merge).
     Records nothing; returns wall seconds.
 
-    The layout shuffle has max(spark.sql.shuffle.partitions,
-    salt_partitions) reducers, so its task count follows the session, not
-    term_buckets x salts.  Salted (salt_partitions > 1): rows go to
-    reducers by a hash of the doc id, so every bucket, and a hot term
-    inside it, is split across all reducers; a bare repartition by bucket
-    would send a hot term's millions of postings (Zipf text guarantees
-    them) to ONE task.  partitionBy("bucket") still groups each reducer's
-    rows into one file per bucket dir, so query-side bucket pruning is
-    unchanged.  Unsalted: reducers by bucket, each bucket in one task.
+    No shuffle: each input partition writes one file per bucket dir, as
+    each pulse SPIMI worker writes out its own block (spimi.go:33-228).
+    In the batch build these are assign_doc_ids' balanced doc-id range
+    partitions, so a hot term is split across all of them; in the
+    rewrites they are the feeding scan's or join's, so the file count
+    follows the input size.
     """
-    n_reducers = max(
-        int(p.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-        settings.salt_partitions,
-    )
-    key = "doc_id" if settings.salt_partitions > 1 else "bucket"
-    p = B.with_term_bucket(p, settings.term_buckets).repartition(n_reducers, key)
+    p = B.with_term_bucket(p, settings.term_buckets)
     return ckpt.write_stage(
         p, out_dir, "postings", partition_by=["bucket"], sort_within=["term", "doc_id"]
     )
@@ -258,8 +250,8 @@ def build_persisted_index(
 
     # stage: postings, hash-bucketed by term, term-sorted within files
     if do_postings:
-        # doc_id rides through the tokenizer — no join back to docs, so
-        # the only shuffle here is the bucket layout one.  The posting row
+        # doc_id rides through the tokenizer — no join back to docs and
+        # no shuffle (write_postings).  The posting row
         # carries ONLY the 8-byte id (doc_no is recovered at output time
         # from the docs table): at 10^12 turns the doc_no string would
         # dominate shuffle/storage bytes.

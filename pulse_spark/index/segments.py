@@ -17,11 +17,12 @@ prunes with it.
 
 Scale design: documents are split into doc_ranges (the unit of scoring
 parallelism — the analog of the reference's per-partition search,
-search.go:52-62).  Segment build is ONE shuffle (repartition by
-doc_range, sort by term within partitions) and a linear mapInArrow pass
-that encodes each Arrow batch's blocks in numpy (encode_partition), with
-no per-posting Python loop; no per-term grouping, so hot terms cannot
-skew an aggregation — a mega term simply spans many blocks across ranges.
+search.go:52-62).  Segment build is ONE shuffle (repartitionById on
+doc_range, one range per task; sort by term within partitions) and a
+linear mapInArrow pass that encodes each Arrow batch's blocks in numpy
+(encode_partition), with no per-posting Python loop; no per-term
+grouping, so hot terms cannot skew an aggregation — a mega term simply
+spans many blocks across ranges.
 """
 
 from __future__ import annotations
@@ -213,11 +214,12 @@ def build_segments(
     settings: IndexingSettings,
     n_docs: int,
     adl: float,
-    n_ranges: int | None = None,
 ) -> DataFrame:
     """postings must carry (term, doc_id, tf, doc_len); n_docs/adl are
-    the committed stats stage's.  One shuffle."""
-    n_ranges = n_ranges or max(spark.sparkContext.defaultParallelism, 8)
+    the committed stats stage's.  One shuffle, one doc_range per task
+    (doc ids are dense, so doc_range < n_ranges); the stage commits
+    with its grid (range_size, n_ranges) in one manifest save."""
+    n_ranges = max(spark.sparkContext.defaultParallelism, 8)
     range_size = max(1, -(-n_docs // n_ranges))  # ceil
     block_size = settings.block_size
     compress = settings.compression
@@ -226,7 +228,7 @@ def build_segments(
         "doc_range", (F.col("doc_id") / F.lit(range_size)).cast("int")
     )
     seg = (
-        src.repartition(n_ranges, "doc_range")
+        src.repartitionById(n_ranges, "doc_range")
         .sortWithinPartitions("term", "doc_id")
         .select("term", "doc_range", "doc_id", "tf", "doc_len")
         .mapInArrow(
@@ -235,15 +237,12 @@ def build_segments(
             SEGMENT_SCHEMA,
         )
     )
-    committed = ckpt.commit_stage(
+    return ckpt.commit_stage(
         out_dir, manifest, "segments", seg, partition_by=["doc_range"],
         sort_within=["term", "min_doc_id"],
         options={"parquet.block.size": str(SEGMENT_ROW_GROUP_BYTES)},
+        range_size=range_size, n_ranges=n_ranges,
     )
-    manifest["stages"]["segments"]["range_size"] = range_size
-    manifest["stages"]["segments"]["n_ranges"] = n_ranges
-    ckpt.save_manifest(out_dir, manifest)
-    return committed
 
 
 # ---------------------------------------------------------------------------

@@ -123,8 +123,9 @@ def compact_stream_index(
 
     Shuffle profile: doc_id assignment (range partition on the stable
     key), one doc_no->doc_id equi-join of the posting deltas (no
-    broadcast assumption — AQE picks the strategy), the salted bucket
-    layout shuffle, and (with segments) the segments range shuffle.
+    broadcast assumption — AQE picks the strategy), whose partitions
+    write the bucket layout with no shuffle of their own, and (with
+    segments) the segments range shuffle.
     Token-linear Python: none.
     """
     import json

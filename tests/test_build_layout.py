@@ -1,8 +1,9 @@
 """Build-shape guards for the index build: how its work is laid out in
 tasks and files, which correctness tests can't see — the doc-id stage's
-single exchange, the postings shuffle sized to the session, term-sorted
-postings files and one segments grid on every write path, and the
-vectorized segment encoder's byte identity with the per-block encoder."""
+single exchange, the postings stage written without a shuffle, one
+segments task per doc range, term-sorted postings files and one
+segments grid on every write path, and the vectorized segment
+encoder's byte identity with the per-block encoder."""
 
 from __future__ import annotations
 
@@ -50,28 +51,30 @@ def test_assign_doc_ids_one_exchange_balanced(spark):
         parted.unpersist()
 
 
-@pytest.mark.parametrize("salt", [8, 16])
-def test_postings_shuffle_sized_to_session(spark, tmp_path, salt):
-    """No stage of a build runs more than max(shuffle.partitions,
-    salt_partitions) tasks; the postings layout shuffle used to run
-    term_buckets x salt_partitions (256 at the defaults)."""
-    from pulse_spark.index.persist import build_persisted_index
-
-    tr = spark.range(2000, numPartitions=4).select(
+def _small_transcripts(spark, n):
+    return spark.range(n, numPartitions=4).select(
         F.col("id").cast("string").alias("conv_id"),
         F.lit(0).cast("int").alias("turn_idx"),
         F.concat_ws(" ", F.lit("alpha"),
                     F.concat(F.lit("w"), (F.col("id") % 97).cast("string")))
         .alias("text"),
     )
+
+
+def test_postings_shuffle_sized_to_session(spark, tmp_path):
+    """No stage of a build runs more than spark.sql.shuffle.partitions
+    tasks; the postings layout once ran term_buckets x salts tasks (256
+    at the defaults)."""
+    from pulse_spark.index.persist import build_persisted_index
+
+    tr = _small_transcripts(spark, 2000)
     sc = spark.sparkContext
-    group = f"postings-shape-{salt}"
+    group = "postings-shape"
     sc.setJobGroup(group, "postings layout task bound")
     try:
         build_persisted_index(
             spark, tr, str(tmp_path / "idx"),
-            IndexingSettings(term_buckets=32, salt_partitions=salt,
-                             store_text=False),
+            IndexingSettings(term_buckets=32, store_text=False),
         )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -82,10 +85,52 @@ def test_postings_shuffle_sized_to_session(spark, tmp_path, salt):
         for s in st.getJobInfo(j).stageIds
         if st.getStageInfo(s) is not None
     ]
-    bound = max(int(spark.conf.get("spark.sql.shuffle.partitions")), salt)
+    bound = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert tasks and max(tasks) <= bound, (bound, tasks)
     files = glob.glob(str(tmp_path / "idx" / "postings" / "*" / "*.parquet"))
-    assert len(files) > 32  # every bucket is still split across reducers
+    assert len(files) > 32  # every bucket is still split across tasks
+
+
+def _task_no(path: str) -> int:
+    """The write task's partition number in a part-NNNNN-... file name."""
+    return int(re.match(r"part-(\d+)-", os.path.basename(path)).group(1))
+
+
+def test_build_writes_each_partition_without_layout_shuffle(spark, tmp_path):
+    """The batch build writes postings from assign_doc_ids' range
+    partitions, with no shuffle in between: inside each bucket dir the
+    files' [min doc_id, max doc_id] intervals are disjoint (a shuffle by
+    doc_id hash interleaves them).  The segments encode runs one
+    doc_range per task: the doc_range dirs' files carry n_ranges
+    distinct task numbers, one per range."""
+    import json
+
+    from pulse_spark.index.persist import build_persisted_index
+
+    out = str(tmp_path / "idx")
+    build_persisted_index(spark, _small_transcripts(spark, 2000), out,
+                          IndexingSettings(term_buckets=4, store_text=False),
+                          build_segments=True)
+    for bucket in glob.glob(os.path.join(out, "postings", "bucket=*")):
+        spans = sorted(
+            (min(ids), max(ids))
+            for ids in (pq.read_table(f, columns=["doc_id"])["doc_id"]
+                        .to_pylist()
+                        for f in glob.glob(os.path.join(bucket, "*.parquet")))
+        )
+        assert len(spans) > 1, bucket
+        assert all(a[1] < b[0] for a, b in zip(spans, spans[1:])), spans
+
+    with open(os.path.join(out, "manifest.json")) as f:
+        n_ranges = json.load(f)["stages"]["segments"]["n_ranges"]
+    tasks = {
+        os.path.basename(d): {_task_no(f) for f in
+                              glob.glob(os.path.join(d, "*.parquet"))}
+        for d in glob.glob(os.path.join(out, "segments", "doc_range=*"))
+    }
+    assert len(tasks) == n_ranges, tasks
+    assert all(len(t) == 1 for t in tasks.values()), tasks
+    assert len(set().union(*tasks.values())) == n_ranges, tasks
 
 
 def _assert_sorted(root: str, cols: list[str]) -> int:
@@ -112,8 +157,7 @@ def test_postings_files_term_sorted_on_every_write_path(spark, tmp_path):
     from pulse_spark.streaming.incremental import (compact_stream_index,
                                                    start_incremental_build)
 
-    settings = IndexingSettings(term_buckets=4, salt_partitions=4,
-                                block_size=16)
+    settings = IndexingSettings(term_buckets=4, block_size=16)
     rows = gen_transcripts(n_convs=40, seed=11)
     src = tmp_path / "in"
     src.mkdir()

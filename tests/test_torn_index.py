@@ -1,7 +1,9 @@
 """Torn index files: what a crash or a partial copy leaves in an index
 directory must either be ignored (a leftover manifest temp file) or
 fail loudly at open (a truncated manifest or segment file) — never
-silently restart a build or serve partial results."""
+silently restart a build or serve partial results.  A build killed
+between its writes resumes, and an index an older version wrote still
+opens."""
 
 from __future__ import annotations
 
@@ -79,6 +81,109 @@ def test_torn_manifest_and_segment_files(spark, transcripts_path, tmp_path):
         f.write(raw[: len(raw) // 2])
     with pytest.raises(pa.ArrowInvalid, match="(?i)parquet"):
         PointServer(m)
+
+
+def test_segments_stage_commits_with_its_grid(spark, transcripts_path,
+                                             tmp_path, monkeypatch):
+    """No saved manifest lists the segments stage without its grid
+    (range_size, n_ranges): the scorer and the sharded server read both,
+    and a resume skips a listed stage.  A build killed at the save that
+    commits segments resumes into an index both serve, with the results
+    of a fresh build."""
+    from pulse_spark.index import checkpoint as ckpt
+    from pulse_spark.index.persist import load_index
+    from pulse_spark.index.segments import search_segments
+    from pulse_spark.serve import ShardedServer
+
+    tr = spark.read.parquet(transcripts_path)
+    real_save = ckpt.save_manifest
+    saved = []
+
+    def spy(out_dir, manifest):
+        saved.append(json.loads(json.dumps(manifest)))
+        real_save(out_dir, manifest)
+
+    monkeypatch.setattr(ckpt, "save_manifest", spy)
+    fresh = str(tmp_path / "fresh")
+    build_persisted_index(spark, tr, fresh, SETTINGS, build_segments=True)
+    listed = [m["stages"]["segments"] for m in saved
+              if "segments" in m["stages"]]
+    assert listed
+    assert all({"range_size", "n_ranges"} <= set(s) for s in listed), listed
+
+    class Killed(Exception):
+        pass
+
+    def kill_at_grid(out_dir, manifest):
+        if "n_ranges" in manifest["stages"].get("segments", {}):
+            raise Killed
+        real_save(out_dir, manifest)
+
+    torn = str(tmp_path / "torn")
+    monkeypatch.setattr(ckpt, "save_manifest", kill_at_grid)
+    with pytest.raises(Killed):
+        build_persisted_index(spark, tr, torn, SETTINGS, build_segments=True)
+    monkeypatch.setattr(ckpt, "save_manifest", real_save)
+    build_persisted_index(spark, tr, torn, SETTINGS, build_segments=True)
+
+    qdf = spark.createDataFrame(gen_queries(), "query_id long, text string")
+
+    def served(out_dir):
+        seg = sorted(
+            (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
+            for r in search_segments(spark, load_index(spark, out_dir),
+                                     qdf, k=10).collect()
+        )
+        with ShardedServer(out_dir, n_shards=2) as sh:
+            shard = [[(r.doc_no, round(r.score, 9)) for r in
+                      sh.search(text, k=10)] for _, text in gen_queries()]
+        return seg, shard
+
+    got = served(torn)
+    assert got[0] and any(got[1])
+    assert got == served(fresh)
+
+
+def test_manifest_with_deleted_setting_still_opens(spark, transcripts_path,
+                                                    tmp_path):
+    """An index whose manifest still stores salt_partitions (a setting
+    since deleted: the postings layout no longer shuffles) opens through
+    load_index and PointServer, resumes a build and merges with an index
+    written without it."""
+    from pulse_spark.index.merge import merge_indexes
+    from pulse_spark.index.persist import load_index
+    from pulse_spark.serve import PointServer
+
+    tr = spark.read.parquet(transcripts_path)
+    halves = (tr.where(F.col("conv_id") < "c000060"),
+              tr.where(F.col("conv_id") >= "c000060"))
+    old, new = (str(tmp_path / n) for n in ("old", "new"))
+    build_persisted_index(spark, halves[0], old, SETTINGS)
+    build_persisted_index(spark, halves[1], new, SETTINGS,
+                          build_segments=True)
+    path = os.path.join(old, "manifest.json")
+    with open(path) as f:
+        manifest = json.load(f)
+    manifest["settings"]["salt_partitions"] = 8
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+
+    assert load_index(spark, old).settings == SETTINGS
+    idx = build_persisted_index(spark, halves[0], old, SETTINGS,
+                                build_segments=True)
+    with open(path) as f:
+        stages = json.load(f)["stages"]
+    assert {s: stages[s] for s in manifest["stages"]} == manifest["stages"]
+    assert "segments" in stages
+    with PointServer(old) as srv:
+        assert any(srv.search(text, k=3) for _, text in gen_queries())
+
+    merged = merge_indexes(spark, old, new, str(tmp_path / "m"))
+    assert merged.settings == SETTINGS
+    assert merged.n_docs == idx.n_docs + load_index(spark, new).n_docs
+    assert merged.n_docs == tr.count()
+    with PointServer(merged.out_dir) as srv:
+        assert any(srv.search(text, k=3) for _, text in gen_queries())
 
 
 def test_empty_input_is_refused_before_any_stage_commits(spark,
