@@ -61,15 +61,20 @@ def _small_transcripts(spark, n):
     )
 
 
-def test_postings_shuffle_sized_to_session(spark, tmp_path):
+@pytest.mark.parametrize("shuffle_partitions", [8, 16])
+def test_postings_shuffle_sized_to_session(spark, tmp_path,
+                                          shuffle_partitions):
     """No stage of a build runs more than spark.sql.shuffle.partitions
-    tasks; the postings layout once ran term_buckets x salts tasks (256
-    at the defaults)."""
+    tasks, at whatever width the session sets; the postings layout once
+    ran term_buckets x salts tasks (256 at the defaults)."""
     from pulse_spark.index.persist import build_persisted_index
 
     tr = _small_transcripts(spark, 2000)
     sc = spark.sparkContext
-    group = "postings-shape"
+    group = f"postings-shape-{shuffle_partitions}"
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(shuffle_partitions))
     sc.setJobGroup(group, "postings layout task bound")
     try:
         build_persisted_index(
@@ -78,6 +83,7 @@ def test_postings_shuffle_sized_to_session(spark, tmp_path):
         )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set(key, prev)
     st = sc.statusTracker()
     tasks = [
         st.getStageInfo(s).numTasks
@@ -85,7 +91,7 @@ def test_postings_shuffle_sized_to_session(spark, tmp_path):
         for s in st.getJobInfo(j).stageIds
         if st.getStageInfo(s) is not None
     ]
-    bound = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    bound = shuffle_partitions
     assert tasks and max(tasks) <= bound, (bound, tasks)
     files = glob.glob(str(tmp_path / "idx" / "postings" / "*" / "*.parquet"))
     assert len(files) > 32  # every bucket is still split across tasks
