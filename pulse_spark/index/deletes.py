@@ -150,7 +150,8 @@ def vacuum_index(spark: SparkSession, in_dir: str, out_dir: str,
             dels.select("doc_id").distinct(), "doc_id", "left_anti"
         )
     wall = write_postings(_reid(postings), out_dir, settings)
-    postings = ckpt.record_stage(spark, out_dir, manifest, "postings", wall)
+    ckpt.record_stage(out_dir, manifest, "postings", wall)
+    postings = ckpt.read_stage(spark, out_dir, "postings")
     parted.unpersist()
     return finish_index(spark, out_dir, manifest, settings, docs, postings,
                         stats=stats,

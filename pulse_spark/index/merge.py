@@ -182,8 +182,9 @@ def merge_many(
     posts_u = posts_in[0]
     for df, off in zip(posts_in[1:], offsets[1:]):
         posts_u = posts_u.unionByName(_shift(df, off))
-    postings = ckpt.record_stage(spark, out_dir, manifest, "postings",
-                                 write_postings(posts_u, out_dir, settings))
+    ckpt.record_stage(out_dir, manifest, "postings",
+                      write_postings(posts_u, out_dir, settings))
+    postings = ckpt.read_stage(spark, out_dir, "postings")
 
     terms_u = ckpt.read_stage(spark, in_dirs[0], "terms")
     for d in in_dirs[1:]:

@@ -5,17 +5,16 @@ Layout (out_dir):
   docs/                         docs_columns(settings): (doc_no,
                                 conv_id, turn_idx [, text when
                                 settings.store_text], doc_len, doc_id)
-  postings/bucket=B/            (term, doc_id, tf, doc_len): keyed on the
-                                dense 8-byte doc_id, never the doc_no
-                                string (doc_no is joined back over the
-                                k·q winners, document.go:47-61); sorted
-                                by (term, doc_id) within files → parquet
-                                row-group min/max prune on term.  Written
-                                only by write_postings (build, stream
-                                compaction, vacuum and merge alike), with
-                                no shuffle: each input partition (in the
-                                build, one contiguous doc-id range) writes
-                                one file per bucket
+  postings/                     (term, doc_id, tf, doc_len, bucket):
+                                keyed on the dense 8-byte doc_id, never
+                                the doc_no string (doc_no is joined back
+                                over the k·q winners, document.go:47-61);
+                                one file per input partition of
+                                write_postings (build, stream compaction,
+                                vacuum and merge alike), sorted by
+                                (bucket, term, doc_id) → row-group
+                                min/max prune on bucket and term (an
+                                older postings/bucket=B/ tree still reads)
   terms/                        (term, df, max_tf)
   stats/                        single row (n_docs, adl); doc_ids are
                                 dense, so n_docs also sizes every
@@ -69,22 +68,24 @@ def write_postings(p: DataFrame, out_dir: str, settings: IndexingSettings) -> fl
     merge).
     Records nothing; returns wall seconds.
 
-    No shuffle: each input partition writes one file per bucket dir, as
-    each pulse SPIMI worker writes out its own block (spimi.go:33-228).
-    In the batch build these are assign_doc_ids' balanced doc-id range
+    No shuffle: each input partition writes one file, as each pulse
+    SPIMI worker writes out its own block (spimi.go:33-228).  In the
+    batch build these are assign_doc_ids' balanced doc-id range
     partitions, so a hot term is split across all of them; in the
     rewrites they are the feeding scan's or join's, so the file count
-    follows the input size.
+    follows the input size.  Rows sort by (bucket, term, doc_id) in
+    ROW_GROUP_BYTES row groups: a query's bucket and term literals prune
+    row groups with no directory per bucket (term_buckets times the
+    files).
     """
     p = B.with_term_bucket(p, settings.term_buckets)
     return ckpt.write_stage(
-        p, out_dir, "postings", partition_by=["bucket"], sort_within=["term", "doc_id"]
+        p, out_dir, "postings", sort_within=["bucket", "term", "doc_id"],
+        options={"parquet.block.size": str(ckpt.ROW_GROUP_BYTES)},
     )
 
 
-def write_stats(
-    spark: SparkSession, out_dir: str, manifest: dict, n_docs: int, adl: float
-) -> None:
+def write_stats(out_dir: str, manifest: dict, n_docs: int, adl: float) -> None:
     """Commit the 1-row stats stage DRIVER-side via pyarrow: a Spark job
     for one row is pure scheduling overhead."""
     import time
@@ -100,7 +101,7 @@ def write_stats(
                   "adl": pa.array([adl], pa.float64())}),
         os.path.join(stats_dir, "part-00000.parquet"),
     )
-    ckpt.record_stage(spark, out_dir, manifest, "stats", round(time.time() - t0, 3))
+    ckpt.record_stage(out_dir, manifest, "stats", round(time.time() - t0, 3))
 
 
 def docs_columns(settings: IndexingSettings) -> list[str]:
@@ -137,7 +138,8 @@ def commit_docs(
             f"refusing to index an empty input (no documents for {out_dir})"
         )
     manifest["input_fingerprint"] = {"rows": n_docs, "xor": int(m["fp_xor"])}
-    docs = ckpt.record_stage(docs.sparkSession, out_dir, manifest, "docs", wall)
+    ckpt.record_stage(out_dir, manifest, "docs", wall)
+    docs = ckpt.read_stage(docs.sparkSession, out_dir, "docs")
     return docs, (n_docs, float(m["adl"]))
 
 
@@ -178,19 +180,18 @@ def finish_index(
     resume whose docs stage an earlier run committed: one aggregate
     over docs).  segments: build the block segments over the committed
     postings at the committed stats."""
-    if ckpt.stage_done(manifest, "terms"):
-        terms = ckpt.read_stage(spark, out_dir, "terms")
-    else:
+    if not ckpt.stage_done(manifest, "terms"):
         if terms is None:
             terms = B.terms_df(postings)
-        terms = ckpt.commit_stage(out_dir, manifest, "terms", terms)
+        ckpt.commit_stage(out_dir, manifest, "terms", terms)
+    terms = ckpt.read_stage(spark, out_dir, "terms")
     if ckpt.stage_done(manifest, "stats"):
         stats = ckpt.read_committed(out_dir)[1:]
     else:
         if stats is None:
             row = B.stats_df(docs).first()
             stats = int(row["n_docs"]), float(row["adl"])
-        write_stats(spark, out_dir, manifest, *stats)
+        write_stats(out_dir, manifest, *stats)
     n_docs, adl = stats
     if segments and not ckpt.stage_done(manifest, "segments"):
         from pulse_spark.index import segments as seg
@@ -248,7 +249,7 @@ def build_persisted_index(
     else:
         docs = ckpt.read_stage(spark, out_dir, "docs")
 
-    # stage: postings, hash-bucketed by term, term-sorted within files
+    # stage: postings, sorted by (term bucket, term, doc_id) within files
     if do_postings:
         # doc_id rides through the tokenizer — no join back to docs and
         # no shuffle (write_postings).  The posting row
@@ -289,9 +290,8 @@ def build_persisted_index(
                     "would silently diverge from the committed docs "
                     "table; rebuild into a fresh out_dir"
                 )
-        postings = ckpt.record_stage(spark, out_dir, manifest, "postings", wall)
-    else:
-        postings = ckpt.read_stage(spark, out_dir, "postings")
+        ckpt.record_stage(out_dir, manifest, "postings", wall)
+    postings = ckpt.read_stage(spark, out_dir, "postings")
     if cached is not None:
         cached.unpersist()
 

@@ -58,18 +58,6 @@ from pulse_spark.index.maxscore import (
     tombstone_mask,
 )
 
-# Parquet row-group size for the segments stage.  Row-group min/max
-# stats on `term` are the ONLY pruning unit a term-filtered reader gets
-# (parquet predicate pushdown decodes whole row groups, and the sidecar's
-# pyarrow scan does no page-level pruning) — with Spark's 128 MB default,
-# one cold hot-term lookup at a 9M-doc corpus decompressed hundreds of
-# MB of other terms' blocks (measured 1.48 s read for one term).  1 MB
-# groups make the pruning unit ~the size of one term's local run: same
-# lookup reads a few MB (measured ~10x faster cold).  Cost: more row
-# groups per file — a full-scan (merge/compact) pays a few % more footer
-# and boundary overhead, which the merge bench absorbs in noise.
-SEGMENT_ROW_GROUP_BYTES = 1 << 20
-
 SEGMENT_SCHEMA = T.StructType([
     T.StructField("doc_range", T.IntegerType()),
     T.StructField("term", T.StringType()),
@@ -214,7 +202,7 @@ def build_segments(
     settings: IndexingSettings,
     n_docs: int,
     adl: float,
-) -> DataFrame:
+) -> None:
     """postings must carry (term, doc_id, tf, doc_len); n_docs/adl are
     the committed stats stage's.  One shuffle, one doc_range per task
     (doc ids are dense, so doc_range < n_ranges); the stage commits
@@ -237,10 +225,10 @@ def build_segments(
             SEGMENT_SCHEMA,
         )
     )
-    return ckpt.commit_stage(
+    ckpt.commit_stage(
         out_dir, manifest, "segments", seg, partition_by=["doc_range"],
         sort_within=["term", "min_doc_id"],
-        options={"parquet.block.size": str(SEGMENT_ROW_GROUP_BYTES)},
+        options={"parquet.block.size": str(ckpt.ROW_GROUP_BYTES)},
         range_size=range_size, n_ranges=n_ranges,
     )
 

@@ -11,9 +11,9 @@ real per-partition pruning inside applyInPandas.
 Scale notes (the part that must survive 100 TB):
   - Query terms are collected driver-side (a query set is tiny by
     definition) and pushed into the postings scan as
-    `bucket IN (...) AND term IN (...)` literals → parquet partition
-    pruning on `bucket` + row-group min/max pruning on the term-sorted
-    files. Only matching posting lists are ever read — the same
+    `bucket IN (...) AND term IN (...)` literals → parquet row-group
+    min/max pruning on the (bucket, term)-sorted files. Only matching
+    posting lists are ever read — the same
     "pushdown by construction" the reference gets from its lexicon seek
     (search.go:89-117).
   - The per-occurrence query-term table is broadcast; the big side never
@@ -351,9 +351,9 @@ def prepare_query_scan(
     Returns (qt, postings); qt is None when the query set tokenizes to
     nothing (callers return their empty frame).  qt is the (query_id,
     pos, term) occurrence table; postings is index.postings pruned to
-    the query terms and their buckets (every committed postings stage is
-    bucketed), keyed on doc_id (the caller maps the k·q winners back to
-    doc_no with with_doc_no).
+    the query terms and their buckets (every committed postings stage
+    carries the bucket: a sort key or a bucket=B/ dir), keyed on doc_id
+    (the caller maps the k·q winners back to doc_no with with_doc_no).
     """
     spark = queries.sparkSession
     head = queries.limit(max_driver_queries + 1).collect()
@@ -411,7 +411,7 @@ def search_topk(
     its whole TSV in memory, query.go:19-51), so queries are tokenized
     DRIVER-side with the exact same Python pipeline the index-build UDF
     runs — this keeps the per-query Spark job count at 1 tiny job
-    (bucket hashes for partition pruning) + 1 scoring job, instead of a
+    (bucket hashes for row-group pruning) + 1 scoring job, instead of a
     pandas-UDF job + two collect jobs + the scoring job (~4x lower
     point-query latency).  Query sets larger than max_driver_queries fall
     back to the distributed tokenizer path.

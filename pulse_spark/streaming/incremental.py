@@ -114,17 +114,18 @@ def compact_stream_index(
     """Compact accumulated micro-batch deltas into a COMMITTED index —
     the terminal "merge" of the streaming SPIMI analogy, closing the
     loop: stream all day into deltas, compact once into the same
-    doc_id-keyed, bucketed/sorted layout a batch build commits (+
-    compressed block segments unless build_segments=False), then query
-    it with search_topk, serve it via serve.PointServer or absorb it into
-    the main corpus index with index.merge.merge_indexes — all without
-    ever re-tokenizing a turn (the deltas already hold posting rows; the
-    only per-token work happened in the micro-batches).
+    doc_id-keyed, (bucket, term, doc_id)-sorted layout a batch build
+    commits (+ compressed block segments unless build_segments=False),
+    then query it with search_topk, serve it via serve.PointServer or
+    absorb it into the main corpus index with index.merge.merge_indexes
+    — all without ever re-tokenizing a turn (the deltas already hold
+    posting rows; the only per-token work happened in the
+    micro-batches).
 
     Shuffle profile: doc_id assignment (range partition on the stable
     key), one doc_no->doc_id equi-join of the posting deltas (no
     broadcast assumption — AQE picks the strategy), whose partitions
-    write the bucket layout with no shuffle of their own, and (with
+    write one postings file each with no shuffle of their own, and (with
     segments) the segments range shuffle.
     Token-linear Python: none.
     """
@@ -168,9 +169,9 @@ def compact_stream_index(
         postings_delta.join(docs.select("doc_no", "doc_id"), "doc_no")
         .select("term", "doc_id", "doc_len", "tf")
     )
-    postings = ckpt.record_stage(
-        spark, out_dir, manifest, "postings", write_postings(p, out_dir, settings)
-    )
+    ckpt.record_stage(out_dir, manifest, "postings",
+                      write_postings(p, out_dir, settings))
+    postings = ckpt.read_stage(spark, out_dir, "postings")
     cached.unpersist()
     return finish_index(spark, out_dir, manifest, settings, docs, postings,
                         stats=stats, segments=build_segments)

@@ -33,3 +33,23 @@ def oracle_docs(transcripts_path):
     t = pq.read_table(transcripts_path).to_pylist()
     t.sort(key=lambda r: (r["conv_id"], r["turn_idx"]))
     return [(f"{r['conv_id']}:{r['turn_idx']}", r["text"]) for r in t]
+
+
+@pytest.fixture(scope="session")
+def bucket_dir_copy(spark):
+    """copy(index, dest) -> dest: a copy of a committed index whose
+    postings sit under postings/bucket=B/ directories, one per term
+    bucket — the layout of indexes written before the term bucket became
+    the lead of the postings files' sort key."""
+    import os
+    import shutil
+
+    def copy(index, dest: str) -> str:
+        shutil.copytree(index.out_dir, dest)
+        tmp = dest + ".postings"
+        index.postings.write.partitionBy("bucket").parquet(tmp)
+        shutil.rmtree(os.path.join(dest, "postings"))
+        os.rename(tmp, os.path.join(dest, "postings"))
+        return dest
+
+    return copy

@@ -66,7 +66,9 @@ def test_postings_shuffle_sized_to_session(spark, tmp_path,
                                           shuffle_partitions):
     """No stage of a build runs more than spark.sql.shuffle.partitions
     tasks, at whatever width the session sets; the postings layout once
-    ran term_buckets x salts tasks (256 at the defaults)."""
+    ran term_buckets x salts tasks (256 at the defaults).  Each task of
+    the postings write (one per doc-id range partition) writes exactly
+    one file."""
     from pulse_spark.index.persist import build_persisted_index
 
     tr = _small_transcripts(spark, 2000)
@@ -93,8 +95,8 @@ def test_postings_shuffle_sized_to_session(spark, tmp_path,
     ]
     bound = shuffle_partitions
     assert tasks and max(tasks) <= bound, (bound, tasks)
-    files = glob.glob(str(tmp_path / "idx" / "postings" / "*" / "*.parquet"))
-    assert len(files) > 32  # every bucket is still split across tasks
+    files = glob.glob(str(tmp_path / "idx" / "postings" / "*.parquet"))
+    assert sorted(map(_task_no, files)) == list(range(sc.defaultParallelism))
 
 
 def _task_no(path: str) -> int:
@@ -104,11 +106,11 @@ def _task_no(path: str) -> int:
 
 def test_build_writes_each_partition_without_layout_shuffle(spark, tmp_path):
     """The batch build writes postings from assign_doc_ids' range
-    partitions, with no shuffle in between: inside each bucket dir the
-    files' [min doc_id, max doc_id] intervals are disjoint (a shuffle by
-    doc_id hash interleaves them).  The segments encode runs one
-    doc_range per task: the doc_range dirs' files carry n_ranges
-    distinct task numbers, one per range."""
+    partitions, with no shuffle in between: the files' [min doc_id, max
+    doc_id] intervals are disjoint (a shuffle by doc_id hash interleaves
+    them), and each file is sorted by (bucket, term, doc_id).  The
+    segments encode runs one doc_range per task: the doc_range dirs'
+    files carry n_ranges distinct task numbers, one per range."""
     import json
 
     from pulse_spark.index.persist import build_persisted_index
@@ -117,15 +119,14 @@ def test_build_writes_each_partition_without_layout_shuffle(spark, tmp_path):
     build_persisted_index(spark, _small_transcripts(spark, 2000), out,
                           IndexingSettings(term_buckets=4, store_text=False),
                           build_segments=True)
-    for bucket in glob.glob(os.path.join(out, "postings", "bucket=*")):
-        spans = sorted(
-            (min(ids), max(ids))
-            for ids in (pq.read_table(f, columns=["doc_id"])["doc_id"]
-                        .to_pylist()
-                        for f in glob.glob(os.path.join(bucket, "*.parquet")))
-        )
-        assert len(spans) > 1, bucket
-        assert all(a[1] < b[0] for a, b in zip(spans, spans[1:])), spans
+    files = glob.glob(os.path.join(out, "postings", "*.parquet"))
+    assert _assert_sorted(files, ["bucket", "term", "doc_id"]) >= 2
+    spans = sorted(
+        (min(ids), max(ids))
+        for ids in (pq.read_table(f, columns=["doc_id"])["doc_id"].to_pylist()
+                    for f in files)
+    )
+    assert all(a[1] < b[0] for a, b in zip(spans, spans[1:])), spans
 
     with open(os.path.join(out, "manifest.json")) as f:
         n_ranges = json.load(f)["stages"]["segments"]["n_ranges"]
@@ -139,8 +140,7 @@ def test_build_writes_each_partition_without_layout_shuffle(spark, tmp_path):
     assert len(set().union(*tasks.values())) == n_ranges, tasks
 
 
-def _assert_sorted(root: str, cols: list[str]) -> int:
-    files = glob.glob(os.path.join(root, "*", "*.parquet"))
+def _assert_sorted(files: list[str], cols: list[str]) -> int:
     for f in files:
         t = pq.read_table(f, columns=cols)
         keys = list(zip(*(t[c].to_pylist() for c in cols)))
@@ -149,11 +149,11 @@ def _assert_sorted(root: str, cols: list[str]) -> int:
 
 
 def test_postings_files_term_sorted_on_every_write_path(spark, tmp_path):
-    """Batch build, stream compaction, vacuum and merge write postings
-    files sorted by (term, id) — the order row-group min/max pruning on
-    term relies on — and segments files sorted by (term, min_doc_id); a
-    merge lays its segments on the grid a batch build of its corpus
-    gets."""
+    """Batch build, stream compaction, vacuum and merge write one
+    postings file per write task, sorted by (bucket, term, id) — the
+    order row-group min/max pruning on bucket and term relies on — and
+    segments files sorted by (term, min_doc_id); a merge lays its
+    segments on the grid a batch build of its corpus gets."""
     import json
 
     from pulse_spark.fixtures import gen_transcripts
@@ -197,10 +197,12 @@ def test_postings_files_term_sorted_on_every_write_path(spark, tmp_path):
     vacuumed = vacuum_index(spark, batch.out_dir, str(tmp_path / "vac"))
 
     for idx in (batch, compacted, vacuumed, merged):
-        assert _assert_sorted(os.path.join(idx.out_dir, "postings"),
-                              ["term", "doc_id"]) > 4
-        assert _assert_sorted(os.path.join(idx.out_dir, "segments"),
-                              ["term", "min_doc_id"])
+        files = glob.glob(os.path.join(idx.out_dir, "postings", "*.parquet"))
+        assert _assert_sorted(files, ["bucket", "term", "doc_id"]) >= 2
+        assert len(set(map(_task_no, files))) == len(files), files
+        assert _assert_sorted(
+            glob.glob(os.path.join(idx.out_dir, "segments", "*", "*.parquet")),
+            ["term", "min_doc_id"])
 
     def range_size(idx):
         with open(os.path.join(idx.out_dir, "manifest.json")) as f:

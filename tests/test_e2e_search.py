@@ -300,6 +300,67 @@ def test_doc_no_keyed_postings_are_refused(spark, transcripts_path, settings,
         load_index(spark, out)
 
 
+def test_bucket_dir_postings_still_read(spark, transcripts_path, settings,
+                                       tmp_path, bucket_dir_copy):
+    """An index whose postings sit under postings/bucket=B/ directories
+    opens and ranks as the flat-layout index it was copied from; merges
+    with a flat-layout index (unionByName meets bucket as a partition
+    column and as a data column); resumes a build that adds segments;
+    and vacuums — each giving what the same step gives on the flat
+    copy."""
+    import glob
+    import os
+
+    from pyspark.sql import functions as F
+
+    from pulse_spark.index.deletes import delete_docs, vacuum_index
+    from pulse_spark.index.merge import merge_indexes
+
+    tr = spark.read.parquet(transcripts_path)
+    halves = [tr.where(F.pmod(F.xxhash64("conv_id"), F.lit(2)) == i)
+              for i in range(2)]
+    a, b = (build_persisted_index(spark, h, str(tmp_path / n), settings)
+            for h, n in zip(halves, "ab"))
+    old_dir = bucket_dir_copy(a, str(tmp_path / "a_old"))
+    assert glob.glob(os.path.join(old_dir, "postings", "bucket=*", "*.parquet"))
+    qdf = spark.createDataFrame(gen_queries(), "query_id long, text string")
+
+    def topk(idx):
+        return sorted(
+            (r["query_id"], r["rank"], r["doc_no"], round(r["score"], 9))
+            for r in search_topk(idx, qdf, k=10).collect()
+        )
+
+    def same_rows(x, y):
+        y = y.select(*x.columns)
+        return x.exceptAll(y).isEmpty() and y.exceptAll(x).isEmpty()
+
+    old = load_index(spark, old_dir)
+    assert topk(old) == topk(a)
+
+    m_old, m_new = (merge_indexes(spark, d, b.out_dir, str(tmp_path / n))
+                    for d, n in ((old_dir, "m_old"), (a.out_dir, "m_new")))
+    assert same_rows(m_old.postings, m_new.postings)
+    assert topk(m_old) == topk(m_new)
+
+    seg = [
+        spark.read.parquet(os.path.join(
+            build_persisted_index(spark, halves[0], d, settings,
+                                  build_segments=True).out_dir, "segments"))
+        for d in (old_dir, a.out_dir)
+    ]
+    assert same_rows(*seg)
+
+    victims = [r["doc_no"] for r in a.docs.orderBy("doc_id").limit(5).collect()]
+    for d in (old_dir, a.out_dir):
+        assert delete_docs(spark, d, victims) == 5
+    v_old, v_new = (vacuum_index(spark, d, str(tmp_path / n))
+                    for d, n in ((old_dir, "v_old"), (a.out_dir, "v_new")))
+    assert v_old.has_segments and v_new.has_segments
+    assert same_rows(v_old.postings, v_new.postings)
+    assert topk(v_old) == topk(v_new)
+
+
 def test_pagination_is_continuation_of_page_one(spark, spark_index):
     """bounded_topk(offset=k): page 2 carries absolute ranks [k, 2k),
     is disjoint from page 1, and page1+page2 == one k=2k run."""

@@ -1,6 +1,6 @@
 """Physical-plan shape guards — the scale properties that correctness
-tests can't see: predicate pushdown into the postings scan, partition
-pruning on the bucket layout, broadcast of the small side, and the
+tests can't see: predicate pushdown of the query's terms and term
+buckets into the postings scan, broadcast of the small side, and the
 two-phase (partial) top-k.  A regression here is invisible at sf0.001
 and fatal at 100 TB."""
 
@@ -32,27 +32,52 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_search_plan_pushdown_and_pruning(spark, plan_index):
+def _scan_filters(plan: str, key: str) -> list[str]:
+    """The `key: [...]` filter lists (PartitionFilters, PushedFilters)
+    of every postings FileScan (the scan that outputs tf) in plan, as
+    one string per scan."""
+    out = []
+    for ln in plan.splitlines():
+        if "FileScan" not in ln or ",tf#" not in ln.split("]")[0]:
+            continue
+        rest, depth = ln.split(f"{key}: [", 1)[1], 1
+        for i, ch in enumerate(rest):
+            depth += {"[": 1, "]": -1}.get(ch, 0)
+            if not depth:
+                out.append(rest[:i])
+                break
+    return out
+
+
+def test_search_plan_pushdown_and_pruning(spark, plan_index, tmp_path,
+                                          bucket_dir_copy):
+    """The query terms and their hash buckets reach the postings scan:
+    pushed row-group filters on the flat (bucket, term, doc_id)-sorted
+    files, and a partition filter on an index whose postings sit under
+    bucket=B/ directories."""
+    from pulse_spark.index.persist import load_index
+
     q = spark.createDataFrame(
         [(1, "spark join merge")], "query_id long, text string"
     )
     plan = _plan(search_topk(plan_index, q, k=5))
-    # term literals reach the postings scan (row-group min/max pruning on
-    # the term-sorted files — the lexicon-seek analog)
-    assert "IN (join,merg,spark)" in plan or "In(term" in plan, plan
-    # bucket partition pruning: only the query terms' hash buckets are read
-    scan_lines = [
-        ln for ln in plan.splitlines()
-        if "FileScan" in ln and "/postings" in ln
-    ]
-    assert scan_lines and any(
-        "PartitionFilters: [" in ln and "bucket" in ln.split("PartitionFilters:")[1]
-        for ln in scan_lines
-    ), scan_lines
+    pushed = _scan_filters(plan, "PushedFilters")
+    assert pushed and all(
+        "In(bucket, [" in f and "In(term, [join,merg,spark])" in f
+        for f in pushed
+    ), plan
+    assert _scan_filters(plan, "PartitionFilters") == [""] * len(pushed)
     # the tiny sides (query terms, result map-back) broadcast — the big
     # postings table must never be the shuffled side of a join
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+    old = load_index(spark, bucket_dir_copy(plan_index, str(tmp_path / "old")))
+    plan = _plan(search_topk(old, q, k=5))
+    parts = _scan_filters(plan, "PartitionFilters")
+    assert parts and all("bucket" in f for f in parts), plan
+    assert all("In(term, [join,merg,spark])" in f
+               for f in _scan_filters(plan, "PushedFilters")), plan
 
 
 def test_search_plan_partial_topk(spark, plan_index):
@@ -267,7 +292,7 @@ def test_salted_layout_splits_hot_term(spark, tmp_path):
     per_file = [
         pc.sum(pc.equal(pq.read_table(f, columns=["term"])["term"],
                         hot_term["term"])).as_py() or 0
-        for f in glob.glob(f"{out}/postings/bucket=*/*.parquet")
+        for f in glob.glob(f"{out}/postings/*.parquet")
     ]
     assert sum(per_file) == n
     assert max(per_file) * 2.5 <= n, per_file

@@ -1,5 +1,5 @@
 """Pure-Python XXH64 must match Spark's F.xxhash64 bit-for-bit — it
-drives driver-side partition pruning (query path takes zero Spark jobs
+drives driver-side bucket pruning (query path takes zero Spark jobs
 for bucket selection)."""
 
 from __future__ import annotations
