@@ -176,7 +176,7 @@ def _build_throughput(cpus: int, src: str, tmp: str) -> dict:
     """Index-build throughput (turns/sec) at one parallelism level, in a
     fresh JVM, over the pre-generated shared input.
 
-    The job's LOGICAL config (term_buckets, shuffle partitions) is
+    The job's LOGICAL config (settings, shuffle partitions) is
     IDENTICAL at both levels — comparing N vs 4N executors means changing
     only the resource count, never the plan.  store_text=False is the
     at-scale configuration (the index stores doc metadata; the source
@@ -191,7 +191,7 @@ def _build_throughput(cpus: int, src: str, tmp: str) -> dict:
     from pulse_spark.text.normalize import PreprocessSettings
     from pulse_spark.text.udfs import make_tokenizer_udf
 
-    settings = IndexingSettings(term_buckets=32, store_text=False)
+    settings = IndexingSettings(store_text=False)
     spark = get_spark(app_name=f"pulse_scaling_{cpus}",
                       master=f"local[{cpus}]", shuffle_partitions=64)
     transcripts = spark.read.parquet(src)
@@ -332,7 +332,7 @@ def run_latency() -> dict:
     tmp = tempfile.mkdtemp(prefix="bench_latency_")
     tr = synth_transcripts_spark(spark, 25000)  # ~112k turns
     build_persisted_index(spark, tr, os.path.join(tmp, "idx"),
-                          IndexingSettings(term_buckets=32))
+                          IndexingSettings())
     from pulse_spark.index.persist import load_index
 
     idx = load_index(spark, os.path.join(tmp, "idx"))  # serving path: cached terms
@@ -395,7 +395,7 @@ def run_latency_sidecar(k: int = 10) -> dict:
         tr = synth_transcripts_spark(spark, n_convs)
         idx_dir = os.path.join(tmp, "idx")
         build_persisted_index(spark, tr, idx_dir,
-                              IndexingSettings(term_buckets=32),
+                              IndexingSettings(),
                               build_segments=True)
         spark.stop()
     with open(os.path.join(idx_dir, "manifest.json")) as f:
@@ -478,7 +478,7 @@ def run_latency_sharded(k: int = 10, n_shards: int = 4) -> dict:
         tr = synth_transcripts_spark(spark, n_convs)
         idx_dir = os.path.join(tmp, "idx")
         build_persisted_index(spark, tr, idx_dir,
-                              IndexingSettings(term_buckets=32),
+                              IndexingSettings(),
                               build_segments=True)
         spark.stop()
     with open(os.path.join(idx_dir, "manifest.json")) as f:
@@ -546,8 +546,7 @@ def run_index_size() -> dict:
         d = os.path.join(tmp, "c" if compress else "raw")
         build_persisted_index(
             spark, tr, d,
-            IndexingSettings(term_buckets=32, store_text=False,
-                             compression=compress),
+            IndexingSettings(store_text=False, compression=compress),
             build_segments=True,
         )
         # payload-only bytes (what compression acts on), via parquet
@@ -631,7 +630,7 @@ def run_qps(threads_levels=(1, 4, 8, 16), secs: float = 6.0) -> dict:
     tr = synth_transcripts_spark(spark, 25000)  # ~112k turns
     idx_dir = os.path.join(tmp, "idx")
     build_persisted_index(spark, tr, idx_dir,
-                          IndexingSettings(term_buckets=32),
+                          IndexingSettings(),
                           build_segments=True)
     spark.stop()
 

@@ -46,7 +46,6 @@ def _settings_from_args(args) -> IndexingSettings:
         stopwords_removal=not args.no_stopwords,
         stemming=not args.no_stemming,
         compression=not args.no_compression,
-        term_buckets=args.term_buckets,
     )
 
 
@@ -377,8 +376,6 @@ def main(argv=None) -> int:
     b.add_argument("--no-compression", action="store_true")
     b.add_argument("--segments", action="store_true",
                    help="also build compressed block segments")
-    b.add_argument("--term-buckets", type=int, default=32,
-                   help="term hash buckets that lead the postings sort key")
     b.set_defaults(fn=cmd_build)
 
     s = sub.add_parser("search", help="top-k search")

@@ -18,7 +18,6 @@ class IndexingSettings:
     stopwords_removal: bool = True
     stemming: bool = True
     compression: bool = True          # delta+varint postings / unary tfs in segments
-    term_buckets: int = 32            # term hash buckets: the postings files' lead sort key
     block_size: int = 128             # max postings per compressed block
     store_text: bool = True           # keep the trimmed text in docs/ (the
                                       # per-turn text-equality surface).  At

@@ -155,7 +155,7 @@ def fingerprints(docs: DataFrame, id_col: str = "doc_id",
     Spark's JVM-codegen 64-bit xxhash in place of md5: no 32-char hex
     string materialized per shingle, one BIGINT per shingle instead.
     DuckDB has no xxhash64, so this variant is pinned against the repo's
-    pure-python twin (compression/xxhash64.py, bit-identical to
+    pure-python twin (tests/xxhash64.py, bit-identical to
     F.xxhash64 by hypothesis test) instead of the SQL oracle.  Columns:
     (doc_id, text_fp:long, min_shingle_fp:long)."""
     norm = F.regexp_replace(F.lower(trimmed(F.col("text"))), r"\s+", " ")

@@ -440,7 +440,7 @@ def _segments_index(spark, sf_dir):
         _SHARED[key] = build_persisted_index(
             spark, transcripts, out,
             IndexingSettings(stopwords_removal=True, stemming=False,
-                             compression=True, term_buckets=8),
+                             compression=True),
             build_segments=True,
         )
     return _SHARED[key]

@@ -139,10 +139,3 @@ def assign_doc_ids(
         .drop("_pid", "_local", "_off")
     )
     return out, parted  # caller unpersists `parted` after materializing out
-
-
-def with_term_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
-    """Stable hash bucket of the term — the lead sort key of the postings
-    files; query-side computes the same bucket for its terms and prunes
-    the scan's row groups (partitions, on a bucket=B/ postings tree)."""
-    return df.withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))

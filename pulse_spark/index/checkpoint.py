@@ -46,6 +46,10 @@ MANIFEST = "manifest.json"
 # % more footer overhead on full scans.
 ROW_GROUP_BYTES = 1 << 20
 
+# The postings stage's columns, in order: what write_postings commits and
+# what read_stage returns of any postings stage.
+POSTINGS_COLUMNS = ("term", "doc_id", "tf", "doc_len")
+
 
 def _manifest_path(out_dir: str) -> str:
     return os.path.join(out_dir, MANIFEST)
@@ -203,14 +207,18 @@ def _footer_row_counts(path: str) -> dict[str, int]:
 
 def read_stage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
     df = spark.read.parquet(os.path.join(out_dir, stage))
-    if stage == "postings" and "doc_id" not in df.columns:
+    if stage != "postings":
+        return df
+    if "doc_id" not in df.columns:
         # every reader (search, merge, vacuum, resume) joins postings on
         # the dense doc_id; an older doc_no-keyed index must not be read
         raise ValueError(
             f"{out_dir}: postings have no doc_id column (an index built "
             "with doc_no-keyed postings); rebuild the index"
         )
-    return df
+    # an older index also carries a term bucket, as a data column or as
+    # bucket=B/ directories; no reader sees it
+    return df.select(*POSTINGS_COLUMNS)
 
 
 def check_settings(manifest: dict, settings: IndexingSettings) -> None:

@@ -149,7 +149,7 @@ def vacuum_index(spark: SparkSession, in_dir: str, out_dir: str,
         postings = postings.join(
             dels.select("doc_id").distinct(), "doc_id", "left_anti"
         )
-    wall = write_postings(_reid(postings), out_dir, settings)
+    wall = write_postings(_reid(postings), out_dir)
     ckpt.record_stage(out_dir, manifest, "postings", wall)
     postings = ckpt.read_stage(spark, out_dir, "postings")
     parted.unpersist()

@@ -183,7 +183,7 @@ def merge_many(
     for df, off in zip(posts_in[1:], offsets[1:]):
         posts_u = posts_u.unionByName(_shift(df, off))
     ckpt.record_stage(out_dir, manifest, "postings",
-                      write_postings(posts_u, out_dir, settings))
+                      write_postings(posts_u, out_dir))
     postings = ckpt.read_stage(spark, out_dir, "postings")
 
     terms_u = ckpt.read_stage(spark, in_dirs[0], "terms")

@@ -5,16 +5,16 @@ Layout (out_dir):
   docs/                         docs_columns(settings): (doc_no,
                                 conv_id, turn_idx [, text when
                                 settings.store_text], doc_len, doc_id)
-  postings/                     (term, doc_id, tf, doc_len, bucket):
+  postings/                     (term, doc_id, tf, doc_len):
                                 keyed on the dense 8-byte doc_id, never
                                 the doc_no string (doc_no is joined back
                                 over the k·q winners, document.go:47-61);
                                 one file per input partition of
                                 write_postings (build, stream compaction,
                                 vacuum and merge alike), sorted by
-                                (bucket, term, doc_id) → row-group
-                                min/max prune on bucket and term (an
-                                older postings/bucket=B/ tree still reads)
+                                (term, doc_id) → row-group min/max prune
+                                on term (an older index's term bucket,
+                                a column or bucket=B/ dirs, is not read)
   terms/                        (term, df, max_tf)
   stats/                        single row (n_docs, adl); doc_ids are
                                 dense, so n_docs also sizes every
@@ -62,10 +62,9 @@ def _fingerprint_metrics():
     )
 
 
-def write_postings(p: DataFrame, out_dir: str, settings: IndexingSettings) -> float:
-    """Write the postings stage layout from (term, doc_id, tf, doc_len)
-    rows — the one writer of it (batch build, stream compaction, vacuum,
-    merge).
+def write_postings(p: DataFrame, out_dir: str) -> float:
+    """Write the postings stage (ckpt.POSTINGS_COLUMNS) — the one writer
+    of it (batch build, stream compaction, vacuum, merge).
     Records nothing; returns wall seconds.
 
     No shuffle: each input partition writes one file, as each pulse
@@ -73,14 +72,14 @@ def write_postings(p: DataFrame, out_dir: str, settings: IndexingSettings) -> fl
     batch build these are assign_doc_ids' balanced doc-id range
     partitions, so a hot term is split across all of them; in the
     rewrites they are the feeding scan's or join's, so the file count
-    follows the input size.  Rows sort by (bucket, term, doc_id) in
-    ROW_GROUP_BYTES row groups: a query's bucket and term literals prune
-    row groups with no directory per bucket (term_buckets times the
-    files).
+    follows the input size.  Rows sort by (term, doc_id) in
+    ROW_GROUP_BYTES row groups, as the segments stage's do: a query's
+    term literals prune row groups, as pulse seeks its sorted lexicon
+    (search.go:89-117).
     """
-    p = B.with_term_bucket(p, settings.term_buckets)
     return ckpt.write_stage(
-        p, out_dir, "postings", sort_within=["bucket", "term", "doc_id"],
+        p.select(*ckpt.POSTINGS_COLUMNS), out_dir, "postings",
+        sort_within=["term", "doc_id"],
         options={"parquet.block.size": str(ckpt.ROW_GROUP_BYTES)},
     )
 
@@ -249,7 +248,7 @@ def build_persisted_index(
     else:
         docs = ckpt.read_stage(spark, out_dir, "docs")
 
-    # stage: postings, sorted by (term bucket, term, doc_id) within files
+    # stage: postings, sorted by (term, doc_id) within files
     if do_postings:
         # doc_id rides through the tokenizer — no join back to docs and
         # no shuffle (write_postings).  The posting row
@@ -275,7 +274,7 @@ def build_persisted_index(
         # write first, verify the fingerprint, THEN record: on mismatch
         # the stage is never marked committed (the partial files are
         # overwritten by the next attempt)
-        wall = write_postings(p, out_dir, settings)
+        wall = write_postings(p, out_dir)
         if fp_obs is not None:
             m = fp_obs.get
             got = {

@@ -86,7 +86,7 @@ def explain_search(index, queries: DataFrame, k: int = 10,
                    metric: str = "BM25",
                    max_driver_queries: int = 10_000) -> DataFrame:
     """Index-level explain: the shared prepare_query_scan front half
-    (driver-side tokenize with distributed fallback, bucket/term scan
+    (driver-side tokenize with distributed fallback, term scan
     pruning — identical to search_topk), then the per-term breakdown
     instead of the bare ranked list, mapped back to doc_no.
 

@@ -8,7 +8,7 @@ this is a term-pruned semi-join followed by a low-cardinality count —
 exactly the shape that scales:
 
   - only the query terms' posting lists are ever read (the same
-    bucket/term pushdown search_topk uses when given a pruned postings
+    term pushdown search_topk uses when given a pruned postings
     scan), never the full postings table;
   - the matched (query_id, doc) set is deduplicated with a partial
     aggregate before touching metadata;

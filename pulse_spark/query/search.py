@@ -10,12 +10,11 @@ real per-partition pruning inside applyInPandas.
 
 Scale notes (the part that must survive 100 TB):
   - Query terms are collected driver-side (a query set is tiny by
-    definition) and pushed into the postings scan as
-    `bucket IN (...) AND term IN (...)` literals → parquet row-group
-    min/max pruning on the (bucket, term)-sorted files. Only matching
-    posting lists are ever read — the same
-    "pushdown by construction" the reference gets from its lexicon seek
-    (search.go:89-117).
+    definition) and pushed into the postings scan as a `term IN (...)`
+    literal → parquet row-group min/max pruning on the (term,
+    doc_id)-sorted files. Only matching posting lists are ever read —
+    the same "pushdown by construction" the reference gets from its
+    lexicon seek (search.go:89-117).
   - The per-occurrence query-term table is broadcast; the big side never
     shuffles before aggregation.
   - groupBy(query_id, doc_id) uses partial aggregation; the final top-k
@@ -41,7 +40,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pulse_spark.config import BM25_B, BM25_K1
-from pulse_spark.index.build import with_term_bucket
 from pulse_spark.index.persist import Index
 from pulse_spark.text.udfs import make_tokenizer_udf
 
@@ -346,14 +344,13 @@ def prepare_query_scan(
     """Shared front half of every index-level query path (search_topk,
     explain_search): driver-side tokenization with the index's persisted
     settings (distributed pandas-UDF fallback past max_driver_queries)
-    and bucket + term literal pruning of the postings scan.
+    and term literal pruning of the postings scan.
 
     Returns (qt, postings); qt is None when the query set tokenizes to
     nothing (callers return their empty frame).  qt is the (query_id,
     pos, term) occurrence table; postings is index.postings pruned to
-    the query terms and their buckets (every committed postings stage
-    carries the bucket: a sort key or a bucket=B/ dir), keyed on doc_id
-    (the caller maps the k·q winners back to doc_no with with_doc_no).
+    the query terms, keyed on doc_id (the caller maps the k·q winners
+    back to doc_no with with_doc_no).
     """
     spark = queries.sparkSession
     head = queries.limit(max_driver_queries + 1).collect()
@@ -378,15 +375,7 @@ def prepare_query_scan(
 
     if not q_terms:
         return None, None
-    # driver-side bucket hashes (pure-Python XXH64, bit-identical to
-    # F.xxhash64 — tests/test_xxhash.py): zero Spark jobs
-    from pulse_spark.compression.xxhash64 import term_bucket
-
-    buckets = sorted({
-        term_bucket(t, index.settings.term_buckets) for t in q_terms
-    })
-    postings = index.postings.where(F.col("bucket").isin(buckets))
-    return qt, postings.where(F.col("term").isin(q_terms))
+    return qt, index.postings.where(F.col("term").isin(q_terms))
 
 
 def search_topk(
@@ -410,8 +399,8 @@ def search_topk(
     Latency plan: a query set is small by contract (the reference loads
     its whole TSV in memory, query.go:19-51), so queries are tokenized
     DRIVER-side with the exact same Python pipeline the index-build UDF
-    runs — this keeps the per-query Spark job count at 1 tiny job
-    (bucket hashes for row-group pruning) + 1 scoring job, instead of a
+    runs — this keeps the per-query Spark job count at 1 scoring job
+    plus at most 1 tiny one (collecting the query set), instead of a
     pandas-UDF job + two collect jobs + the scoring job (~4x lower
     point-query latency).  Query sets larger than max_driver_queries fall
     back to the distributed tokenizer path.

@@ -21,7 +21,7 @@ Scale shape:
     the tiny probe set.
   - the surviving expansion set is bounded (probes x max_expansions),
     collected driver-side like search_topk's query terms, and pushed
-    into the postings scan as term/bucket literals — only the expanded
+    into the postings scan as term literals — only the expanded
     terms' posting lists are ever read.
 """
 
@@ -100,7 +100,6 @@ def _expanded_topk(
     metric: str,
     id_col: str,
     tie_round: int | None,
-    term_buckets: int | None,
 ) -> DataFrame:
     spark = postings.sparkSession
     rows = expanded.collect()  # bounded: probes x max_expansions
@@ -113,11 +112,6 @@ def _expanded_topk(
         spark, [(r["query_id"], r["pos"], r["term"]) for r in rows],
         "query_id long, pos int, term string")
     exp_terms = sorted({r["term"] for r in rows})
-    if "bucket" in postings.columns and term_buckets:
-        from pulse_spark.compression.xxhash64 import term_bucket
-
-        buckets = sorted({term_bucket(t, term_buckets) for t in exp_terms})
-        postings = postings.where(F.col("bucket").isin(buckets))
     postings = postings.where(F.col("term").isin(exp_terms))
     return topk_from_tables(
         postings, terms, occ, n_docs, adl, k=k, metric=metric,
@@ -136,7 +130,6 @@ def prefix_topk(
     max_expansions: int = 50,
     id_col: str = "doc_no",
     tie_round: int | None = None,
-    term_buckets: int | None = None,
 ) -> DataFrame:
     """Top-k over prefix probes (Lucene PrefixQuery, top-terms rewrite).
 
@@ -153,13 +146,12 @@ def prefix_topk(
             postings, terms,
             postings.sparkSession.createDataFrame(
                 [], "query_id long, pos int, term string"),
-            n_docs, adl, k, metric, id_col, tie_round, term_buckets)
+            n_docs, adl, k, metric, id_col, tie_round)
     expanded = _expand_probes(
         terms, probes, lambda t, p: t.startswith(p), max_expansions
     )
     return _expanded_topk(
-        postings, terms, expanded, n_docs, adl, k, metric, id_col,
-        tie_round, term_buckets,
+        postings, terms, expanded, n_docs, adl, k, metric, id_col, tie_round
     )
 
 
@@ -175,7 +167,6 @@ def fuzzy_topk(
     max_expansions: int = 50,
     id_col: str = "doc_no",
     tie_round: int | None = None,
-    term_buckets: int | None = None,
 ) -> DataFrame:
     """Top-k over typo-tolerant probes (Lucene FuzzyQuery): lexicon
     terms within `max_edits` Levenshtein distance of each probe.
@@ -191,15 +182,14 @@ def fuzzy_topk(
             postings, terms,
             postings.sparkSession.createDataFrame(
                 [], "query_id long, pos int, term string"),
-            n_docs, adl, k, metric, id_col, tie_round, term_buckets)
+            n_docs, adl, k, metric, id_col, tie_round)
     expanded = _expand_probes(
         terms, probes,
         lambda t, p: F.levenshtein(t, F.lit(p)) <= max_edits,
         max_expansions,
     )
     return _expanded_topk(
-        postings, terms, expanded, n_docs, adl, k, metric, id_col,
-        tie_round, term_buckets,
+        postings, terms, expanded, n_docs, adl, k, metric, id_col, tie_round
     )
 
 
@@ -214,7 +204,6 @@ def regexp_topk(
     max_expansions: int = 50,
     id_col: str = "doc_no",
     tie_round: int | None = None,
-    term_buckets: int | None = None,
 ) -> DataFrame:
     """Top-k over regexp probes (Lucene RegexpQuery, top-terms rewrite):
     lexicon terms whose ENTIRE text matches the pattern (Lucene anchors
@@ -235,15 +224,14 @@ def regexp_topk(
             postings, terms,
             postings.sparkSession.createDataFrame(
                 [], "query_id long, pos int, term string"),
-            n_docs, adl, k, metric, id_col, tie_round, term_buckets)
+            n_docs, adl, k, metric, id_col, tie_round)
     expanded = _expand_probes(
         terms, probes,
         lambda t, p: t.rlike(f"^(?:{p})$"),
         max_expansions,
     )
     return _expanded_topk(
-        postings, terms, expanded, n_docs, adl, k, metric, id_col,
-        tie_round, term_buckets,
+        postings, terms, expanded, n_docs, adl, k, metric, id_col, tie_round
     )
 
 

@@ -114,7 +114,7 @@ def compact_stream_index(
     """Compact accumulated micro-batch deltas into a COMMITTED index —
     the terminal "merge" of the streaming SPIMI analogy, closing the
     loop: stream all day into deltas, compact once into the same
-    doc_id-keyed, (bucket, term, doc_id)-sorted layout a batch build
+    doc_id-keyed, (term, doc_id)-sorted layout a batch build
     commits (+ compressed block segments unless build_segments=False),
     then query it with search_topk, serve it via serve.PointServer or
     absorb it into the main corpus index with index.merge.merge_indexes
@@ -165,12 +165,9 @@ def compact_stream_index(
 
     # deltas key postings by doc_no; map to the dense ids via ONE
     # equi-join against the committed docs stage (never re-tokenize)
-    p = (
-        postings_delta.join(docs.select("doc_no", "doc_id"), "doc_no")
-        .select("term", "doc_id", "doc_len", "tf")
-    )
+    p = postings_delta.join(docs.select("doc_no", "doc_id"), "doc_no")
     ckpt.record_stage(out_dir, manifest, "postings",
-                      write_postings(p, out_dir, settings))
+                      write_postings(p, out_dir))
     postings = ckpt.read_stage(spark, out_dir, "postings")
     cached.unpersist()
     return finish_index(spark, out_dir, manifest, settings, docs, postings,

@@ -36,18 +36,33 @@ def oracle_docs(transcripts_path):
 
 
 @pytest.fixture(scope="session")
-def bucket_dir_copy(spark):
-    """copy(index, dest) -> dest: a copy of a committed index whose
-    postings sit under postings/bucket=B/ directories, one per term
-    bucket — the layout of indexes written before the term bucket became
-    the lead of the postings files' sort key."""
+def bucket_layout_copy(spark):
+    """copy(index, dest, layout) -> dest: a copy of a committed index in
+    a postings layout older indexes were written in, where the postings
+    carry the term bucket pmod(xxhash64(term), 8) and the manifest
+    stores term_buckets=8.  layout="bucket_dirs": postings under
+    postings/bucket=B/ directories, one per bucket; "bucket_column":
+    one file sorted by (bucket, term, doc_id), bucket a data column."""
     import os
     import shutil
 
-    def copy(index, dest: str) -> str:
+    from pyspark.sql import functions as F
+
+    from pulse_spark.index import checkpoint as ckpt
+
+    def copy(index, dest: str, layout: str) -> str:
         shutil.copytree(index.out_dir, dest)
+        manifest = ckpt.load_manifest(dest)
+        manifest["settings"]["term_buckets"] = 8
+        ckpt.save_manifest(dest, manifest)
         tmp = dest + ".postings"
-        index.postings.write.partitionBy("bucket").parquet(tmp)
+        p = index.postings.withColumn(
+            "bucket", F.pmod(F.xxhash64("term"), F.lit(8)).cast("int"))
+        if layout == "bucket_dirs":
+            p.write.partitionBy("bucket").parquet(tmp)
+        else:
+            (p.coalesce(1).sortWithinPartitions("bucket", "term", "doc_id")
+             .write.parquet(tmp))
         shutil.rmtree(os.path.join(dest, "postings"))
         os.rename(tmp, os.path.join(dest, "postings"))
         return dest

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from pulse_spark.config import IndexingSettings
 from pulse_spark.index import build as B
+from pulse_spark.index.checkpoint import POSTINGS_COLUMNS
 from pulse_spark.index.segments import _encode_block, encode_partition
 
 
@@ -66,7 +67,7 @@ def test_postings_shuffle_sized_to_session(spark, tmp_path,
                                           shuffle_partitions):
     """No stage of a build runs more than spark.sql.shuffle.partitions
     tasks, at whatever width the session sets; the postings layout once
-    ran term_buckets x salts tasks (256 at the defaults).  Each task of
+    ran term buckets x salts tasks (256 at the defaults).  Each task of
     the postings write (one per doc-id range partition) writes exactly
     one file."""
     from pulse_spark.index.persist import build_persisted_index
@@ -81,7 +82,7 @@ def test_postings_shuffle_sized_to_session(spark, tmp_path,
     try:
         build_persisted_index(
             spark, tr, str(tmp_path / "idx"),
-            IndexingSettings(term_buckets=32, store_text=False),
+            IndexingSettings(store_text=False),
         )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -108,7 +109,7 @@ def test_build_writes_each_partition_without_layout_shuffle(spark, tmp_path):
     """The batch build writes postings from assign_doc_ids' range
     partitions, with no shuffle in between: the files' [min doc_id, max
     doc_id] intervals are disjoint (a shuffle by doc_id hash interleaves
-    them), and each file is sorted by (bucket, term, doc_id).  The
+    them), and each file is sorted by (term, doc_id).  The
     segments encode runs one doc_range per task: the doc_range dirs'
     files carry n_ranges distinct task numbers, one per range."""
     import json
@@ -117,10 +118,10 @@ def test_build_writes_each_partition_without_layout_shuffle(spark, tmp_path):
 
     out = str(tmp_path / "idx")
     build_persisted_index(spark, _small_transcripts(spark, 2000), out,
-                          IndexingSettings(term_buckets=4, store_text=False),
+                          IndexingSettings(store_text=False),
                           build_segments=True)
     files = glob.glob(os.path.join(out, "postings", "*.parquet"))
-    assert _assert_sorted(files, ["bucket", "term", "doc_id"]) >= 2
+    assert _assert_sorted(files, ["term", "doc_id"]) >= 2
     spans = sorted(
         (min(ids), max(ids))
         for ids in (pq.read_table(f, columns=["doc_id"])["doc_id"].to_pylist()
@@ -150,10 +151,11 @@ def _assert_sorted(files: list[str], cols: list[str]) -> int:
 
 def test_postings_files_term_sorted_on_every_write_path(spark, tmp_path):
     """Batch build, stream compaction, vacuum and merge write one
-    postings file per write task, sorted by (bucket, term, id) — the
-    order row-group min/max pruning on bucket and term relies on — and
-    segments files sorted by (term, min_doc_id); a merge lays its
-    segments on the grid a batch build of its corpus gets."""
+    postings file per write task with exactly POSTINGS_COLUMNS, sorted
+    by (term, doc_id) — the order row-group min/max pruning on term
+    relies on — and segments files sorted by (term, min_doc_id); a
+    merge lays its segments on the grid a batch build of its corpus
+    gets."""
     import json
 
     from pulse_spark.fixtures import gen_transcripts
@@ -163,7 +165,7 @@ def test_postings_files_term_sorted_on_every_write_path(spark, tmp_path):
     from pulse_spark.streaming.incremental import (compact_stream_index,
                                                    start_incremental_build)
 
-    settings = IndexingSettings(term_buckets=4, block_size=16)
+    settings = IndexingSettings(block_size=16)
     rows = gen_transcripts(n_convs=40, seed=11)
     src = tmp_path / "in"
     src.mkdir()
@@ -198,7 +200,9 @@ def test_postings_files_term_sorted_on_every_write_path(spark, tmp_path):
 
     for idx in (batch, compacted, vacuumed, merged):
         files = glob.glob(os.path.join(idx.out_dir, "postings", "*.parquet"))
-        assert _assert_sorted(files, ["bucket", "term", "doc_id"]) >= 2
+        assert _assert_sorted(files, ["term", "doc_id"]) >= 2
+        assert all(pq.read_schema(f).names == list(POSTINGS_COLUMNS)
+                   for f in files), files
         assert len(set(map(_task_no, files))) == len(files), files
         assert _assert_sorted(
             glob.glob(os.path.join(idx.out_dir, "segments", "*", "*.parquet")),

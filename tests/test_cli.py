@@ -10,10 +10,7 @@ def test_cli_build_and_search(spark, transcripts_path, tmp_path, capsys):
     from pulse_spark.cli import main
 
     out = str(tmp_path / "idx")
-    rc = main([
-        "build", "--input", transcripts_path, "--output", out,
-        "--term-buckets", "4",
-    ])
+    rc = main(["build", "--input", transcripts_path, "--output", out])
     assert rc == 0
     built = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert built["n_docs"] > 0
@@ -100,7 +97,7 @@ def test_stemming_improves_recall_through_eval_cli(spark, tmp_path, capsys):
     recalls = {}
     for stemmed in (True, False):
         out = str(tmp_path / f"idx_{stemmed}")
-        args = ["build", "--input", src, "--output", out, "--term-buckets", "4"]
+        args = ["build", "--input", src, "--output", out]
         if not stemmed:
             args.append("--no-stemming")
         assert cli.main(args) == 0
@@ -140,7 +137,7 @@ def test_cli_stats(spark, transcripts_path, tmp_path, capsys):
     tr = spark.read.parquet(transcripts_path)
     idx = build_persisted_index(
         spark, tr, str(tmp_path / "stx"),
-        IndexingSettings(term_buckets=4, block_size=32),
+        IndexingSettings(block_size=32),
         build_segments=True,
     )
     victim = idx.docs.select("doc_no").first()["doc_no"]
@@ -152,7 +149,7 @@ def test_cli_stats(spark, transcripts_path, tmp_path, capsys):
     assert out["n_docs"] == idx.n_docs
     assert out["n_terms"] > 0
     assert out["n_tombstoned"] == 1
-    assert out["settings"]["term_buckets"] == 4
+    assert out["settings"]["block_size"] == 32
     for stage in ("docs", "postings", "terms", "stats", "segments"):
         assert out["stages"][stage]["bytes"] > 0
         assert out["stages"][stage]["rows"] >= 1
@@ -162,8 +159,7 @@ def test_cli_explain_and_suggest(spark, transcripts_path, tmp_path, capsys):
     from pulse_spark.cli import main
 
     out = str(tmp_path / "idx_ex")
-    assert main(["build", "--input", transcripts_path, "--output", out,
-                 "--term-buckets", "4"]) == 0
+    assert main(["build", "--input", transcripts_path, "--output", out]) == 0
     capsys.readouterr()
 
     # explain: breakdown lines whose per-doc term_score sum == score,

@@ -557,12 +557,12 @@ def test_vector_bytes_cap_bounds_bucket_residency():
 def test_fingerprints_xxhash64_twin(spark):
     """fingerprints(method="xxhash64") — the no-hex-strings fast path —
     must equal a pure-python twin built on the repo's bit-exact xxhash64
-    (compression/xxhash64.py, itself hypothesis-pinned to F.xxhash64);
+    (tests/xxhash64.py, itself pinned to F.xxhash64 in test_xxhash.py);
     DuckDB has no xxhash64, so this is the variant's oracle."""
     import re
 
-    from pulse_spark.compression.xxhash64 import xxhash64_signed
     from pulse_spark.datapipe.textstats import fingerprints
+    from tests.xxhash64 import xxhash64_signed
 
     rows = [(1, "  SELECT spark\tJOIN  merge  "), (2, "abc"), (3, ""),
             (4, "five5"), (5, "the quick brown fox jumps")]

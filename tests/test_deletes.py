@@ -15,7 +15,7 @@ from pulse_spark.index.deletes import delete_docs, vacuum_index
 from pulse_spark.index.persist import build_persisted_index, load_index
 from pulse_spark.query.search import search_topk
 
-SETTINGS = IndexingSettings(term_buckets=4, block_size=32)
+SETTINGS = IndexingSettings(block_size=32)
 
 
 def _all_results(idx, spark, k=30, **kw):

@@ -19,7 +19,7 @@ from pulse_spark.query.search import search_topk
 
 @pytest.fixture(scope="session")
 def settings():
-    return IndexingSettings(stopwords_removal=True, stemming=True, term_buckets=8)
+    return IndexingSettings(stopwords_removal=True, stemming=True)
 
 
 @pytest.fixture(scope="session")
@@ -229,7 +229,7 @@ def test_resume_tolerates_manifest_from_older_settings_schema(
     with _p.raises(ValueError):  # REAL mismatches still refuse
         build_persisted_index(
             spark, transcripts, out,
-            _S(stopwords_removal=False, stemming=True, term_buckets=8),
+            _S(stopwords_removal=False, stemming=True),
         )
 
 
@@ -291,8 +291,8 @@ def test_doc_no_keyed_postings_are_refused(spark, transcripts_path, settings,
     old = str(tmp_path / "old_postings")
     (
         idx.postings.join(idx.docs.select("doc_id", "doc_no"), "doc_id")
-        .select("term", "doc_no", "tf", "doc_len", "bucket")
-        .write.partitionBy("bucket").parquet(old)
+        .select("term", "doc_no", "tf", "doc_len")
+        .write.parquet(old)
     )
     shutil.rmtree(os.path.join(out, "postings"))
     os.rename(old, os.path.join(out, "postings"))
@@ -300,19 +300,22 @@ def test_doc_no_keyed_postings_are_refused(spark, transcripts_path, settings,
         load_index(spark, out)
 
 
-def test_bucket_dir_postings_still_read(spark, transcripts_path, settings,
-                                       tmp_path, bucket_dir_copy):
-    """An index whose postings sit under postings/bucket=B/ directories
-    opens and ranks as the flat-layout index it was copied from; merges
-    with a flat-layout index (unionByName meets bucket as a partition
-    column and as a data column); resumes a build that adds segments;
-    and vacuums — each giving what the same step gives on the flat
-    copy."""
+@pytest.mark.parametrize("layout", ["bucket_dirs", "bucket_column"])
+def test_bucket_postings_still_read(spark, transcripts_path, settings,
+                                    tmp_path, bucket_layout_copy, layout):
+    """An index whose postings carry the term bucket (under
+    postings/bucket=B/ directories, or as a data column) opens and ranks
+    as the index it was copied from; merges with a current index
+    (unionByName never meets the bucket); resumes a build that adds
+    segments; and vacuums — each giving what the same step gives on the
+    current copy.  Merge and vacuum write exactly POSTINGS_COLUMNS."""
     import glob
     import os
 
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
+    from pulse_spark.index.checkpoint import POSTINGS_COLUMNS
     from pulse_spark.index.deletes import delete_docs, vacuum_index
     from pulse_spark.index.merge import merge_indexes
 
@@ -321,8 +324,13 @@ def test_bucket_dir_postings_still_read(spark, transcripts_path, settings,
               for i in range(2)]
     a, b = (build_persisted_index(spark, h, str(tmp_path / n), settings)
             for h, n in zip(halves, "ab"))
-    old_dir = bucket_dir_copy(a, str(tmp_path / "a_old"))
-    assert glob.glob(os.path.join(old_dir, "postings", "bucket=*", "*.parquet"))
+    old_dir = bucket_layout_copy(a, str(tmp_path / "a_old"), layout)
+    if layout == "bucket_dirs":
+        assert glob.glob(
+            os.path.join(old_dir, "postings", "bucket=*", "*.parquet"))
+    else:
+        (f,) = glob.glob(os.path.join(old_dir, "postings", "*.parquet"))
+        assert pq.read_schema(f).names == [*POSTINGS_COLUMNS, "bucket"]
     qdf = spark.createDataFrame(gen_queries(), "query_id long, text string")
 
     def topk(idx):
@@ -335,6 +343,15 @@ def test_bucket_dir_postings_still_read(spark, transcripts_path, settings,
         y = y.select(*x.columns)
         return x.exceptAll(y).isEmpty() and y.exceptAll(x).isEmpty()
 
+    def current_layout(idx):
+        files = glob.glob(os.path.join(idx.out_dir, "postings", "**",
+                                       "*.parquet"), recursive=True)
+        return files and all(
+            os.path.dirname(f) == os.path.join(idx.out_dir, "postings")
+            and pq.read_schema(f).names == list(POSTINGS_COLUMNS)
+            for f in files
+        )
+
     old = load_index(spark, old_dir)
     assert topk(old) == topk(a)
 
@@ -342,6 +359,7 @@ def test_bucket_dir_postings_still_read(spark, transcripts_path, settings,
                     for d, n in ((old_dir, "m_old"), (a.out_dir, "m_new")))
     assert same_rows(m_old.postings, m_new.postings)
     assert topk(m_old) == topk(m_new)
+    assert current_layout(m_old) and current_layout(m_new)
 
     seg = [
         spark.read.parquet(os.path.join(
@@ -359,6 +377,7 @@ def test_bucket_dir_postings_still_read(spark, transcripts_path, settings,
     assert v_old.has_segments and v_new.has_segments
     assert same_rows(v_old.postings, v_new.postings)
     assert topk(v_old) == topk(v_new)
+    assert current_layout(v_old) and current_layout(v_new)
 
 
 def test_pagination_is_continuation_of_page_one(spark, spark_index):

@@ -175,7 +175,7 @@ def test_search_topk_doc_filter_on_committed_index(spark, transcripts_path,
     transcripts = spark.read.parquet(transcripts_path)
     idx = build_persisted_index(
         spark, transcripts, out,
-        IndexingSettings(stopwords_removal=True, stemming=False, term_buckets=8),
+        IndexingSettings(stopwords_removal=True, stemming=False),
     )
     from pulse_spark.fixtures import gen_queries
 

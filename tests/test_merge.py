@@ -13,7 +13,7 @@ from pulse_spark.index.merge import merge_indexes
 from pulse_spark.index.persist import build_persisted_index
 from pulse_spark.query.search import search_topk
 
-SETTINGS = IndexingSettings(term_buckets=4, block_size=32)
+SETTINGS = IndexingSettings(block_size=32)
 
 
 @pytest.fixture(scope="module")
@@ -114,7 +114,7 @@ def test_merged_sidecar_rank_identical_to_full(halves):
 def test_merge_refuses_settings_mismatch(spark, transcripts_path, tmp_path):
     tr = spark.read.parquet(transcripts_path).limit(50)
     a = build_persisted_index(spark, tr, str(tmp_path / "sa"), SETTINGS)
-    other = IndexingSettings(term_buckets=4, block_size=32, stemming=False)
+    other = IndexingSettings(block_size=32, stemming=False)
     # disjoint doc_nos via a shifted conv_id so only settings differ
     tr2 = tr.withColumn("conv_id", F.concat(F.lit("x"), F.col("conv_id")))
     b = build_persisted_index(spark, tr2, str(tmp_path / "sb"), other)

@@ -1,7 +1,7 @@
 """Physical-plan shape guards — the scale properties that correctness
-tests can't see: predicate pushdown of the query's terms and term
-buckets into the postings scan, broadcast of the small side, and the
-two-phase (partial) top-k.  A regression here is invisible at sf0.001
+tests can't see: predicate pushdown of the query's terms into the
+postings scan, broadcast of the small side, and the two-phase
+(partial) top-k.  A regression here is invisible at sf0.001
 and fatal at 100 TB."""
 
 from __future__ import annotations
@@ -24,7 +24,7 @@ def plan_index(spark, tmp_path_factory):
         "text",
     )
     return build_persisted_index(
-        spark, tr, out, IndexingSettings(term_buckets=8)
+        spark, tr, out, IndexingSettings()
     )
 
 
@@ -50,20 +50,21 @@ def _scan_filters(plan: str, key: str) -> list[str]:
 
 
 def test_search_plan_pushdown_and_pruning(spark, plan_index, tmp_path,
-                                          bucket_dir_copy):
-    """The query terms and their hash buckets reach the postings scan:
-    pushed row-group filters on the flat (bucket, term, doc_id)-sorted
-    files, and a partition filter on an index whose postings sit under
-    bucket=B/ directories."""
+                                          bucket_layout_copy):
+    """The query terms reach the postings scan as a pushed row-group
+    filter on the (term, doc_id)-sorted files, with no bucket filter and
+    no partition filter; an index whose postings sit under bucket=B/
+    directories ranks the same, with the term filter still pushed."""
     from pulse_spark.index.persist import load_index
 
     q = spark.createDataFrame(
         [(1, "spark join merge")], "query_id long, text string"
     )
-    plan = _plan(search_topk(plan_index, q, k=5))
+    res = search_topk(plan_index, q, k=5)
+    plan = _plan(res)
     pushed = _scan_filters(plan, "PushedFilters")
     assert pushed and all(
-        "In(bucket, [" in f and "In(term, [join,merg,spark])" in f
+        "In(term, [join,merg,spark])" in f and "bucket" not in f
         for f in pushed
     ), plan
     assert _scan_filters(plan, "PartitionFilters") == [""] * len(pushed)
@@ -72,12 +73,14 @@ def test_search_plan_pushdown_and_pruning(spark, plan_index, tmp_path,
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
-    old = load_index(spark, bucket_dir_copy(plan_index, str(tmp_path / "old")))
-    plan = _plan(search_topk(old, q, k=5))
-    parts = _scan_filters(plan, "PartitionFilters")
-    assert parts and all("bucket" in f for f in parts), plan
-    assert all("In(term, [join,merg,spark])" in f
-               for f in _scan_filters(plan, "PushedFilters")), plan
+    old = load_index(spark, bucket_layout_copy(
+        plan_index, str(tmp_path / "old"), "bucket_dirs"))
+    old_res = search_topk(old, q, k=5)
+    assert sorted(old_res.collect()) == sorted(res.collect())
+    old_plan = _plan(old_res)
+    pushed = _scan_filters(old_plan, "PushedFilters")
+    assert pushed and all("In(term, [join,merg,spark])" in f
+                          for f in pushed), old_plan
 
 
 def test_search_plan_partial_topk(spark, plan_index):
@@ -285,7 +288,7 @@ def test_salted_layout_splits_hot_term(spark, tmp_path):
     )
     out = str(tmp_path / "skew")
     idx = build_persisted_index(
-        spark, tr, out, IndexingSettings(term_buckets=8, store_text=False)
+        spark, tr, out, IndexingSettings(store_text=False)
     )
     hot_term = idx.terms.orderBy(F.desc("df")).first()
     assert hot_term["df"] == n and hot_term["max_tf"] == 5

@@ -19,7 +19,7 @@ from pulse_spark.query.search import search_topk
 def seg_index(spark, transcripts_path, tmp_path_factory, request):
     out = str(tmp_path_factory.mktemp("segidx") / f"idx_{request.param}")
     settings = IndexingSettings(
-        stopwords_removal=True, stemming=True, term_buckets=4,
+        stopwords_removal=True, stemming=True,
         compression=request.param, block_size=32,
     )
     transcripts = spark.read.parquet(transcripts_path)

@@ -20,7 +20,7 @@ from pulse_spark.serve import PointServer, ServeResult
 def served_index(spark, transcripts_path, tmp_path_factory, request):
     out = str(tmp_path_factory.mktemp("serveidx") / f"idx_{request.param}")
     settings = IndexingSettings(
-        stopwords_removal=True, stemming=True, term_buckets=4,
+        stopwords_removal=True, stemming=True,
         compression=request.param, block_size=32,
     )
     transcripts = spark.read.parquet(transcripts_path)
@@ -125,8 +125,7 @@ def test_sidecar_universal_term_and_tiny_cache(spark, tmp_path):
     out = str(tmp_path / "uidx")
     idx = build_persisted_index(
         spark, tr, out,
-        IndexingSettings(stopwords_removal=False, stemming=False,
-                         term_buckets=4),
+        IndexingSettings(stopwords_removal=False, stemming=False),
         build_segments=True,
     )
     srv = PointServer(out, cache_terms=1)  # pathologically small cache

@@ -17,7 +17,7 @@ def test_close_with_stopped_worker_is_bounded(spark, transcripts_path, tmp_path)
     out = str(tmp_path / "idx")
     build_persisted_index(
         spark, spark.read.parquet(transcripts_path), out,
-        IndexingSettings(term_buckets=4, block_size=32), build_segments=True,
+        IndexingSettings(block_size=32), build_segments=True,
     )
     srv = ShardedServer(out, n_shards=2, parallel=True)
     procs = list(srv._procs)

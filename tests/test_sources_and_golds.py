@@ -96,7 +96,7 @@ def test_doc_metadata_fetch(spark, tsv_paths):
     import tempfile
 
     p0, p1, _ = tsv_paths
-    settings = IndexingSettings(stopwords_removal=True, stemming=False, term_buckets=2)
+    settings = IndexingSettings(stopwords_removal=True, stemming=False)
     raw = read_msmarco_tsv(spark, [p0, p1])
     idx = build_persisted_index(
         spark, msmarco_as_transcripts(raw), tempfile.mkdtemp() + "/i", settings

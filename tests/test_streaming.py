@@ -19,7 +19,7 @@ from pulse_spark.streaming.incremental import (
     start_incremental_build,
 )
 
-SETTINGS = IndexingSettings(stopwords_removal=True, stemming=True, term_buckets=4)
+SETTINGS = IndexingSettings(stopwords_removal=True, stemming=True)
 
 
 @pytest.fixture(scope="module")
@@ -434,8 +434,7 @@ def test_compact_settings_come_from_stream_record(spark, stream_dirs, tmp_path):
     from pulse_spark.streaming.incremental import compact_stream_index
 
     src, out, _rows = stream_dirs  # stream already ran in earlier test
-    other = IndexingSettings(stopwords_removal=True, stemming=False,
-                             term_buckets=4)
+    other = IndexingSettings(stopwords_removal=True, stemming=False)
     with pytest.raises(ValueError, match="differ from the stream"):
         compact_stream_index(spark, out, str(tmp_path / "x"), other)
 
@@ -448,7 +447,6 @@ def test_compact_settings_come_from_stream_record(spark, stream_dirs, tmp_path):
 
 def test_stream_restart_refuses_changed_settings(spark, stream_dirs, tmp_path):
     src, out, _rows = stream_dirs
-    changed = IndexingSettings(stopwords_removal=False, stemming=True,
-                               term_buckets=4)
+    changed = IndexingSettings(stopwords_removal=False, stemming=True)
     with pytest.raises(ValueError, match="mix incompatibly"):
         start_incremental_build(spark, src, out, changed)

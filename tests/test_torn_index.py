@@ -20,7 +20,7 @@ from pulse_spark.fixtures import gen_queries
 from pulse_spark.index.merge import merge_many
 from pulse_spark.index.persist import build_persisted_index
 
-SETTINGS = IndexingSettings(term_buckets=4, block_size=32)
+SETTINGS = IndexingSettings(block_size=32)
 
 
 def _garbage_tmp(out_dir: str) -> None:

@@ -2,9 +2,10 @@
 spec at github.com/Cyan4973/xxHash), parameterized by seed.
 
 Spark's ``F.xxhash64(col)`` hashes a string column's UTF-8 bytes with
-seed 42; this implementation reproduces it bit-for-bit (property-tested
-against the JVM in tests/test_xxhash.py), letting the query path compute
-partition-bucket hashes DRIVER-side — zero Spark jobs for scan pruning.
+seed 42; this implementation reproduces it bit-for-bit (pinned against
+the JVM in tests/test_xxhash.py).  It is the reference that
+textstats.fingerprints(method="xxhash64") is tested against
+(tests/test_datapipe.py), since DuckDB has no xxhash64.
 """
 
 from __future__ import annotations
@@ -82,9 +83,3 @@ def xxhash64_signed(s: str, seed: int = SPARK_SEED) -> int:
     """Signed 64-bit, matching Spark's LongType output of F.xxhash64."""
     h = xxhash64(s.encode("utf-8"), seed)
     return h - (1 << 64) if h >= (1 << 63) else h
-
-
-def term_bucket(term: str, n_buckets: int) -> int:
-    """pmod(xxhash64(term), n_buckets) — matches
-    pulse_spark.index.build.with_term_bucket bit-for-bit."""
-    return xxhash64_signed(term) % n_buckets
